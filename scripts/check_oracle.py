@@ -8,7 +8,7 @@ Reads each <outDir>/<name>/ parquet (written by graft.Verify), runs the
 matching oracle SQL from <outDir>/oracle_sql.json in DuckDB over the same
 sf tables, sorts columns by name, and compares values exactly.
 """
-import json, sys, math
+import json, os, sys, math
 import duckdb
 
 TABLES = ["region","nation","customer","supplier","part","orders",
@@ -28,10 +28,12 @@ def main(sf_dir, out_dir):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
-        # Subset Verify runs (graft.Verify <sf> <out> <prefix>...) dump
-        # only matching queries; absent dirs are not failures then.
-        import os
+        # A query with an oracle but no output failed (or never ran) in
+        # Verify. Subset runs go through check_subset.py, which trims
+        # oracle_sql.json to the dumped queries first.
         if not os.path.isdir(f"{out_dir}/{name}"):
+            print(f"FAIL {name}: no output dir {out_dir}/{name}")
+            n_fail += 1
             continue
         try:
             got = con.execute(

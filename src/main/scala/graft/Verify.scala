@@ -16,12 +16,14 @@ object Verify {
     // defensive tune() call.
     val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed += name
         }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -40,5 +42,12 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // every other query's output and the oracle file are written; a
+    // failed query still fails the run, loudly and by name
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -30,35 +30,22 @@ object Checkpoints {
     * divisions over a kernel histogram — q310) can exhaust the DRIVER
     * heap inside `localCheckpoint`'s constraint rewrite before a
     * single task runs. `constraints` is consulted (and cached) under
-    * the flag at checkpoint time, so the returned relation carries an
-    * EMPTY constraint set; the flag restores immediately — plans over
-    * other relations are untouched. The trade (no inferred IsNotNull
+    * the flag at checkpoint time, so the checkpointed relation carries
+    * an EMPTY constraint set, and keeps it once re-bound to the
+    * caller's session. The flag lives on a cloned session
+    * (`Scoped.withConf`): the shared session never reads it, so plans
+    * over other relations — including ones built by chains running
+    * beside this cut — are untouched. The trade (no inferred IsNotNull
     * pushdown downstream of this cut) is irrelevant for the
     * wide-feature training relations this exists for.
-    *
-    * The set/restore is DEPTH-COUNTED under a lock (the
-    * EventStreams.runToMemory pattern): concurrent driver chains
-    * (GateOps.par / Par.run2) that both reach a cutNoConstraints must
-    * not race the session-global flag — a naive prev/restore pair could
-    * capture the other chain's temporary value and leak `false` into
-    * the session.
     */
-  private val ncDepth = new java.util.concurrent.atomic.AtomicInteger(0)
-  private var ncPrev: String = _
-  private val ncLock = new Object
-
   def cutNoConstraints(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.constraintPropagation.enabled"
-    ncLock.synchronized {
-      if (ncDepth.getAndIncrement() == 0) {
-        ncPrev = conf.get(key, "true")
-        conf.set(key, "false")
-      }
+    val spark = df.sparkSession
+    val cutDf = graft.Scoped.withConf(spark,
+        "spark.sql.constraintPropagation.enabled" -> "false") { scoped =>
+      cut(graft.Scoped.rebind(df, scoped))
     }
-    try cut(df) finally ncLock.synchronized {
-      if (ncDepth.decrementAndGet() == 0) conf.set(key, ncPrev)
-    }
+    graft.Scoped.rebind(cutDf, spark)
   }
 
   // Round-18 negative result (no helper kept): an asynchronous cut —

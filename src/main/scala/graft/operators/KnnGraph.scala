@@ -413,7 +413,7 @@ object KnnGraph {
       return
     }
     // disjoint substores — the two victim-partition rewrites overlap
-    Par.run2(
+    Par.all(
       () => Similarity.purgeIvfLayout(spark, s"$dir/vectors", ids),
       () => ChangeData.purgeRows(spark, s"$dir/graph", "part",
         col("vec_id").isInCollection(ids) ||
@@ -433,7 +433,7 @@ object KnnGraph {
       .localCheckpoint(true) // two substores + two passes share one eval
     // vectors/ is disjoint from graph/ — it overlaps the graph's two
     // SEQUENTIAL passes (those rewrite the same files; order matters)
-    Par.run2(
+    Par.all(
       () => Similarity.purgeIvfLayout(spark, s"$dir/vectors", keys),
       () => {
         ChangeData.purgeRowsKeys(spark, s"$dir/graph", "part",

@@ -206,7 +206,7 @@ object LshLayout {
     }
     val victim = col("id").isInCollection(ids)
     // disjoint substores — the two victim-partition rewrites overlap
-    Par.run2(
+    Par.all(
       () => ChangeData.purgeRows(spark, s"$dir/keys", "bucket", victim),
       () => ChangeData.purgeRows(spark, s"$dir/sets", "part", victim))
   }
@@ -220,7 +220,7 @@ object LshLayout {
     val keys = ids.select(col(ids.columns.head).cast("long").as("id"))
       .localCheckpoint(true) // both substore purges share one eval
     // disjoint substores — the two victim-partition rewrites overlap
-    Par.run2(
+    Par.all(
       () => ChangeData.purgeRowsKeys(spark, s"$dir/keys", "bucket", keys,
         Seq("id")),
       () => ChangeData.purgeRowsKeys(spark, s"$dir/sets", "part", keys,

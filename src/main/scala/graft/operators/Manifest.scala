@@ -1477,7 +1477,7 @@ object Manifest {
         val feeds: Map[Int, DataFrame] = {
           val vs = todo.filter(_ > 1).toSeq
           if (vs.length <= 1) Map.empty
-          else vs.zip(Par.collectAll(vs.map(v => () =>
+          else vs.zip(Par.all(vs.map(v => () =>
             changesBetween(spark, srcDir, v - 1, v)
               .localCheckpoint(true)))).toMap
         }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.GraftSession
+import graft.operators.Par
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end retail pipeline orchestrator (reference lifecycle §3:
@@ -36,32 +37,18 @@ object RetailPipeline {
     // independent blocking jobs, so they run CONCURRENTLY — the small
     // datasets' profiling overlaps the big one's instead of queueing
     // behind it (Spark schedules jobs from multiple driver threads
-    // fine; each dataset touches only its own views/caches).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.Try
-    // Await EVERY future before surfacing a failure — Future.sequence
-    // fails fast while sibling jobs keep running, and propagating then
-    // would let the caller stop the session under in-flight writes
-    // (partial output + "SparkContext was shut down" noise masking the
-    // real error).
-    def awaitAll[T](fs: Seq[Future[T]]): Seq[T] = {
-      val settled = fs.map(f => Try(Await.result(f, Duration.Inf)))
-      settled.collectFirst { case scala.util.Failure(e) => throw e }
-      settled.map(_.get)
-    }
+    // fine; each dataset touches only its own views/caches). `Par.all`
+    // joins every chain before a failure surfaces, so the caller never
+    // stops the session under an in-flight write.
     val gated: Seq[(String, DataFrame, QualityReport)] =
-      awaitAll(cfg.datasets.flatMap { case (key, spec) =>
-        fileFor(key).map { path =>
-          Future {
-            val raw = Ingest.readCsv(spark, Seq(path), cfg.ingest.multiLine)
-            val (typed, report) = Quality.run(raw, key, spec, cfg.quality)
-            log.info(s"QC $key: rows=${report.rowCount} " +
-              s"dup=${report.duplicateCount} schemaOk=${report.schemaOk}")
-            report.issues.foreach(i => log.warn(s"QC $key: $i"))
-            (key, typed, report)
-          }
+      Par.all(cfg.datasets.flatMap { case (key, spec) =>
+        fileFor(key).map { path => () =>
+          val raw = Ingest.readCsv(spark, Seq(path), cfg.ingest.multiLine)
+          val (typed, report) = Quality.run(raw, key, spec, cfg.quality)
+          log.info(s"QC $key: rows=${report.rowCount} " +
+            s"dup=${report.duplicateCount} schemaOk=${report.schemaOk}")
+          report.issues.foreach(i => log.warn(s"QC $key: $i"))
+          (key, typed, report)
         }
       })
     val byKey = gated.map { case (k, df, _) => k -> df }.toMap
@@ -99,7 +86,7 @@ object RetailPipeline {
           } finally if (!wasCached) df.unpersist(blocking = false)
         }
         val first = writeOne(head._1, head._2)
-        first +: awaitAll(tail.map { case (p, df) => Future(writeOne(p, df)) })
+        first +: Par.all(tail.map { case (p, df) => () => writeOne(p, df) })
       case _ => Seq.empty
     }
 

@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.Tables
-import graft.operators.ChangeData
+import graft.{Scoped, Tables}
+import graft.operators.{ChangeData, Par}
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture battery: snapshot diff, MERGE/upsert, and SCD
@@ -609,8 +609,8 @@ object ChangeDataQueries {
       val keys = Seq(1L, 2L, 3L, 5L, 8L)
       // the six point lookups are independent read-only probes of the
       // final layout — overlap their per-call bloom-position jobs
-      val allLookups = GateOps.par((keys :+ -99L).map(kv =>
-        () => Manifest.readPoint(s, tmp, "o_orderkey", kv)): _*)
+      val allLookups = Par.all((keys :+ -99L).map(kv =>
+        () => Manifest.readPoint(s, tmp, "o_orderkey", kv)))
       val lookups = allLookups.init
       val rows = lookups.zip(keys).map { case ((df, _, _), kv) =>
         df.filter(col("o_orderkey") === kv)
@@ -627,10 +627,11 @@ object ChangeDataQueries {
       // censuses are eager driver work inside readPoint, the row diff
       // defers to the final job (both reads pin their file lists here)
       val (dDf, dListed, dTotal) = lookups.head
-      s.conf.set("graft.manifest.driverCensusMaxFiles", "0")
       val (xDf, xListed, xTotal) =
-        try Manifest.readPoint(s, tmp, "o_orderkey", keys.head)
-        finally s.conf.unset("graft.manifest.driverCensusMaxFiles")
+        Scoped.withConf(s, "graft.manifest.driverCensusMaxFiles" -> "0") { d =>
+          val (df, listed, total) = Manifest.readPoint(d, tmp, "o_orderkey", keys.head)
+          (Scoped.rebind(df, s), listed, total)
+        }
       val pathProbe = s.range(1)
         .filter(lit(xListed != dListed || xTotal != dTotal))
         .select(lit(1).as("one"))
@@ -1089,7 +1090,8 @@ object ChangeDataQueries {
     // (DOOR_DIVERGED), OPTIMIZE folds the DV (DV_NOT_FOLDED), vacuum
     // reclaims superseded manifests without moving the snapshot
     // (VACUUM_BROKE).
-    "q392_sql_census_gate" -> ((s, dir) => {
+    "q392_sql_census_gate" -> ((caller, dir) => Scoped.withConf(caller,
+        "graft.manifest.driverCensusMaxFiles" -> "0") { s =>
       import graft.operators.Manifest
       import graft.plans.GraftSql
       val tmp = java.nio.file.Files
@@ -1098,62 +1100,59 @@ object ChangeDataQueries {
         .filter(col("user_id") <= 20)
         .select(to_date(col("ts")).as("dt"), col("event_id"),
           col("user_id"), col("value"))
-      s.conf.set("graft.manifest.driverCensusMaxFiles", "0")
-      try {
-        Manifest.create(ev, tmp, "dt")
-        // MERGE source: user 3's rows update (value x10), user 5's
-        // re-land as Feb inserts (shifted ids), user 7's rows delete
-        ev.filter(col("user_id") === 3)
-          .withColumn("value", col("value") * 10)
-          .withColumn("__del", lit(false))
-          .unionByName(ev.filter(col("user_id") === 5)
-            .withColumn("event_id", col("event_id") + 10000000L)
-            .withColumn("dt", lit("2024-02-01").cast("date"))
-            .withColumn("__del", lit(false)))
-          .unionByName(ev.filter(col("user_id") === 7)
-            .withColumn("__del", lit(true)))
-          .createOrReplaceTempView("q392_src")
-        GraftSql.run(s, s"GRAFT MERGE INTO '$tmp' PARTITION BY dt " +
-          "USING q392_src ON event_id DELETE WHEN __del")
-        GraftSql.run(s, s"GRAFT DELETE FROM '$tmp' WHERE user_id = 9")
-        GraftSql.run(s, s"GRAFT OPTIMIZE '$tmp' PARTITION BY dt")
-        val conf = s.sparkContext.hadoopConfiguration
-        val dvNotFolded = Manifest.readHeader(tmp,
-          Manifest.latestVersion(tmp, conf), conf).dv.nonEmpty
-        // both SQL doors must answer identically (the injected parser
-        // is present on GraftSession-built sessions; a foreign session
-        // without it legitimately skips the cross-check)
-        val viaRun = GraftSql.run(s, s"GRAFT CHECKPOINT '$tmp'")
-          .head().getLong(0)
-        val doorDiverged = (try
-            Some(s.sql(s"GRAFT CHECKPOINT '$tmp'").head().getLong(0))
-          catch { case _: org.apache.spark.sql.catalyst.parser.ParseException =>
-            None }).exists(_ != viaRun)
-        val nBefore = Manifest.readWithDeletes(s, tmp).count()
-        val vac = GraftSql.run(s, s"GRAFT VACUUM '$tmp'").head()
-        // the post-vacuum row-count check reads final state — it rides
-        // the final job as a lazy probe, OR-ed (via union) with the
-        // driver-side receipt check so the sentinel fires once either way
-        val vacuumProbe = s.range(1).filter(lit(vac.getLong(1) <= 0L))
-          .select(lit(1).as("one"))
-          .unionAll(Manifest.readWithDeletes(s, tmp)
-            .agg(count(lit(1)).as("c")).filter(col("c") =!= nBefore)
-            .select(lit(1).as("one")))
-        val census = Manifest.readWithDeletes(s, tmp)
-          .drop("__file", "__pos")
-          .groupBy(col("dt").cast("string").as("dt"))
-          .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-        def viol(cond: Boolean, name: String) = s.range(1)
-          .filter(lit(cond)).select(lit(name).as("dt"), lit(-1L).as("n"),
-            lit(0.0).as("sum_value"))
-        census
-          .unionByName(viol(dvNotFolded, "DV_NOT_FOLDED"))
-          .unionByName(viol(doorDiverged, "DOOR_DIVERGED"))
-          .unionByName(GateOps.sentinel(vacuumProbe,
-            lit("VACUUM_BROKE").as("dt"), lit(-1L).as("n"),
-            lit(0.0).as("sum_value")))
-          .orderBy("dt")
-      } finally s.conf.unset("graft.manifest.driverCensusMaxFiles")
+      Manifest.create(ev, tmp, "dt")
+      // MERGE source: user 3's rows update (value x10), user 5's
+      // re-land as Feb inserts (shifted ids), user 7's rows delete
+      ev.filter(col("user_id") === 3)
+        .withColumn("value", col("value") * 10)
+        .withColumn("__del", lit(false))
+        .unionByName(ev.filter(col("user_id") === 5)
+          .withColumn("event_id", col("event_id") + 10000000L)
+          .withColumn("dt", lit("2024-02-01").cast("date"))
+          .withColumn("__del", lit(false)))
+        .unionByName(ev.filter(col("user_id") === 7)
+          .withColumn("__del", lit(true)))
+        .createOrReplaceTempView("q392_src")
+      GraftSql.run(s, s"GRAFT MERGE INTO '$tmp' PARTITION BY dt " +
+        "USING q392_src ON event_id DELETE WHEN __del")
+      GraftSql.run(s, s"GRAFT DELETE FROM '$tmp' WHERE user_id = 9")
+      GraftSql.run(s, s"GRAFT OPTIMIZE '$tmp' PARTITION BY dt")
+      val conf = s.sparkContext.hadoopConfiguration
+      val dvNotFolded = Manifest.readHeader(tmp,
+        Manifest.latestVersion(tmp, conf), conf).dv.nonEmpty
+      // both SQL doors must answer identically (the injected parser
+      // is present on GraftSession-built sessions; a foreign session
+      // without it legitimately skips the cross-check)
+      val viaRun = GraftSql.run(s, s"GRAFT CHECKPOINT '$tmp'")
+        .head().getLong(0)
+      val doorDiverged = (try
+          Some(s.sql(s"GRAFT CHECKPOINT '$tmp'").head().getLong(0))
+        catch { case _: org.apache.spark.sql.catalyst.parser.ParseException =>
+          None }).exists(_ != viaRun)
+      val nBefore = Manifest.readWithDeletes(s, tmp).count()
+      val vac = GraftSql.run(s, s"GRAFT VACUUM '$tmp'").head()
+      // the post-vacuum row-count check reads final state — it rides
+      // the final job as a lazy probe, OR-ed (via union) with the
+      // driver-side receipt check so the sentinel fires once either way
+      val vacuumProbe = s.range(1).filter(lit(vac.getLong(1) <= 0L))
+        .select(lit(1).as("one"))
+        .unionAll(Manifest.readWithDeletes(s, tmp)
+          .agg(count(lit(1)).as("c")).filter(col("c") =!= nBefore)
+          .select(lit(1).as("one")))
+      val census = Manifest.readWithDeletes(s, tmp)
+        .drop("__file", "__pos")
+        .groupBy(col("dt").cast("string").as("dt"))
+        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
+      def viol(cond: Boolean, name: String) = s.range(1)
+        .filter(lit(cond)).select(lit(name).as("dt"), lit(-1L).as("n"),
+          lit(0.0).as("sum_value"))
+      Scoped.rebind(census
+        .unionByName(viol(dvNotFolded, "DV_NOT_FOLDED"))
+        .unionByName(viol(doorDiverged, "DOOR_DIVERGED"))
+        .unionByName(GateOps.sentinel(vacuumProbe,
+          lit("VACUUM_BROKE").as("dt"), lit(-1L).as("n"),
+          lit(0.0).as("sum_value")))
+        .orderBy("dt"), caller)
     }),
 
     // NO-MATCH DELETE-BATCH REPLAY PROTECTION — the round-15 advisory
@@ -1346,8 +1345,8 @@ object ChangeDataQueries {
       // the five point lookups are independent read-only probes of the
       // final layout — overlap their per-call bloom-position jobs and
       // manifest reads
-      val lookups = GateOps.par(keys.map(kv =>
-        () => Manifest.readPoint(s, tmp, "o_orderkey", kv)): _*)
+      val lookups = Par.all(keys.map(kv =>
+        () => Manifest.readPoint(s, tmp, "o_orderkey", kv)))
       val rows = lookups.zip(keys).map { case ((df, _, _), kv) =>
         df.filter(col("o_orderkey") === kv)
           .select("o_orderkey", "o_custkey", "o_orderstatus",
@@ -1469,9 +1468,9 @@ object ChangeDataQueries {
       // (census threshold 0) must land the BIT-IDENTICAL estimate
       val ndvPathDiverged = {
         val (d, _) = Manifest.approxDistinct(s, tmp)
-        s.conf.set("graft.manifest.driverCensusMaxFiles", "0")
-        try { val (x, _) = Manifest.approxDistinct(s, tmp); x != d }
-        finally s.conf.unset("graft.manifest.driverCensusMaxFiles")
+        val (x, _) = Scoped.withConf(s,
+          "graft.manifest.driverCensusMaxFiles" -> "0")(Manifest.approxDistinct(_, tmp))
+        x != d
       }
       val census = o.groupBy("o_orderstatus")
         .agg(countDistinct("o_custkey").as("n_distinct"))
@@ -1976,7 +1975,7 @@ object ChangeDataQueries {
       // checkpoint, and the restart's replay semantics are only defined
       // against a terminated predecessor.
       val replicaPinned = Manifest.read(s, dst)
-      val (replica, replayed) = GateOps.par2(
+      val (replica, replayed) = Par.all(
         () => replicaPinned.localCheckpoint(true),
         () => {
           // restart from the same checkpoint: nothing new -> no commit

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Par}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -244,7 +244,7 @@ object DedupQueries {
       // the layout chain (build -> probe) and the in-flight reference
       // read disjoint state — overlap them; both results materialize
       // once because each feeds two consumers below
-      val (kept, ref) = GateOps.par2(
+      val (kept, ref) = Par.all(
         () => {
           LshLayout.writeLshLayout(history, "doc_id", "text", tmp)
           LshLayout.dedupAgainstLayout(tmp, batch, "doc_id",
@@ -294,7 +294,7 @@ object DedupQueries {
         .createTempDirectory("graft_lsh_purge").toString
       // the layout build and the victim-id census are independent —
       // overlap them; the purge needs both
-      val (_, victimIds) = GateOps.par2(
+      val (_, victimIds) = Par.all(
         () => LshLayout.writeLshLayout(d, "doc_id", "text", tmp),
         () => d.filter(col("doc_id") % 7 === 0)
           .select(col("doc_id").cast("long"))

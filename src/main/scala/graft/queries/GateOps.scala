@@ -18,12 +18,15 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    final at assembly time: state no later lifecycle verb mutates,
   *    or an already-materialized (checkpointed) relation.
   *
-  *  - `par` overlaps INDEPENDENT action chains (layout builds, brute
-  *    force referees) from driver threads — the guide's §2.6 move:
-  *    Spark's FIFO scheduler back-fills executors freed by one chain's
-  *    stragglers with the next chain's tasks. Chains must not depend
-  *    on each other's side effects; session-conf flips do not belong
-  *    inside `par` (the conf is session-global, not thread-local).
+  *  - Independent action chains (layout builds, brute-force
+  *    referees) overlap through `graft.operators.Par.all` — the
+  *    guide's §2.6 move: Spark's FIFO scheduler back-fills executors
+  *    freed by one chain's stragglers with the next chain's tasks.
+  *    Chains must not depend on each other's side effects. A gate that
+  *    needs a different SQL conf (a census threshold, a demo-regime
+  *    plan pin) builds that work on `graft.Scoped.withConf`'s cloned
+  *    session — never by setting the shared session's conf, which
+  *    every overlapped chain would read.
   */
 private[queries] object GateOps {
 
@@ -34,44 +37,4 @@ private[queries] object GateOps {
     */
   def sentinel(probe: DataFrame, cols: Column*): DataFrame =
     probe.limit(1).select(cols: _*)
-
-  /** Run the thunks concurrently, return their results in order.
-    * PLAIN per-call daemon threads, not a shared pool (round 18, the
-    * Par.run2 rationale): a fixed pool deadlocks when a thunk itself
-    * calls par — the inner call waits for slots its ancestors hold.
-    * Gate chains are few (2-6 per call) and driver threads are cheap
-    * next to the Spark jobs they launch. Every thread is joined before
-    * returning, so failures cannot outlive the call: the first error in
-    * declaration order propagates (matching the sequential behavior it
-    * replaces) after all chains have quiesced — no job keeps running
-    * against a gate that already failed.
-    */
-  def par[A](thunks: (() => A)*): Seq[A] = {
-    val results = new Array[Any](thunks.length)
-    val errors = new Array[Throwable](thunks.length)
-    val threads = thunks.zipWithIndex.map { case (t, i) =>
-      val th = new Thread(() => {
-        try results(i) = t()
-        catch { case e: Throwable => errors(i) = e }
-      }, s"graft-gate-par-$i")
-      th.setDaemon(true)
-      th.start()
-      th
-    }
-    threads.foreach(_.join())
-    errors.find(_ != null).foreach(e => throw e)
-    results.toSeq.map(_.asInstanceOf[A])
-  }
-
-  /** Two-chain convenience with distinct result types. */
-  def par2[A, B](a: () => A, b: () => B): (A, B) = {
-    val r = par[Any](() => a(), () => b())
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
-  }
-
-  /** Three-chain convenience. */
-  def par3[A, B, C](a: () => A, b: () => B, c: () => C): (A, B, C) = {
-    val r = par[Any](() => a(), () => b(), () => c())
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
-  }
 }

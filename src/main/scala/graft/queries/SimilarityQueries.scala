@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.Similarity
+import graft.operators.{Similarity, Par}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -271,7 +271,7 @@ object SimilarityQueries {
       // the stale-layout chain and the brute-force referee are
       // independent — overlap them (guide §2.6); exact materializes
       // once because both recall measurements join against it
-      val (_, exact) = GateOps.par2(
+      val (_, exact) = Par.all(
         () => {
           Similarity.writeIvfLayout(e, "vec_id", "embedding", stale,
             nlist = 8, nassign = 1)
@@ -295,7 +295,7 @@ object SimilarityQueries {
             .as("r")).head().getDouble(0)
       }
       // the two recall probes read disjoint, finished layouts
-      val (rStale, rFresh) = GateOps.par2(
+      val (rStale, rFresh) = Par.all(
         () => recallOf(stale), () => recallOf(fresh))
       def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
         .select(lit(name).as("violation"),
@@ -420,7 +420,7 @@ object SimilarityQueries {
       val e = emb(s, dir)
       // the exact brute-force referee touches no layout state — it
       // overlaps the layout build + trajectory chain (guide §2.6)
-      val (exact, byHops) = GateOps.par2(
+      val (exact, byHops) = Par.all(
         () => Similarity.bruteForceTopKAgg(e, e, "vec_id", "embedding",
             k = 5)
           .select(col("query_id"), col("neighbor_id"))
@@ -482,7 +482,7 @@ object SimilarityQueries {
       // salt census, lineage cuts) — overlap that (guide §2.6); the
       // symmetric diff's duplicate subtrees dedupe via ReuseExchange
       // inside the one final job, so neither side checkpoints
-      val (fromLayout, scratch) = GateOps.par2(
+      val (fromLayout, scratch) = Par.all(
         () => KnnGraph.knnNeighborsFromLayout(layoutDir,
           e.select("vec_id"), "vec_id"),
         () => KnnGraph.rankGraph(KnnGraph.knnGraphPairs(e, "vec_id",
@@ -1210,7 +1210,7 @@ object SimilarityQueries {
       // the two layout build+purge chains touch disjoint directories and
       // the brute-force referee touches neither — three independent
       // chains, overlapped (88 serialized sub-second jobs otherwise)
-      val (_, _, exactAndN) = GateOps.par3(
+      val (_, _, exactAndN) = Par.all(
         () => {
           Similarity.writeIvfLayout(e, "vec_id", "embedding", s"$tmp/ivf",
             nlist, nassign = 3)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Par
 import org.apache.spark.sql.functions._
 
 /** Source-format round-trips beyond parquet/CSV: ORC and JSON lines.
@@ -50,9 +51,9 @@ object SourceQueries {
       val dimB = broadcast(Tables.load(s, dir, "customer")
         .select(col("c_custkey").as("o_custkey")).distinct())
       // the three expectation legs drain three INDEPENDENT streams over
-      // the same bounded source — overlap the drains (guide §2.6; the
-      // runToMemory conf juggling is depth-counted for exactly this)
-      val (rowLocalDrained, keyCensus, refDrain) = GateOps.par3(
+      // the same bounded source — overlap the drains (guide §2.6; each
+      // drain scopes its state-store width to its own cloned session)
+      val (rowLocalDrained, keyCensus, refDrain) = Par.all(
         () => drain(Expectations.rowLocalAggRow(o, checks)),
         () => drain(o.groupBy("o_orderkey")
           .agg(count(lit(1)).as("__c"))),

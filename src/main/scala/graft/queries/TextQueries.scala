@@ -1659,8 +1659,8 @@ object TextQueries {
     // concentration-bound slack, C=6 over the published σ: distinct —
     // nd/√(k−2) (Beyer et al.); intersection — the binomial
     // |K∩A∩B| ~ Bin(k, ρ) term union_ex/(2√k) plus the union-estimate
-    // term int_ex/√(k−2). Probed worst case on this data sits at
-    // 2.3-2.8× inside the band (tools/KmvProbe), and the estimates are
+    // term int_ex/√(k−2). The measured worst case on this data sits
+    // 2.3-2.8× inside the band, and the estimates are
     // hash-deterministic, so the gate is stable; the oracle is the
     // empty relation.
     "q157_kmv_overlap_gate" -> ((s, dir) => {

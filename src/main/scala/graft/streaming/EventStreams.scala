@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Scoped, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -25,39 +25,30 @@ object EventStreams {
     // the ts normalization applied inside Tables.readTableStream
     graft.Tables.readTableStream(spark, sfDir, "events")
 
-  // Concurrent drains (a gate overlapping independent streams) must not
-  // race the shuffle-partition set/restore below: a naive prev/restore
-  // pair can capture the OTHER drain's temporary value and leak it into
-  // the session. Depth-counted: the first drain in saves the value, the
-  // last one out restores it; the conf stays at the drain setting while
-  // any drain is active.
-  private val drainDepth = new java.util.concurrent.atomic.AtomicInteger(0)
-  private var drainPrev: String = _
-  private val drainLock = new Object
-
+  /** Drain the bounded streaming `df` into a memory sink and return the
+    * drained rows as a batch frame of `df`'s session.
+    *
+    * Stateful streaming ops allocate one state store per shuffle
+    * partition at query start; for this drain-a-bounded-input pattern 8
+    * is plenty and start-up cost scales with the store count. (A real
+    * deployment sizes this to key cardinality / cluster width instead.)
+    * The width is scoped to a cloned session, so work overlapped with
+    * the drain keeps planning at the session width, and so does the
+    * returned frame (re-bound to the caller's session). The sink's view
+    * lives and dies in the clone's catalog.
+    */
   private[graft] def runToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
     val spark = df.sparkSession
-    // Stateful streaming ops allocate one state store per shuffle
-    // partition at query start; for this drain-a-bounded-input pattern 8
-    // is plenty and start-up cost scales with the store count. (A real
-    // deployment sizes this to key cardinality / cluster width instead.)
-    drainLock.synchronized {
-      if (drainDepth.getAndIncrement() == 0) {
-        drainPrev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-      }
-    }
-    try {
+    val drained = Scoped.withConf(spark, "spark.sql.shuffle.partitions" -> "8") { scoped =>
       val name = s"graft_stream_${System.nanoTime()}" +
         s"_t${Thread.currentThread().getId}"
-      val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+      val q = Scoped.rebind(df, scoped).writeStream.outputMode(mode)
+        .format("memory").queryName(name).start()
       try q.processAllAvailable()
       finally q.stop()
-      spark.table(name)
-    } finally drainLock.synchronized {
-      if (drainDepth.decrementAndGet() == 0)
-        spark.conf.set("spark.sql.shuffle.partitions", drainPrev)
+      scoped.table(name)
     }
+    Scoped.rebind(drained, spark)
   }
 
   /** Tumbling 1-hour event-time window aggregation (complete mode —

@@ -394,8 +394,7 @@ class PlanSpec extends SparkSpec {
 
   test("q68 applies a runtime Bloom filter to the fact side before the shuffle") {
     val df = SparkEntry.queries("q68_bloom_join")(spark, sfDir)
-    // collect() executes the query's OWN pinned QueryExecution (a write
-    // or count would build a fresh one under production confs), so the
+    // The frame lives on q68's scoped demo-regime session, so the
     // Bloom-filtered plan actually RUNS here, and the result it
     // produces is compared against the plain-join answer.
     val viaBloom = df.collect().map(_.toString).toSeq
