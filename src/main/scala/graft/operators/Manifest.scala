@@ -2,8 +2,12 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** TRANSACTIONAL MANIFEST layout — the atomic-publish protocol the
   * dynamic-partition-overwrite lifecycles (q140 backfill, q177 purge,
@@ -57,8 +61,8 @@ object Manifest {
     * foreign (source-layout) files by ABSOLUTE path — the zero-copy
     * mechanism; everything else stays dir-relative.
     */
-  private def filePath(dir: String, e: Entry): String =
-    if (isAbsolute(e.file)) e.file else s"$dir/${e.file}"
+  private def filePath(dir: String, file: String): String =
+    if (isAbsolute(file)) file else s"$dir/$file"
 
   /** Absolute = rooted ("/...") OR scheme-qualified ("s3://...",
     * "hdfs://...") — a bare leading-slash test silently re-prefixes
@@ -66,8 +70,6 @@ object Manifest {
     */
   private def isAbsolute(p: String): Boolean =
     p.startsWith("/") || p.matches("^[A-Za-z][A-Za-z0-9+.\\-]*:/.*")
-
-  private val absolutePathRe = "^(/|[A-Za-z][A-Za-z0-9+.\\-]*:/).*"
 
   private def fs(dir: String, conf: Configuration) =
     new Path(dir).getFileSystem(conf)
@@ -236,25 +238,33 @@ object Manifest {
     } else !f.exists(target) && f.rename(tmp, target)
   }
 
-  // ---- Adaptive entry census: driver below the threshold, ------------
-  // ---- distributed (checkpoint / executor parse) above it ------------
+  // ---- The entry census: one regime switch ----------------------------
   //
-  // Every lifecycle op needs some census over the entry relation —
+  // Every lifecycle op asks some question of a version's entries —
   // "which partitions changed", "which files intersect this range",
-  // "carry every entry except these partitions forward". Below
-  // `graft.manifest.driverCensusMaxFiles` (default 100k) the driver-side
-  // regex parse wins outright: zero Spark jobs, microseconds at gate
-  // scale. Above it the driver becomes a single-threaded JSON parser
-  // holding the whole file census — the layer's 100 TB ceiling — so the
-  // same censuses are served from `entriesRelation` (the parquet
-  // checkpoint when fresh, else the distributed text parse): executors
-  // parse, the driver sees only the question's answer (hit files,
-  // affected partitions) and, for carry-forward commits, a one-line-at-
-  // a-time stream. The header's `n` field decides for free (headers from
-  // before the field count as large — conservative, never wrong).
+  // "carry every entry except these partitions forward". Each question
+  // is written ONCE, as Scala functions over `Entry` (a key or
+  // predicate `Entry => Option[K]`, a carry `Entry => Option[Entry]`, a
+  // merge `(A, A) => A`), and `census` decides where they run from the
+  // headers' `n` (headers from before the field count as large —
+  // conservative, never wrong). At or below
+  // `graft.manifest.driverCensusMaxFiles` (default 100k) they run over
+  // the driver's regex parse of the manifest: zero Spark jobs,
+  // microseconds at gate scale. Above it the driver would become a
+  // single-threaded JSON parser holding the whole file census — the
+  // layer's 100 TB ceiling — so the same functions run as typed Dataset
+  // ops over `entriesRelation` (the parquet checkpoint when fresh, else
+  // the distributed text parse): executors parse, the driver sees only
+  // the question's answer and, for carry-forward commits, a one-line-
+  // at-a-time stream. The small regime is deliberately NOT a DataFrame
+  // over a LocalRelation: at local[2] over 120 entries a filter folding
+  // to a LocalRelation costs ~25 ms (0.04 ms for the Seq), distinct /
+  // groupBy / anti-join launch 2 jobs each (83-116 ms), and a sorted,
+  // persisted carry 5 jobs (~790 ms) — against a ~0.6 s commit.
 
-  private def censusThreshold(spark: SparkSession): Long =
-    spark.conf.get("graft.manifest.driverCensusMaxFiles", "100000").toLong
+  private def driverCensus(spark: SparkSession, n: Long): Boolean =
+    n >= 0 && n <=
+      spark.conf.get("graft.manifest.driverCensusMaxFiles", "100000").toLong
 
   /** Per-pass cap on the index builds' todo list (the paths must reach
     * the driver as `spark.read.parquet` arguments): a maintenance pass
@@ -266,104 +276,175 @@ object Manifest {
   private def indexBatchMax(spark: SparkSession): Int =
     spark.conf.get("graft.manifest.indexBatchMaxFiles", "100000").toInt
 
-  private def driverCensus(spark: SparkSession, dir: String, version: Int,
-      conf: Configuration): Boolean = {
-    val n = readHeader(dir, version, conf).n
-    n >= 0 && n <= censusThreshold(spark)
+  private def enc[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
+
+  /** `f` over a distributed entry relation, as a typed relation. */
+  private def rows[K: TypeTag](ds: Dataset[Entry],
+      f: Entry => Option[K]): Dataset[K] =
+    ds.flatMap(e => f(e).toSeq)(enc[K])
+
+  /** A key set held where its census runs: a driver set below the
+    * threshold, an executor relation above it.
+    */
+  private type Keys = Either[Set[String], Dataset[String]]
+
+  /** How a distributed census projects the `bloom`/`kmv` payloads:
+    * absent from the map = NULL (the parquet read prunes the column),
+    * `isSet` = "" when present, `identity` = the bytes.
+    */
+  private type Payload = Map[String, Column => Column]
+  private val isSet: Column => Column = c => when(c.isNotNull, lit(""))
+  private val allPayloads: Payload = Map("bloom" -> identity, "kmv" -> identity)
+
+  /** The entries of one or more manifest versions ("legs") in the
+    * regime `census` picked: `local` (driver-parsed) below the
+    * threshold, else `dist` (distributed). Each primitive runs per-entry
+    * functions as collection ops on the driver or as typed Dataset ops
+    * in the executors, so every census over it is written once.
+    */
+  private final class Census(spark: SparkSession, local: Seq[Seq[Entry]],
+      dist: Seq[Dataset[Entry]], ns: Seq[Long]) {
+    val small: Boolean = dist.isEmpty
+
+    /** What `f` yields over leg `i` (in manifest order on the driver),
+      * at most `limit` values when `limit >= 0`.
+      */
+    def collect[K: TypeTag](i: Int, f: Entry => Option[K],
+        limit: Int = -1): Seq[K] =
+      if (small) {
+        val it = local(i).iterator.flatMap(f)
+        (if (limit >= 0) it.take(limit) else it).toVector
+      } else {
+        val r = rows(dist(i), f)
+        (if (limit >= 0) r.limit(limit) else r).collect().toSeq
+      }
+
+    /** What `f` yields over leg `i`, as a key set. */
+    def keys(i: Int, f: Entry => Option[String]): Keys =
+      if (small) Left(local(i).flatMap(f).toSet) else Right(rows(dist(i), f))
+
+    /** Distinct `out` of the entries of legs `at` whose `key` is (`anti`:
+      * is not) among `among` — driver set ops below the threshold, one
+      * executor semi/anti-join above it.
+      */
+    def join(key: Entry => String, among: Keys, anti: Boolean = false,
+        at: Seq[Int] = Seq(0))(out: Entry => String): Seq[String] =
+      if (small) {
+        val s = among.fold(identity, _.collect().toSet)
+        at.flatMap(local).filter(e => s(key(e)) != anti).map(out).distinct
+      } else {
+        val k = among.fold(s => spark.createDataset(s.toSeq)(Encoders.STRING),
+          identity).toDF("__k")
+        at.map(i => rows(dist(i), e => Some((key(e), out(e)))))
+          .reduce(_ union _)
+          .join(k, col("_1") === col("__k"),
+            if (anti) "left_anti" else "left_semi")
+          .select("_2").distinct().as(Encoders.STRING).collect().toSeq
+      }
+
+    /** `out` of leg `i`'s entries whose file the other leg of a
+      * two-version census lacks — the file-level diff.
+      */
+    def onlyIn(i: Int)(out: Entry => String): Seq[String] =
+      join(_.file, keys(1 - i, e => Some(e.file)), anti = true,
+        at = Seq(i))(out)
+
+    /** `f`'s keyed values over leg `i`, merged per key with `merge`. */
+    def reduce[K: TypeTag, A: TypeTag](i: Int, f: Entry => Option[(K, A)])(
+        merge: (A, A) => A): Map[K, A] =
+      if (small) local(i).flatMap(f).groupMapReduce(_._1)(_._2)(merge)
+      else rows(dist(i), f).groupByKey(_._1)(enc[K])
+        .mapValues(_._2)(enc[A]).reduceGroups(merge).collect().toMap
+
+    /** Files per partition of the first leg. */
+    def perPartition(): Map[String, Long] =
+      reduce(0, e => Some(e.p -> 1L))(_ + _)
+
+    /** Leg `i`'s entry count: the header's `n`; counted only for
+      * manifests from before the field.
+      */
+    def size(i: Int): Long = if (ns(i) >= 0) ns(i) else dist(i).count()
+
+    /** Every leg's entries through its carry: a driver list, or one
+      * relation for the streaming writer.
+      */
+    def carry(fs: Seq[Entry => Option[Entry]]): Either[Seq[Entry], DataFrame] =
+      if (small) Left(local.zip(fs).flatMap { case (es, f) => es.flatMap(f) })
+      else Right(dist.zip(fs).map { case (ds, f) => rows(ds, f).toDF() }
+        .reduce(_ unionAll _))
   }
 
-  /** `__p=<v>/<file>` of an entry's file column — the within-commit
-    * unique key, as a Column (the distributed twin of `tailKey`).
+  /** The regime switch: reads each leg's header `n` once; when every leg
+    * is at or below `graft.manifest.driverCensusMaxFiles` the legs are
+    * the driver's manifest parse, else `entriesRelation` with the
+    * payloads projected by `payload` — a typed read must not ship
+    * payload bytes its census never looks at.
     */
-  private def tailCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val segs = split(c, "/")
-    concat_ws("/", element_at(segs, -2), element_at(segs, -1))
+  private def census(spark: SparkSession, legs: Seq[(String, Int)],
+      payload: Payload = Map.empty): Census = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ns = legs.map { case (d, v) => readHeader(d, v, conf).n }
+    if (ns.forall(driverCensus(spark, _)))
+      new Census(spark, legs.map { case (d, v) => readManifest(d, v, conf) },
+        Nil, ns)
+    else new Census(spark, Nil, legs.map { case (d, v) =>
+      Seq("bloom", "kmv").foldLeft(entriesRelation(spark, d, v))((r, c) =>
+        r.withColumn(c, payload.getOrElse(c,
+          (_: Column) => lit(null).cast("string"))(col(c))))
+        .as(enc[Entry])
+    }, ns)
   }
 
   private val entryCols = Seq("p", "file", "lo", "hi", "lo2", "hi2",
     "bloom", "kmv")
 
-  private def rowToEntry(r: org.apache.spark.sql.Row): Entry =
-    Entry(r.getString(0), r.getString(1),
-      if (r.isNullAt(2)) None else Some(r.getLong(2)),
-      if (r.isNullAt(3)) None else Some(r.getLong(3)),
-      bloom = if (r.isNullAt(6)) None else Some(r.getString(6)),
-      lo2 = if (r.isNullAt(4)) None else Some(r.getLong(4)),
-      hi2 = if (r.isNullAt(5)) None else Some(r.getLong(5)),
-      kmv = if (r.isNullAt(7)) None else Some(r.getString(7)))
-
-  /** One carried slice of an existing manifest: `keep`/`drop` filter by
-    * partition value, `absolutize` rewrites dir-relative files to
-    * absolute paths rooted at the leg's dir (the zero-copy branch move).
+  /** One carried slice of an existing manifest: `carry` keeps, drops or
+    * rewrites each entry (filter by partition, absolutize for the
+    * zero-copy branch move).
     */
-  private[graft] case class CarryLeg(dir: String, version: Int,
-      keep: Option[Set[String]] = None, drop: Set[String] = Set.empty,
-      absolutize: Boolean = false)
+  private case class CarryLeg(dir: String, version: Int,
+      carry: Entry => Option[Entry])
 
-  /** Publish `newVersion` of `dstDir` as (the legs' filtered entries)
-    * ++ `extra` — the carry-forward shape of every non-create commit.
-    * Small legs (every header `n` under the census threshold) carry on
-    * the driver with zero Spark jobs; any large leg routes the WHOLE
-    * carry through `entriesRelation` + the streaming writer, so the
-    * driver never materializes a table-census entry list.
+  /** Publish `newVersion` of `dstDir` as (the legs' carried entries) ++
+    * `extra` — the carry-forward shape of every non-create commit. Small
+    * legs carry on the driver with zero Spark jobs; any large leg routes
+    * the WHOLE carry through the streaming writer, so the driver never
+    * materializes a table-census entry list.
     */
   private def commitCarry(spark: SparkSession, dstDir: String,
       newVersion: Int, legs: Seq[CarryLeg], extra: Seq[Entry],
       conf: Configuration, batch: Long = -1L, dv: Seq[String] = Nil,
       bloomK: Int = -1, kmvK: Int = -1, op: String = "",
-      schema: String = ""): Unit = {
-    val small =
-      legs.forall(l => driverCensus(spark, l.dir, l.version, conf))
-    if (small) {
-      val carried = legs.flatMap { l =>
-        readManifest(l.dir, l.version, conf)
-          .filter(e => l.keep.forall(_.contains(e.p)) && !l.drop(e.p))
-          .map(e => if (l.absolutize) e.copy(file = filePath(l.dir, e))
-                    else e)
-      }
-      commitManifest(dstDir, newVersion, carried ++ extra, conf, batch,
-        dv, bloomK, kmvK, op, schema)
-    } else {
-      val dfs = legs.map { l =>
-        var d = entriesRelation(spark, l.dir, l.version)
-          .select(entryCols.map(col): _*)
-        l.keep.foreach(ks =>
-          d = d.filter(col("p").isInCollection(ks)))
-        if (l.drop.nonEmpty)
-          d = d.filter(!col("p").isInCollection(l.drop))
-        if (l.absolutize)
-          d = d.withColumn("file",
-            when(col("file").rlike(absolutePathRe), col("file"))
-              .otherwise(concat_ws("", lit(s"${l.dir}/"), col("file"))))
-        d
-      }
-      commitRelationStreamed(dstDir, newVersion, dfs.reduce(_ unionAll _),
+      schema: String = ""): Unit =
+    census(spark, legs.map(l => (l.dir, l.version)), allPayloads)
+      .carry(legs.map(_.carry)) match {
+      case Left(es) => commitManifest(dstDir, newVersion, es ++ extra, conf,
+        batch, dv, bloomK, kmvK, op, schema)
+      case Right(rel) => commitRelationStreamed(dstDir, newVersion, rel,
         extra, conf, batch, dv, bloomK, kmvK, op, schema)
     }
-  }
 
   /** Publish an entry RELATION (any DataFrame with the entry columns)
     * as `newVersion`, streaming it through the driver one executor
     * partition at a time — the carrier for every distributed-census
     * commit, including maintenance passes that TRANSFORM entries
-    * (bloom/sketch builds) and so can't ride the CarryLeg filter shape.
-    * The carried stream and `extra` MERGE by (p, file) — both are
-    * already sorted — so the manifest is globally sorted and the bytes
-    * this path emits for given logical content are identical to the
-    * driver path's (`commitManifest` sorts carried++extra together);
-    * byte-level regime divergence would defeat manifest diffing and
-    * any content-addressed replication of the manifest log.
+    * (bloom/sketch builds). The carried stream and `extra` MERGE by
+    * (p, file) — both are already sorted — so the manifest is globally
+    * sorted and the bytes this path emits for given logical content are
+    * identical to the driver path's (`commitManifest` sorts
+    * carried++extra together); byte-level regime divergence would defeat
+    * manifest diffing and any content-addressed replication of the
+    * manifest log.
     */
   private[graft] def commitRelationStreamed(dstDir: String, newVersion: Int,
       rel: DataFrame, extra: Seq[Entry], conf: Configuration, batch: Long,
       dv: Seq[String], bloomK: Int, kmvK: Int, op: String,
       schema: String = ""): Unit = {
     val carry = rel.select(entryCols.map(col): _*)
-      .orderBy("p", "file").persist()
+      .orderBy("p", "file").as(enc[Entry]).persist()
     try {
       val n = carry.count() + extra.length
-      val it = mergeByKey(
-        toScalaIterator(carry.toLocalIterator()).map(rowToEntry),
+      val it = mergeByKey(toScalaIterator(carry.toLocalIterator()),
         extra.sortBy(e => (e.p, e.file)).iterator)
       commitManifestStreamed(dstDir, newVersion, n, it, conf, batch,
         dv, bloomK, kmvK, op, schema)
@@ -406,33 +487,40 @@ object Manifest {
       extra: Seq[Entry], conf: Configuration, batch: Long = -1L,
       dv: Seq[String] = Nil, bloomK: Int = -1, kmvK: Int = -1,
       op: String = "", schema: String = ""): Unit =
-    commitCarry(spark, dir, newVersion,
-      Seq(CarryLeg(dir, fromVersion, drop = dropParts)), extra, conf,
+    commitCarry(spark, dir, newVersion, Seq(CarryLeg(dir, fromVersion,
+      e => Option.unless(dropParts(e.p))(e))), extra, conf,
       batch, dv, bloomK, kmvK, op, schema)
 
-  /** Partition values whose entries satisfy the census predicate —
-    * driver form below the threshold, distributed above. The result is
-    * partition-domain-sized either way (the bound every lifecycle op
-    * already rides).
-    */
-  private def censusPartitions(spark: SparkSession, dir: String,
-      version: Int, conf: Configuration)(pred: Entry => Boolean,
-      predCol: DataFrame => DataFrame): Set[String] =
-    if (driverCensus(spark, dir, version, conf))
-      readManifest(dir, version, conf).filter(pred).map(_.p).toSet
-    else predCol(entriesRelation(spark, dir, version))
-      .select("p").distinct().collect().map(_.getString(0)).toSet
+  /** Rows of the data files `files` of `dir`, schemas merged. */
+  private def readFiles(spark: SparkSession, dir: String,
+      files: Seq[String]): DataFrame =
+    spark.read.option("mergeSchema", "true")
+      .parquet(files.map(filePath(dir, _)): _*)
 
-  /** File paths of entries satisfying the census predicate — hit-sized
-    * driver state in both forms.
+  /** `__p=<v>/<file>` of a scanned row's data file — the key deletion
+    * vectors and index payloads are recorded under.
     */
-  private def censusFiles(spark: SparkSession, dir: String, version: Int,
-      conf: Configuration)(pred: Entry => Boolean,
-      predCol: DataFrame => DataFrame): Seq[String] =
-    if (driverCensus(spark, dir, version, conf))
-      readManifest(dir, version, conf).filter(pred).map(_.file)
-    else predCol(entriesRelation(spark, dir, version))
-      .select("file").collect().map(_.getString(0)).toSeq
+  private def metaTail: Column = {
+    val segs = split(col("_metadata.file_path"), "/")
+    concat_ws("/", element_at(segs, -2), element_at(segs, -1))
+  }
+
+  /** `df`'s rows (file tail, row position)-joined to `dv` by `how`, with
+    * `df`'s columns — the merge-on-read filter (`left_anti`) and the
+    * victim materialization (`left_semi`).
+    */
+  private def byPos(df: DataFrame, dv: DataFrame, how: String): DataFrame =
+    df.withColumn("__file", metaTail)
+      .withColumn("__pos", col("_metadata.row_index"))
+      .join(dv, Seq("__file", "__pos"), how)
+      .select(df.columns.map(col).toSeq: _*)
+
+  /** Whether a file with stats [lo, hi] may hold a value in [l, h]
+    * (stats-less files conservatively may).
+    */
+  private def overlaps(lo: Option[Long], hi: Option[Long], l: Long,
+      h: Long): Boolean =
+    lo.forall(_ <= h) && hi.forall(_ >= l)
 
   private def manifestLines(dir: String, version: Int,
       conf: Configuration): Vector[String] = {
@@ -849,28 +937,15 @@ object Manifest {
     * drop in the window surfaces as a set difference.
     */
   private[graft] def changedPartitions(spark: SparkSession, dir: String,
-      from: Int, to: Int, conf: Configuration): Set[String] = {
-    if (to <= from) return Set.empty
-    if (driverCensus(spark, dir, from, conf) &&
-        driverCensus(spark, dir, to, conf)) {
-      def byPart(v: Int): Map[String, Set[String]] =
-        readManifest(dir, v, conf).groupBy(_.p)
-          .view.mapValues(_.map(_.file).toSet).toMap
-      val a = byPart(from)
-      val b = byPart(to)
-      (a.keySet ++ b.keySet)
-        .filter(p => a.getOrElse(p, Set.empty) != b.getOrElse(p, Set.empty))
-    } else {
-      // file paths are commit-unique, so the partitions whose file SET
-      // changed are exactly the partitions owning a (p, file) pair on
-      // one side only — a symmetric difference the executors compute;
-      // the driver sees the partition-domain-bounded answer
-      val a = entriesRelation(spark, dir, from).select("p", "file")
-      val b = entriesRelation(spark, dir, to).select("p", "file")
-      a.exceptAll(b).unionAll(b.exceptAll(a))
-        .select("p").distinct().collect().map(_.getString(0)).toSet
+      from: Int, to: Int, conf: Configuration): Set[String] =
+    if (to <= from) Set.empty
+    else {
+      // file paths are commit-unique (a file names its partition), so
+      // the partitions whose file SET changed are exactly those owning a
+      // file on one side only — a partition-domain-bounded answer
+      val c = census(spark, Seq(dir -> from, dir -> to))
+      (c.onlyIn(0)(_.p) ++ c.onlyIn(1)(_.p)).toSet
     }
-  }
 
   /** Stage a partition overwrite from the CURRENT snapshot without
     * publishing it — the optimistic-concurrency prepare phase. Files
@@ -907,7 +982,7 @@ object Manifest {
     // publishing, or the new snapshot would reference deleted bytes
     val f = fs(dir, conf)
     val reaped = prep.entries.filterNot(e =>
-      f.exists(new Path(filePath(dir, e))))
+      f.exists(new Path(filePath(dir, e.file))))
     require(reaped.isEmpty,
       s"commitPrepared: ${reaped.length} staged file(s) no longer exist " +
         s"(first: ${reaped.head.file}) - a vacuum ran during the prepare " +
@@ -928,7 +1003,7 @@ object Manifest {
       // changedPartitions — if it hit one of the prepared partitions,
       // the staged files (computed through BASE's deletion vector)
       // would silently resurrect its victims; abort like a rewrite
-      val dvConf = dvDeltaPartitions(spark, dir, baseDv, h, latest, conf)
+      val dvConf = dvPartitions(spark, dir, latest, h.dv.filterNot(baseDv))
         .intersect(prep.touched)
       require(dvConf.isEmpty,
         s"commitPrepared: concurrent merge-on-read delete on partitions " +
@@ -981,51 +1056,25 @@ object Manifest {
     require(from <= to, s"changesBetween: from $from > to $to")
     val conf = spark.sparkContext.hadoopConfiguration
     // the feed needs only the FILE DIFF between the endpoint manifests
-    // (immutable files ⇒ row delta == file delta): diff-sized either
-    // way, computed on the driver below the census threshold and as
-    // two anti-joins over the distributed entry relation above it
-    val (inserted: Seq[String], removed: Seq[String]) =
-      if (driverCensus(spark, dir, from, conf) &&
-          driverCensus(spark, dir, to, conf)) {
-        val eF = readManifest(dir, from, conf).map(_.file)
-        val eT = readManifest(dir, to, conf).map(_.file)
-        val fSet = eF.toSet
-        val tSet = eT.toSet
-        (eT.filterNot(fSet), eF.filterNot(tSet))
-      } else {
-        val a = entriesRelation(spark, dir, from).select("file")
-        val b = entriesRelation(spark, dir, to).select("file")
-        (b.join(a, Seq("file"), "left_anti")
-           .collect().map(_.getString(0)).toSeq,
-         a.join(b, Seq("file"), "left_anti")
-           .collect().map(_.getString(0)).toSeq)
-      }
+    // (immutable files ⇒ row delta == file delta): diff-sized in either
+    // census regime
+    val c = census(spark, Seq(dir -> from, dir -> to))
+    val (inserted, removed) = (c.onlyIn(1)(_.file), c.onlyIn(0)(_.file))
     val hF = readHeader(dir, from, conf)
     val hT = readHeader(dir, to, conf)
     val dvNew = hT.dv.filterNot(hF.dv.toSet)
-    val segs = split(col("_metadata.file_path"), "/")
-    def withPos(df: DataFrame): DataFrame = df
-      .withColumn("__file",
-        concat_ws("/", element_at(segs, -2), element_at(segs, -1)))
-      .withColumn("__pos", col("_metadata.row_index"))
-    def readEntries(files: Seq[String]): DataFrame =
-      spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => filePath(dir, Entry("", f))): _*)
     def readDv(rels: Seq[String]): DataFrame =
       spark.read.parquet(rels.map(p => dvFilePath(dir, p)): _*)
         .select(col("__file"), col("__pos"))
     val insSide =
       if (inserted.isEmpty) None
-      else Some(readEntries(inserted))
+      else Some(readFiles(spark, dir, inserted))
     val removedSide =
       if (removed.isEmpty) None
-      else if (hF.dv.isEmpty && dvNew.isEmpty) Some(readEntries(removed))
-      else {
-        val cols = readEntries(removed).columns
-        Some(withPos(readEntries(removed))
-          .join(readDv(hF.dv ++ dvNew), Seq("__file", "__pos"), "left_anti")
-          .select(cols.map(col): _*))
-      }
+      else if (hF.dv.isEmpty && dvNew.isEmpty)
+        Some(readFiles(spark, dir, removed))
+      else Some(byPos(readFiles(spark, dir, removed),
+        readDv(hF.dv ++ dvNew), "left_anti"))
     val dvSide =
       if (dvNew.isEmpty) None
       else {
@@ -1035,41 +1084,17 @@ object Manifest {
         // a victim's file may have been dropped later (overwritten)
         // while its delta survives, so neither endpoint alone resolves
         val vFiles = victims.select("__file").distinct()
-          .collect().map(_.getString(0))
+          .as(Encoders.STRING).collect().toSeq
         val present = (from to to)
           .filter(v => fs(dir, conf).exists(manifestPath(dir, v)))
-        val allSmall = present.forall(v =>
-          driverCensus(spark, dir, v, conf))
-        val resolve: Map[String, String] =
-          if (allSmall)
-            (for {
-              v <- present
-              e <- readManifest(dir, v, conf)
-            } yield tailKey(e.file) -> e.file).toMap
-          else {
-            // window versions × entries is a table-census product — the
-            // executors resolve; the driver keeps only the victim-sized
-            // (tail -> path) answer
-            import spark.implicits._
-            present.map(v => entriesRelation(spark, dir, v)
-                .select(col("file")))
-              .reduce(_ unionAll _)
-              .withColumn("__tail", tailCol(col("file")))
-              .join(vFiles.toSeq.toDF("__tail"), Seq("__tail"),
-                "left_semi")
-              .select(col("__tail"), col("file"))
-              .distinct()
-              .collect().map(r => (r.getString(0), r.getString(1))).toMap
-          }
+        val resolve = census(spark, present.map(dir -> _))
+          .join(e => tailKey(e.file), Left(vFiles.toSet),
+            at = present.indices)(_.file)
+          .map(f => tailKey(f) -> f).toMap
         val paths = vFiles.map(t => resolve.getOrElse(t, sys.error(
           s"changesBetween: DV delta references file $t that no manifest " +
             s"in v$from..v$to resolves - window crosses vacuumed history")))
-        val cols = spark.read.option("mergeSchema", "true")
-          .parquet(paths.map(p => filePath(dir, Entry("", p))): _*).columns
-        Some(withPos(spark.read.option("mergeSchema", "true")
-            .parquet(paths.map(p => filePath(dir, Entry("", p))): _*))
-          .join(victims, Seq("__file", "__pos"), "left_semi")
-          .select(cols.map(col): _*))
+        Some(byPos(readFiles(spark, dir, paths), victims, "left_semi"))
       }
     Seq(insSide.map("insert" -> _), removedSide.map("delete" -> _),
       dvSide.map("delete" -> _)).flatten
@@ -1252,7 +1277,7 @@ object Manifest {
       // attempt (the commitPrepared/commitDelete guard, mirrored), or
       // the published snapshot would reference deleted bytes
       val reaped = entries.filterNot(e =>
-        fsys.exists(new Path(filePath(dir, e))))
+        fsys.exists(new Path(filePath(dir, e.file))))
       require(reaped.isEmpty,
         s"merge: ${reaped.length} staged file(s) no longer exist " +
           s"(first: ${reaped.headOption.map(_.file).getOrElse("")}) - a " +
@@ -1273,7 +1298,7 @@ object Manifest {
       // their carried-forward (file,pos) rows go stale against the
       // dropped files — a silent resurrect. Abort like any other
       // write-write conflict on the affected partitions.
-      val dvConf = dvDeltaPartitions(spark, dir, baseDv, h, latest, conf)
+      val dvConf = dvPartitions(spark, dir, latest, h.dv.filterNot(baseDv))
         .intersect(affected)
       require(dvConf.isEmpty,
         s"merge: concurrent merge-on-read delete on partitions " +
@@ -1293,35 +1318,21 @@ object Manifest {
     -1 // unreachable
   }
 
-  /** Partitions holding victims of DV deltas committed AFTER a
-    * rewriter's base (deltas in the latest header but not the base's).
-    * A staged rewrite of those partitions was computed through the
-    * BASE deletion vector, so publishing it would silently resurrect
-    * the concurrent delete — the caller must treat an intersection
-    * with its write-set as a conflict. Victim census is delete-sized;
-    * the partition mapping rides the latest manifest (driver census).
+  /** Partitions of `version` holding victims of the DV deltas `dv`.
+    * Rewriters pass the deltas committed AFTER their base: a staged
+    * rewrite of those partitions was computed through the BASE deletion
+    * vector, so publishing it would silently resurrect the concurrent
+    * delete — an intersection with the write-set is a conflict.
+    * `applyDeletes` passes the whole DV: stale rows (files already
+    * dropped by overwrites) match no entry and add no partition. The
+    * answer is partition-domain-bounded in either census regime.
     */
-  private def dvDeltaPartitions(spark: SparkSession, dir: String,
-      baseDv: Set[String], latestH: Header, latest: Int,
-      conf: Configuration): Set[String] = {
-    val newDv = latestH.dv.filterNot(baseDv)
-    if (newDv.isEmpty) return Set.empty
-    val victims = spark.read
-      .parquet(newDv.map(p => dvFilePath(dir, p)): _*)
-      .select("__file").distinct()
-    if (driverCensus(spark, dir, latest, conf)) {
-      val victimFiles = victims.collect().map(_.getString(0)).toSet
-      readManifest(dir, latest, conf)
-        .filter(e => victimFiles(tailKey(e.file))).map(_.p).toSet
-    } else
-      // victim census joins the DISTRIBUTED entry relation — neither
-      // the victims nor the entries land on the driver, only the
-      // partition-domain-bounded answer does
-      entriesRelation(spark, dir, latest)
-        .withColumn("__tail", tailCol(col("file")))
-        .join(victims, col("__tail") === col("__file"), "left_semi")
-        .select("p").distinct().collect().map(_.getString(0)).toSet
-  }
+  private def dvPartitions(spark: SparkSession, dir: String, version: Int,
+      dv: Seq[String]): Set[String] =
+    if (dv.isEmpty) Set.empty
+    else census(spark, Seq(dir -> version)).join(e => tailKey(e.file),
+      Right(spark.read.parquet(dv.map(p => dvFilePath(dir, p)): _*)
+        .select("__file").distinct().as(Encoders.STRING)))(_.p).toSet
 
   /** Streaming MERGE (the apply-changes sink): `merge` stamped with the
     * micro-batch id — a replayed batch applies nothing. Returns whether
@@ -1357,18 +1368,11 @@ object Manifest {
     val conf = spark.sparkContext.hadoopConfiguration
     val base = latestVersion(dir, conf)
     require(base >= 1, s"$dir is not a manifested layout")
-    // hot-partition census: driver below the threshold, a distributed
-    // groupBy over the entry relation above it (the manifest is the
-    // whole cost of DECIDING — no data is read either way)
-    val hot: Set[String] =
-      if (driverCensus(spark, dir, base, conf))
-        readManifest(dir, base, conf).groupBy(_.p).collect {
-          case (p, es) if es.length > maxFilesPerPartition => p
-        }.toSet
-      else entriesRelation(spark, dir, base)
-        .groupBy("p").agg(count(lit(1)).as("__c"))
-        .filter(col("__c") > maxFilesPerPartition)
-        .select("p").collect().map(_.getString(0)).toSet
+    // hot-partition census: the manifest is the whole cost of DECIDING
+    // — no data is read either way
+    val hot = census(spark, Seq(dir -> base)).perPartition().collect {
+      case (p, n) if n > maxFilesPerPartition => p
+    }.toSet
     if (hot.isEmpty) return 0
     val live = readWithDeletes(spark, dir, base).drop("__file", "__pos")
     val packed = live
@@ -1494,8 +1498,8 @@ object Manifest {
               .select(col(partCol).cast("string").as("__pv")).distinct()
               .collect().map(_.getString(0)).toSet
             if (affected.nonEmpty) {
-              val existing = censusPartitions(spark, dstDir,
-                latestVersion(dstDir, conf), conf)(_ => true, identity)
+              val existing = census(spark, Seq(dstDir ->
+                latestVersion(dstDir, conf))).perPartition().keySet
               val present = affected.intersect(existing).toSeq
               val cur =
                 if (present.isEmpty) None
@@ -1559,7 +1563,8 @@ object Manifest {
     require(latestVersion(bdir, conf) == 0, s"branch '$name' already exists")
     val h = readHeader(dir, base, conf)
     commitCarry(spark, bdir, 1,
-      Seq(CarryLeg(dir, base, absolutize = true)), Nil, conf,
+      Seq(CarryLeg(dir, base, e => Some(e.copy(file = filePath(dir, e.file))))),
+      Nil, conf,
       dv = h.dv.map(p => dvFilePath(dir, p)), bloomK = h.bloomK,
       kmvK = h.kmvK, op = "branch-create", schema = h.schema)
     val f = fs(dir, conf)
@@ -1623,9 +1628,9 @@ object Manifest {
         mainH.schema
       else ""
     commitCarry(spark, dir, mainLatest + 1,
-      Seq(CarryLeg(dir, mainLatest, drop = branchChanged),
-        CarryLeg(bdir, bLatest, keep = Some(branchChanged),
-          absolutize = true)), Nil, conf,
+      Seq(CarryLeg(dir, mainLatest, e => Option.unless(branchChanged(e.p))(e)),
+        CarryLeg(bdir, bLatest, e => Option.when(branchChanged(e.p))(
+          e.copy(file = filePath(bdir, e.file))))), Nil, conf,
       dv = mainH.dv ++ branchNewDv, bloomK = mainH.bloomK,
       kmvK = mainH.kmvK, op = "branch-merge", schema = schema)
     mainLatest + 1
@@ -1642,8 +1647,7 @@ object Manifest {
   // false negatives by construction (files without a Bloom admit
   // conservatively); q359 proves the skip ratio at runtime.
 
-  private def bloomPositions(column: org.apache.spark.sql.Column,
-      bits: Int, k: Int): Seq[org.apache.spark.sql.Column] =
+  private def bloomPositions(column: Column, bits: Int, k: Int): Seq[Column] =
     (0 until k).map(i =>
       pmod(xxhash64(lit(i), column), lit(bits.toLong)).cast("int"))
 
@@ -1653,7 +1657,7 @@ object Manifest {
     * immutable index) are never re-read — an index refresh after an
     * append costs the appended files, not the table. No-op (no commit)
     * when every file is already indexed. Per-file state ≤ `bits`
-    * positions. Above the census threshold each pass indexes at most
+    * positions. Each pass indexes at most
     * `graft.manifest.indexBatchMaxFiles` unindexed files (their paths
     * are driver-held `spark.read.parquet` arguments — the bound keeps
     * that list off the O(files) ceiling); returns true while work
@@ -1673,84 +1677,66 @@ object Manifest {
     require(h.bloomK < 1 || h.bloomK == k,
       s"addBloomIndex: layout was indexed with k=${h.bloomK}, got k=$k - " +
         "rebuild the index (compact + reindex) to change hash counts")
-    val segs = split(col("_metadata.file_path"), "/")
-    def positionsDF(todoPaths: Seq[String]): DataFrame =
-      spark.read.option("mergeSchema", "true").parquet(todoPaths: _*)
-        .withColumn("__file",
-          concat_ws("/", element_at(segs, -2), element_at(segs, -1)))
-        .filter(col(column).isNotNull)
-        .select(col("__file"),
+    indexPass(spark, dir, base, h.copy(bloomK = k, op = "bloom-index"),
+      "bloom", _.bloom, (e, b) => e.copy(bloom = Some(b)),
+      bloomPackB64(_, lit(bits))) { paths =>
+      readFiles(spark, dir, paths).filter(col(column).isNotNull)
+        .select(metaTail.as("__file"),
           explode(array(bloomPositions(col(column), bits, k): _*)).as("__b"))
         .distinct()
-        .groupBy("__file").agg(collect_list("__b").as("__bs"))
-    if (driverCensus(spark, dir, base, conf)) {
-      val all = readManifest(dir, base, conf)
-      val todo = all.filter(_.bloom.isEmpty)
-      if (todo.isEmpty) return false
-      val positions = positionsDF(todo.map(e => filePath(dir, e)))
-        .collect()
-        .map(r => r.getString(0) -> r.getSeq[Int](1))
+        .groupBy("__file").agg(collect_list("__b").as("__v"))
+    }
+  }
+
+  /** One index-build pass — the index payload attach. The census lists
+    * at most `graft.manifest.indexBatchMaxFiles` files whose payload
+    * `get` is unset; `perFile` computes the batch's (`__file`, `__v`)
+    * and `pack` encodes each batch file's value inside that Spark job
+    * (a NULL value — a scanned file with no non-null key — packs the
+    * empty payload, so refreshes CONVERGE instead of re-scanning it).
+    * Files beyond the batch stay unset: an empty payload is only safe
+    * for a file the batch scanned, or a later read would silently skip
+    * or under-count it. The pass commits `base`'s entries with the
+    * batch's payload `set`, headed by `h`: the payload is collected to a
+    * map below the census threshold and joined in the executors above
+    * it (at the batch cap and k=1024 a collected KMV payload is ~1 GB of
+    * driver heap). Returns false (no commit) when nothing is left.
+    */
+  private def indexPass(spark: SparkSession, dir: String, base: Int,
+      h: Header, field: String, get: Entry => Option[String],
+      set: (Entry, String) => Entry, pack: Column => Column)(
+      perFile: Seq[String] => DataFrame): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val c = census(spark, Seq(dir -> base), Map(field -> isSet))
+    val todo = c.collect(0, e => Option.when(get(e).isEmpty)(e.file),
+      indexBatchMax(spark))
+    if (todo.isEmpty) return false
+    val payload = spark.createDataset(todo.map(tailKey))(Encoders.STRING)
+      .toDF("__file")
+      .join(perFile(todo), Seq("__file"), "left")
+      .select(col("__file"), pack(col("__v")))
+    if (c.small) {
+      val m = payload.collect().map(r => r.getString(0) -> r.getString(1))
         .toMap
-      val entries = all.map { e =>
-        if (e.bloom.isDefined) e
-        else e.copy(bloom = Some {
-          // a scanned file with no positions (all-NULL column, or empty)
-          // gets the all-zero bitset: SAFE (a point lookup of a non-null
-          // value can never match it) and it makes the refresh CONVERGE —
-          // leaving it bloomless would re-scan it on every refresh and
-          // commit a fresh near-identical version each time
-          val ps = positions.getOrElse(tailKey(e.file), Seq.empty)
-          val bytes = new Array[Byte](bits / 8)
-          ps.foreach(p => bytes(p / 8) = (bytes(p / 8) | (1 << (p % 8))).toByte)
-          java.util.Base64.getEncoder.encodeToString(bytes)
-        })
-      }
-      commitManifest(dir, base + 1, entries, conf, dv = h.dv, bloomK = k,
-        kmvK = h.kmvK, op = "bloom-index", schema = h.schema)
+      commitManifest(dir, base + 1, readManifest(dir, base, conf)
+          .map(e => m.get(tailKey(e.file)).fold(e)(set(e, _))), conf,
+        dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK, op = h.op,
+        schema = h.schema)
     } else {
-      // distributed build: per-file positions stay a DataFrame, the
-      // bitset packs in the executors (a UDF is honest here — no
-      // builtin packs bit positions into bytes — and this is a
-      // maintenance pass, not a query hot path), and the updated entry
-      // relation streams to the new manifest. The driver DOES hold the
-      // todo list (the paths are `spark.read.parquet` arguments), so
-      // it is BOUNDED per pass: at most `graft.manifest.
-      // indexBatchMaxFiles` unindexed files index per call — a freshly
-      // unindexed 10^7-file table converges over repeated calls (each
-      // a commit), never through an O(files) driver list. Callers
-      // refresh until the call returns false.
-      val batchMax = indexBatchMax(spark)
-      val todoFiles = entriesRelation(spark, dir, base)
-        .filter(col("bloom").isNull).select("file")
-        .limit(batchMax).collect().map(_.getString(0)).toSeq
-      if (todoFiles.isEmpty) return false
-      val pos = positionsDF(
-        todoFiles.map(f => filePath(dir, Entry("", f))))
-      // the all-zero bitset is only SAFE for files this batch actually
-      // scanned (no positions ⇒ all-NULL column); files beyond the
-      // batch cap must stay bloom-NULL or a later point read would
-      // silently skip files that hold the key
-      import spark.implicits._
-      val batchTails = broadcast(
-        todoFiles.map(tailKey).toDF("__batchTail"))
-      val rel = entriesRelation(spark, dir, base)
-        .withColumn("__tail", tailCol(col("file")))
-        .join(pos, col("__tail") === col("__file"), "left")
-        .join(batchTails, col("__tail") === col("__batchTail"), "left")
-        .withColumn("bloom",
-          when(col("bloom").isNotNull, col("bloom"))
-            .when(col("__batchTail").isNotNull,
-              bloomPackB64(col("__bs"), lit(bits))))
-      commitRelationStreamed(dir, base + 1, rel, Nil, conf, -1L,
-        h.dv, k, h.kmvK, "bloom-index", schema = h.schema)
+      val rel = entriesRelation(spark, dir, base).as(enc[Entry])
+        .map(e => (tailKey(e.file), e))(enc[(String, Entry)])
+        .joinWith(payload, col("_1") === col("__file"), "left_outer")
+        .map { case ((_, e), r) =>
+          if (r == null) e else set(e, r.getString(1)) }(enc[Entry])
+      commitRelationStreamed(dir, base + 1, rel.toDF(), Nil, conf, -1L,
+        h.dv, h.bloomK, h.kmvK, h.op, schema = h.schema)
     }
     true
   }
 
-  /** Executor-side bitset packer for the distributed index build: the
-    * k positions of a file's values fold into a bits/8-byte Base64
-    * bitset; a NULL position list (scanned file, all-NULL column) packs
-    * the all-zero bitset so refreshes converge.
+  /** Executor-side bitset packer: a file's k-hash positions fold into a
+    * bits/8-byte Base64 bitset; NULL packs the all-zero bitset (SAFE: a
+    * point lookup of a non-null value can never match it).
     */
   private lazy val bloomPackB64 =
     udf((ps: Seq[Int], bits: Int) => {
@@ -1789,84 +1775,31 @@ object Manifest {
       value: Long): (DataFrame, Int, Int) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val v = latestVersion(dir, conf)
-    val k = readHeader(dir, v, conf).bloomK
-    // the value's k positions per DISTINCT bitset width, via a 1-row
-    // Spark plan so the hash is BIT-IDENTICAL to the index build's
-    // xxhash64 kernel (widths differ only across historic rebuilds)
-    def wantByBits(widths: Seq[Int]): Map[Int, Seq[Int]] =
-      widths.map { bits =>
-        val ps = spark.range(1)
-          .select(bloomPositions(lit(value), bits, k): _*)
-          .collect().head
-        bits -> (0 until k).map(ps.getInt)
-      }.toMap
-    val (hit: Seq[String], total: Int) =
-      if (driverCensus(spark, dir, v, conf)) {
-        val entries = readManifest(dir, v, conf)
-        require(k >= 1 || entries.forall(_.bloom.isEmpty),
-          s"$dir carries Bloom bitsets but no persisted k - manifest corrupt")
-        val want = wantByBits(entries.flatMap(_.bloom)
-          .map(b64 => java.util.Base64.getDecoder.decode(b64).length * 8)
-          .distinct)
-        (entries.filter { e =>
-          e.bloom match {
-            case None => true
-            case Some(b64) =>
-              val bytes = java.util.Base64.getDecoder.decode(b64)
-              want(bytes.length * 8)
-                .forall(p => (bytes(p / 8) & (1 << (p % 8))) != 0)
-          }
-        }.map(_.file), entries.length)
-      } else {
-        // distributed probe: executors decode each bitset and test the
-        // k positions with builtin byte ops (substring on binary + hex
-        // + conv + bitwiseAND — no UDF on this read path); the driver
-        // sees only the distinct widths and the admitted file list
-        val er = entriesRelation(spark, dir, v).persist()
-        try {
-          require(k >= 1 ||
-              er.filter(col("bloom").isNotNull).limit(1).count() == 0,
-            s"$dir carries Bloom bitsets but no persisted k - manifest " +
-              "corrupt")
-          val bin = unbase64(col("bloom"))
-          val widths = er.filter(col("bloom").isNotNull)
-            .select((length(bin) * 8).as("w")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val want = wantByBits(widths)
-          def byteAt(i: Int) =
-            conv(hex(substring(bin, i + 1, 1)), 16, 10).cast("int")
-          val admit = widths.foldLeft(col("bloom").isNull) { (acc, bits) =>
-            acc || ((length(bin) * 8 === bits) &&
-              want(bits).map(p => byteAt(p / 8)
-                  .bitwiseAND(lit(1 << (p % 8))) =!= 0)
-                .reduce(_ && _))
-          }
-          (er.filter(admit).select("file")
-             .collect().map(_.getString(0)).toSeq,
-           er.count().toInt)
-        } finally er.unpersist()
+    val h = readHeader(dir, v, conf)
+    val k = h.bloomK
+    val c = census(spark, Seq(dir -> v), allPayloads - "kmv")
+    require(k >= 1 || c.collect(0, _.bloom.map(_ => true), 1).isEmpty,
+      s"$dir carries Bloom bitsets but no persisted k - manifest corrupt")
+    // the probe evaluates the XxHash64 kernel behind the build's
+    // `xxhash64(lit(i), column)` (seed 42, then the int i, then the
+    // long value), so its positions are bit-identical to the build's
+    val hit = c.collect(0, e => Option.when(e.bloom.forall { b64 =>
+      val bytes = java.util.Base64.getDecoder.decode(b64)
+      (0 until k).forall { i =>
+        val p = java.lang.Math.floorMod(XXH64.hashLong(value,
+          XXH64.hashInt(i, 42L)), bytes.length * 8L).toInt
+        (bytes(p / 8) & (1 << (p % 8))) != 0
       }
+    })(e.file))
     val raw =
       if (hit.isEmpty) readVersion(spark, dir, v).limit(0)
-      else spark.read.option("mergeSchema", "true")
-        .parquet(hit.map(f => filePath(dir, Entry("", f))): _*)
+      else readFiles(spark, dir, hit)
     // merge-on-read discipline: a point read must not resurrect
     // DV-deleted rows (free when the version carries no DV)
-    val dvList = readHeader(dir, v, conf).dv
     val df =
-      if (dvList.isEmpty) raw
-      else {
-        val segs = split(col("_metadata.file_path"), "/")
-        val cols = raw.columns
-        raw
-          .withColumn("__file",
-            concat_ws("/", element_at(segs, -2), element_at(segs, -1)))
-          .withColumn("__pos", col("_metadata.row_index"))
-          .join(deletionVector(spark, dir, v), Seq("__file", "__pos"),
-            "left_anti")
-          .select(cols.map(col): _*)
-      }
-    (df, hit.length, total)
+      if (h.dv.isEmpty) raw
+      else byPos(raw, deletionVector(spark, dir, v), "left_anti")
+    (df, hit.length, c.size(0).toInt)
   }
 
   /** DESCRIBE HISTORY — the audit trail every commit already wrote:
@@ -1909,9 +1842,9 @@ object Manifest {
 
   /** DESCRIBE DETAIL — one row of table-level facts about the LATEST
     * snapshot: version, operation, file count (header-carried — zero
-    * entry parsing), partition count (distinct `p` over the
-    * DISTRIBUTED entry relation — executors parse, q387's read path),
-    * DV-delta count, and the version the newest checkpoint covers.
+    * entry parsing), partition count (an entry census — executors parse
+    * above the census threshold, q387's read path), DV-delta count, and
+    * the version the newest checkpoint covers.
     * Deliberately no byte totals: sizes aren't manifest-carried, and
     * an O(files) driver-side getFileStatus sweep is exactly the
     * anti-pattern the checkpoint exists to retire.
@@ -1922,31 +1855,27 @@ object Manifest {
     val v = latestVersion(dir, conf)
     require(v >= 1, s"$dir is not a manifested layout")
     val h = readHeader(dir, v, conf)
-    // pre-`n` header: count from the distributed entry relation, the
-    // same read path the partition census below already rides
-    val nFiles =
-      if (h.n >= 0) h.n else entriesRelation(spark, dir, v).count()
-    val nParts = entriesRelation(spark, dir, v)
-      .select("p").distinct().count()
-    Seq((v.toLong, if (h.op.isEmpty) "unknown" else h.op, nFiles, nParts,
-        h.dv.length.toLong, lastCheckpoint(dir, conf).toLong))
+    // a pre-`n` header counts the census the partitions come from
+    val c = census(spark, Seq(dir -> v))
+    Seq((v.toLong, if (h.op.isEmpty) "unknown" else h.op, c.size(0),
+        c.perPartition().size.toLong, h.dv.length.toLong,
+        lastCheckpoint(dir, conf).toLong))
       .toDF("version", "op", "n_files", "n_partitions", "n_dv_deltas",
         "checkpoint_version")
   }
 
-  // ---- Manifest checkpoint: the distributed entry census -------------
+  // ---- Manifest checkpoint: the distributed entry relation -----------
   //
-  // Every lifecycle op above parses manifest entry lines on the DRIVER
-  // (a regex per line) — the right cost at partition-census scale, and
-  // the 100-TB ceiling of the layer: at 10^6-10^7 files the driver
-  // becomes a single-threaded JSON parser. The Delta/Iceberg answer is
-  // a periodic PARQUET CHECKPOINT of the full entry relation, read and
-  // processed as a DataFrame — executors parse, the driver holds only
-  // headers. `checkpoint` materializes it (maintenance, like
-  // addBloomIndex); `entriesRelation` is the census read path: the
-  // checkpoint when it covers the asked version, else a DISTRIBUTED
-  // text-parse of the manifest (spark.read.text + regexp_extract —
-  // same line grammar, executor-side). Both return the same relation:
+  // Above the census threshold every census runs over `entriesRelation`
+  // instead of the driver's regex parse (see `census`). Its fast source
+  // is the Delta/Iceberg answer to the driver-parser ceiling: a
+  // periodic PARQUET CHECKPOINT of the full entry relation, read as a
+  // DataFrame — executors read, the driver holds only headers.
+  // `checkpoint` materializes it (maintenance, like addBloomIndex);
+  // `entriesRelation` serves the checkpoint when it covers the asked
+  // version, else a DISTRIBUTED text-parse of the manifest
+  // (spark.read.text + regexp_extract — the same line grammar,
+  // executor-side). Both return the same relation:
   //   (p, file, lo, hi, lo2, hi2, bloom, kmv)
 
   private def checkpointPath(dir: String, version: Int): String =
@@ -2146,10 +2075,11 @@ object Manifest {
   // the right sketch here because its merge is EXACT set algebra —
   // union-then-truncate — so merging the file sketches of any
   // partition selection IS the sketch of that selection, computed
-  // driver-side from the manifest alone (file-census work, zero data
-  // read at question time). Same incremental discipline as the Bloom
-  // index: immutable bytes ⇒ immutable sketch; a refresh costs only
-  // unsketched files and converges to a no-op.
+  // from the manifest alone by one merge that serves both census
+  // regimes (file-census work, zero data read at question time). Same
+  // incremental discipline as the Bloom index: immutable bytes ⇒
+  // immutable sketch; a refresh costs only unsketched files and
+  // converges to a no-op.
 
   private def decodeKmv(b64: String): Array[Long] = {
     val bytes = java.util.Base64.getDecoder.decode(b64)
@@ -2174,61 +2104,15 @@ object Manifest {
     require(h.kmvK < 1 || h.kmvK == k,
       s"addDistinctSketch: layout was sketched with k=${h.kmvK}, got " +
         s"k=$k - mixed-k sketches do not merge")
-    val segs = split(col("_metadata.file_path"), "/")
-    def sketchDF(todoPaths: Seq[String]): DataFrame = Sketches.kmvSketch(
-      spark.read.option("mergeSchema", "true").parquet(todoPaths: _*)
-        .withColumn("__file",
-          concat_ws("/", element_at(segs, -2), element_at(segs, -1)))
-        .filter(col(column).isNotNull),
-      Seq("__file"), column, k)
-    if (driverCensus(spark, dir, base, conf)) {
-      val all = readManifest(dir, base, conf)
-      val todo = all.filter(_.kmv.isEmpty)
-      if (todo.isEmpty) return false
-      val perFile: Map[String, Array[Long]] =
-        sketchDF(todo.map(e => filePath(dir, e)))
-          .collect()
-          .map(r => r.getString(0) -> r.getSeq[Long](1).toArray)
-          .toMap
-      val entries = all.map { e =>
-        if (e.kmv.isDefined) e
-        else e.copy(kmv = Some {
-          val hs = perFile.getOrElse(tailKey(e.file), Array.empty[Long])
-          val buf = java.nio.ByteBuffer.allocate(hs.length * 8)
-          hs.foreach(buf.putLong)
-          java.util.Base64.getEncoder.encodeToString(buf.array())
-        })
-      }
-      commitManifest(dir, base + 1, entries, conf,
-        dv = h.dv, bloomK = h.bloomK, kmvK = k, op = "distinct-sketch",
-        schema = h.schema)
-    } else {
-      // distributed refresh: sketches stay a DataFrame, Base64 packs in
-      // the executors, the updated relation streams to the manifest —
-      // the addBloomIndex shape (see its large branch for rationale,
-      // including the per-pass todo cap and why unscanned files must
-      // stay kmv-NULL: an empty sketch silently under-counts, a
-      // missing one is loud)
-      val batchMax = indexBatchMax(spark)
-      val todoFiles = entriesRelation(spark, dir, base)
-        .filter(col("kmv").isNull).select("file")
-        .limit(batchMax).collect().map(_.getString(0)).toSeq
-      if (todoFiles.isEmpty) return false
-      val sk = sketchDF(todoFiles.map(f => filePath(dir, Entry("", f))))
-      import spark.implicits._
-      val batchTails = broadcast(
-        todoFiles.map(tailKey).toDF("__batchTail"))
-      val rel = entriesRelation(spark, dir, base)
-        .withColumn("__tail", tailCol(col("file")))
-        .join(sk, col("__tail") === col("__file"), "left")
-        .join(batchTails, col("__tail") === col("__batchTail"), "left")
-        .withColumn("kmv",
-          when(col("kmv").isNotNull, col("kmv"))
-            .when(col("__batchTail").isNotNull, kmvPackB64(col("sk"))))
-      commitRelationStreamed(dir, base + 1, rel, Nil, conf, -1L,
-        h.dv, h.bloomK, k, "distinct-sketch", schema = h.schema)
+    // same pass as addBloomIndex, including why unscanned files must
+    // stay kmv-NULL: an empty sketch silently under-counts, a missing
+    // one is loud
+    indexPass(spark, dir, base, h.copy(kmvK = k, op = "distinct-sketch"),
+      "kmv", _.kmv, (e, b) => e.copy(kmv = Some(b)), kmvPackB64(_)) {
+      paths => Sketches.kmvSketch(readFiles(spark, dir, paths)
+          .filter(col(column).isNotNull).withColumn("__file", metaTail),
+        Seq("__file"), column, k).withColumnRenamed("sk", "__v")
     }
-    true
   }
 
   /** Distinct-count estimate of `column` over a partition selection
@@ -2248,52 +2132,27 @@ object Manifest {
     require(k >= 1,
       s"$dir carries no distinct sketch - build one with addDistinctSketch")
     val want = Option(partitions).map(_.toSet)
-    val (merged: Seq[Long], nSel: Int) =
-      if (driverCensus(spark, dir, v, conf)) {
-        val sel = readManifest(dir, v, conf)
-          .filter(e => want.forall(_.contains(e.p)))
-        require(sel.nonEmpty, s"approxDistinct: no manifest entry " +
-          s"matches partitions $partitions in $dir")
-        val missing = sel.count(_.kmv.isEmpty)
-        require(missing == 0,
-          s"approxDistinct: $missing selected file(s) carry no sketch - " +
-            "run addDistinctSketch to cover commits newer than the last " +
-            "build")
-        (sel.flatMap(e => decodeKmv(e.kmv.get))
-          .distinct.sorted.take(k).toSeq, sel.length)
-      } else {
-        // the sketches stay in the executors: decode, flatten, and
-        // bottom-k over the DISTRIBUTED entry relation (union-truncate
-        // is exact set algebra, so any execution order merges right);
-        // the driver sees k longs and two counts
-        val er = entriesRelation(spark, dir, v)
-        val sel = want.map(w => er.filter(col("p").isInCollection(w)))
-          .getOrElse(er).persist()
-        try {
-          val counts = sel.agg(count(lit(1)).as("n"),
-            count(when(col("kmv").isNull, 1)).as("missing")).head()
-          require(counts.getLong(0) > 0, s"approxDistinct: no manifest " +
-            s"entry matches partitions $partitions in $dir")
-          require(counts.getLong(1) == 0L,
-            s"approxDistinct: ${counts.getLong(1)} selected file(s) " +
-              "carry no sketch - run addDistinctSketch to cover commits " +
-              "newer than the last build")
-          (sel.select(explode(kmvUnpackB64(col("kmv"))).as("__h"))
-             .distinct().orderBy("__h").limit(k)
-             .collect().map(_.getLong(0)).toSeq,
-           counts.getLong(0).toInt)
-        } finally sel.unpersist()
-      }
+    // one fold of (selected, unsketched, bottom-k hashes): union-then-
+    // truncate is exact set algebra, so any merge order — the driver's
+    // or the executors' — yields the selection's sketch
+    val folded = census(spark, Seq(dir -> v), allPayloads - "bloom")
+      .reduce(0, e => Option.when(want.forall(_(e.p)))(0 ->
+        (1L, if (e.kmv.isEmpty) 1L else 0L,
+          e.kmv.fold(Seq.empty[Long])(b => decodeKmv(b).toSeq))))(
+        (a, b) => (a._1 + b._1, a._2 + b._2,
+          (a._3 ++ b._3).distinct.sorted.take(k))).get(0)
+    require(folded.nonEmpty, s"approxDistinct: no manifest entry " +
+      s"matches partitions $partitions in $dir")
+    val (nSel, missing, hs) = folded.get
+    require(missing == 0L,
+      s"approxDistinct: $missing selected file(s) carry no sketch - " +
+        "run addDistinctSketch to cover commits newer than the last build")
+    val merged = hs.distinct.sorted.take(k)
     val est =
       if (merged.length < k) merged.length.toDouble
       else (k - 1).toDouble / (merged(k - 1) * math.pow(2.0, -64) + 0.5)
-    (est, nSel)
+    (est, nSel.toInt)
   }
-
-  /** Executor-side KMV decoder (the read twin of `kmvPackB64`). */
-  private lazy val kmvUnpackB64 =
-    udf((b64: String) =>
-      if (b64 == null) Array.empty[Long] else decodeKmv(b64))
 
   // ---- Deletion vectors: MERGE-ON-READ row deletes -------------------
   //
@@ -2427,22 +2286,11 @@ object Manifest {
           "the delete")
       val latest = latestVersion(dir, conf)
       // staleness census: the victims' files must all still be latest-
-      // referenced. victimFiles is delete-sized (a driver set already);
-      // above the census threshold the membership probe runs as an
-      // anti-join against the distributed entry relation.
-      val stale: Iterable[String] =
-        if (driverCensus(spark, dir, latest, conf)) {
-          val latestFiles =
-            readManifest(dir, latest, conf).map(e => tailKey(e.file)).toSet
-          prep.victimFiles.filterNot(latestFiles)
-        } else {
-          import spark.implicits._
-          prep.victimFiles.toSeq.toDF("__vf")
-            .join(entriesRelation(spark, dir, latest)
-                .select(tailCol(col("file")).as("__vf")),
-              Seq("__vf"), "left_anti")
-            .collect().map(_.getString(0)).toSeq
-        }
+      // referenced (victimFiles is delete-sized — a driver set already)
+      val present = census(spark, Seq(dir -> latest))
+        .join(e => tailKey(e.file), Left(prep.victimFiles))(e =>
+          tailKey(e.file)).toSet
+      val stale = prep.victimFiles.filterNot(present)
       if (stale.nonEmpty) {
         fs(dir, conf).delete(new Path(s"$dir/${prep.delta}"), true)
         sys.error(
@@ -2536,10 +2384,7 @@ object Manifest {
       version: Int = -1): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val v = if (version > 0) version else latestVersion(dir, conf)
-    val segs = split(col("_metadata.file_path"), "/")
-    val t = readVersion(spark, dir, v)
-      .withColumn("__file",
-        concat_ws("/", element_at(segs, -2), element_at(segs, -1)))
+    val t = readVersion(spark, dir, v).withColumn("__file", metaTail)
       .withColumn("__pos", col("_metadata.row_index"))
     // a version with no DV (the common case on this hot path — every
     // fresh create/append/overwrite) skips the anti-join outright: one
@@ -2558,29 +2403,14 @@ object Manifest {
     val conf = spark.sparkContext.hadoopConfiguration
     val base = latestVersion(dir, conf)
     require(base >= 1, s"$dir is not a manifested layout")
-    if (readHeader(dir, base, conf).dv.isEmpty) return false
-    val live = readWithDeletes(spark, dir, base)
-    val dv = deletionVector(spark, dir, base)
-    val victims = dv.select("__file").distinct()
-    // stale DV rows (files already dropped by overwrites) match no
-    // current entry — they contribute no affected partition and simply
-    // die with the DV list here. Driver census below the threshold;
-    // victim-files × entry-relation join above it.
-    val affectedParts: Set[String] =
-      if (driverCensus(spark, dir, base, conf)) {
-        val affectedFiles = victims.collect().map(_.getString(0)).toSet
-        readManifest(dir, base, conf)
-          .filter(e => affectedFiles(tailKey(e.file))).map(_.p).toSet
-      } else entriesRelation(spark, dir, base)
-        .withColumn("__tail", tailCol(col("file")))
-        .join(victims, col("__tail") === col("__file"), "left_semi")
-        .select("p").distinct().collect().map(_.getString(0)).toSet
-    val survivors = live
+    val h = readHeader(dir, base, conf)
+    if (h.dv.isEmpty) return false
+    val affectedParts = dvPartitions(spark, dir, base, h.dv)
+    val survivors = readWithDeletes(spark, dir, base)
       .filter(col(partCol).cast("string")
         .isInCollection(affectedParts))
       .drop("__file", "__pos")
     val newEntries = writeCommitFiles(survivors, dir, partCol, base + 1)
-    val h = readHeader(dir, base, conf)
     commitCarryExcept(spark, dir, base, base + 1, affectedParts,
       newEntries, conf, bloomK = h.bloomK, kmvK = h.kmvK,
       op = "apply-deletes",
@@ -2777,13 +2607,11 @@ object Manifest {
     * immutable under any concurrent commit (old-or-new, never a mix).
     */
   def readVersion(spark: SparkSession, dir: String, version: Int): DataFrame = {
-    // dual-regime census: the path list is driver-held either way (the
-    // paths ARE the read arguments — the same bound Delta's scan
-    // planning carries), but above the threshold the PARSE runs in
-    // executors / serves from the checkpoint parquet instead of a
-    // driver regex over every entry line
+    // the path list is driver-held in either census regime (the paths
+    // ARE the read arguments — the same bound Delta's scan planning
+    // carries); above the threshold the PARSE runs in executors
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = censusFiles(spark, dir, version, conf)(_ => true, identity)
+    val files = census(spark, Seq(dir -> version)).collect(0, e => Some(e.file))
     require(files.nonEmpty,
       s"manifest v$version of $dir is empty - nothing to read")
     // a widened append (new column on later commits) must surface the
@@ -2795,7 +2623,7 @@ object Manifest {
     val reader =
       if (h.schema.nonEmpty) spark.read.schema(parseSchema(h.schema))
       else spark.read.option("mergeSchema", "true")
-    reader.parquet(files.map(f => filePath(dir, Entry("", f))): _*)
+    reader.parquet(files.map(filePath(dir, _)): _*)
   }
 
   /** Latest-snapshot read (pins the version at CALL time; lazy execution
@@ -2816,14 +2644,12 @@ object Manifest {
     */
   def readPartitions(spark: SparkSession, dir: String,
       values: Seq[String]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val want = values.toSet
-    val hit = censusFiles(spark, dir, latestVersion(spark, dir), conf)(
-      e => want(e.p), _.filter(col("p").isInCollection(want)))
+    val hit = census(spark, Seq(dir -> latestVersion(spark, dir)))
+      .collect(0, e => Option.when(want(e.p))(e.file))
     require(hit.nonEmpty,
       s"readPartitions: no manifest entry for any of $values in $dir")
-    spark.read.option("mergeSchema", "true")
-      .parquet(hit.map(f => filePath(dir, Entry("", f))): _*)
+    readFiles(spark, dir, hit)
   }
 
   /** DATA-SKIPPING range read over the tracked stats column: only
@@ -2837,35 +2663,15 @@ object Manifest {
     */
   def readRange(spark: SparkSession, dir: String, lo: Long,
       hi: Long): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val v = latestVersion(spark, dir)
-    val hit: Seq[String] =
-      if (driverCensus(spark, dir, v, conf)) {
-        val entries = readManifest(dir, v, conf)
-        require(entries.exists(_.lo.isDefined),
-          s"readRange: $dir tracks no file stats (build it with statsCol) " +
-            "- a range read here would be a silent full scan")
-        entries.filter(e => (e.lo, e.hi) match {
-          case (Some(l), Some(h)) => l <= hi && h >= lo
-          case _ => true // all-null stats: membership unknown, include
-        }).map(_.file)
-      } else {
-        // executors run the stats filter over the entry relation (the
-        // checkpoint when fresh); the driver sees only the hit list
-        val er = entriesRelation(spark, dir, v).persist()
-        try {
-          require(er.filter(col("lo").isNotNull).limit(1).count() > 0,
-            s"readRange: $dir tracks no file stats (build it with " +
-              "statsCol) - a range read here would be a silent full scan")
-          er.filter(col("lo").isNull ||
-              (col("lo") <= hi && col("hi") >= lo))
-            .select("file").collect().map(_.getString(0)).toSeq
-        } finally er.unpersist()
-      }
+    val c = census(spark, Seq(dir -> latestVersion(spark, dir)))
+    require(c.collect(0, _.lo.map(_ => true), 1).nonEmpty,
+      s"readRange: $dir tracks no file stats (build it with statsCol) " +
+        "- a range read here would be a silent full scan")
+    val hit = c.collect(0, e => Option.when(overlaps(e.lo, e.hi, lo, hi))(
+      e.file))
     require(hit.nonEmpty,
       s"readRange: no file intersects [$lo,$hi] in $dir")
-    spark.read.option("mergeSchema", "true")
-      .parquet(hit.map(f => filePath(dir, Entry("", f))): _*)
+    readFiles(spark, dir, hit)
   }
 
   /** Z-ORDER CLUSTERED rewrite — liquid-clustering for the manifest
@@ -2922,43 +2728,17 @@ object Manifest {
     */
   def readRange2(spark: SparkSession, dir: String, loA: Long, hiA: Long,
       loB: Long, hiB: Long): (DataFrame, Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val v = latestVersion(spark, dir)
-    val (hit: Seq[String], total: Int) =
-      if (driverCensus(spark, dir, v, conf)) {
-        val entries = readManifest(dir, v, conf)
-        require(entries.exists(_.lo2.isDefined),
-          s"readRange2: $dir tracks no second-dimension stats - cluster " +
-            "it with clusterZOrder first (a box read would be a full scan)")
-        def hits(lo: Option[Long], hi: Option[Long], l: Long, h: Long) =
-          (lo, hi) match {
-            case (Some(a), Some(b)) => a <= h && b >= l
-            case _ => true
-          }
-        (entries.filter(e =>
-            hits(e.lo, e.hi, loA, hiA) && hits(e.lo2, e.hi2, loB, hiB))
-          .map(_.file), entries.length)
-      } else {
-        val er = entriesRelation(spark, dir, v).persist()
-        try {
-          require(er.filter(col("lo2").isNotNull).limit(1).count() > 0,
-            s"readRange2: $dir tracks no second-dimension stats - " +
-              "cluster it with clusterZOrder first (a box read would be " +
-              "a full scan)")
-          val n = er.count().toInt
-          val files = er.filter(
-              (col("lo").isNull || (col("lo") <= hiA && col("hi") >= loA))
-                && (col("lo2").isNull ||
-                  (col("lo2") <= hiB && col("hi2") >= loB)))
-            .select("file").collect().map(_.getString(0)).toSeq
-          (files, n)
-        } finally er.unpersist()
-      }
+    val c = census(spark, Seq(dir -> v))
+    require(c.collect(0, _.lo2.map(_ => true), 1).nonEmpty,
+      s"readRange2: $dir tracks no second-dimension stats - cluster " +
+        "it with clusterZOrder first (a box read would be a full scan)")
+    val hit = c.collect(0, e => Option.when(overlaps(e.lo, e.hi, loA, hiA) &&
+      overlaps(e.lo2, e.hi2, loB, hiB))(e.file))
     val df =
       if (hit.isEmpty) readVersion(spark, dir, v).limit(0)
-      else spark.read.option("mergeSchema", "true")
-        .parquet(hit.map(f => filePath(dir, Entry("", f))): _*)
-    (df, hit.length, total)
+      else readFiles(spark, dir, hit)
+    (df, hit.length, c.size(0).toInt)
   }
 
   /** Small-file COMPACTION as one atomic commit: each partition's rows
@@ -3037,11 +2817,13 @@ object Manifest {
     * Returns (data files deleted, manifests deleted, DV deltas deleted).
     *
     * Scale shape: the keep census (latest entries + every branch
-    * version's entries — the table-file-count-sized piece) runs on the
-    * driver below the census threshold and as a distributed anti-join
-    * over `entriesRelation` above it — and above the threshold the
-    * DISK side distributes too: the driver lists only the first-level
-    * commit directories (version-count-sized), a Spark job lists each
+    * version's entries — the table-file-count-sized piece) is one
+    * `census`: a driver set below the threshold, a relation for the
+    * distributed anti-join above it — and above the threshold the
+    * DISK side distributes too (this listing is the one regime choice
+    * outside `census`, a directory walk rather than an entry census):
+    * the driver lists only the first-level commit directories
+    * (version-count-sized), a Spark job lists each
     * commit's files in the executors, the doomed anti-join stays a
     * relation end to end, and the deletes fan out via
     * `foreachPartition` (the Delta-vacuum shape: at 10^7 files a
@@ -3061,10 +2843,15 @@ object Manifest {
     var dataDeleted = 0L
     val dataRoot = new Path(s"$dir/data")
     if (f.exists(dataRoot)) {
-      val small = driverCensus(spark, dir, latest, conf) &&
-        branchVs.forall { case (bdir, v) =>
-          driverCensus(spark, bdir, v, conf) }
-      if (small) {
+      // keep census: the latest entries plus the relative form of every
+      // absolute path a branch version holds under `dir`
+      val legs = (dir -> latest) +: branchVs
+      val c = census(spark, legs)
+      val keeps = legs.indices.map(i => c.keys(i, e =>
+        if (i == 0) Some(e.file)
+        else Option.when(e.file.startsWith(s"$dir/"))(
+          e.file.stripPrefix(s"$dir/"))))
+      if (c.small) {
         // gate-scale path: one driver walk, zero Spark jobs
         val it = f.listFiles(dataRoot, true)
         val qualifiedDir = f.makeQualified(new Path(dir)).toString
@@ -3074,14 +2861,7 @@ object Manifest {
           .map(_.getPath.toString.stripPrefix(qualifiedDir).stripPrefix("/"))
           .filter(_.endsWith(".parquet"))
           .toVector
-        // relative form of every absolute path a branch holds here
-        val branchKeep = for {
-          (bdir, v) <- branchVs
-          e <- readManifest(bdir, v, conf)
-          if e.file.startsWith(s"$dir/")
-        } yield e.file.stripPrefix(s"$dir/")
-        val keep = readManifest(dir, latest, conf).map(_.file).toSet ++
-          branchKeep
+        val keep = keeps.collect { case Left(k) => k }.flatten.toSet
         val doomed = listed.filterNot(keep)
         doomed.foreach(rel => f.delete(new Path(s"$dir/$rel"), false))
         dataDeleted = doomed.length.toLong
@@ -3125,16 +2905,8 @@ object Manifest {
                 .filter(_.endsWith(".parquet"))
             }.toDF("file"))
           .unionAll(topFiles.toDF("file"))
-        val keepDF = (entriesRelation(spark, dir, latest)
-            .select("file") +:
-          branchVs.map { case (bdir, v) =>
-            entriesRelation(spark, bdir, v)
-              .select(col("file"))
-              .filter(col("file").startsWith(s"$dir/"))
-              .select(col("file")
-                .substr(lit(dir.length + 2), length(col("file")))
-                .as("file"))
-          }).reduce(_ unionAll _)
+        val keepDF = keeps.collect { case Right(k) => k.toDF("file") }
+          .reduce(_ unionAll _)
         // per-commit-dir census rides the same listing: a commit dir
         // whose listed files are ALL doomed (or that holds none) is
         // dropped after the file deletes — no second recursive walk

@@ -1042,8 +1042,8 @@ object ChangeDataQueries {
     // DESCRIBE DETAIL — the table-level inspection verb (history shows
     // the trail, detail shows the current shape): version + op from
     // the header, file count header-carried (zero entry parsing),
-    // partition count from the DISTRIBUTED entry relation (q387's
-    // read path), DV-delta and checkpoint-coverage counts. Reached
+    // partition count from an entry census (q387's read path above
+    // the census threshold), DV-delta and checkpoint-coverage counts. Reached
     // through SQL text (graft_detail). The deterministic columns are
     // oracle-pinned; the parallelism-dependent file count is refereed
     // in-gate against the entry relation (N_FILES_DIVERGED).

@@ -796,6 +796,24 @@ class ManifestSpec extends SparkSpec {
       Manifest.readRange2(spark, dir2, 0L, 1L, 0L, 1L)
     }
     assert(e.getMessage.contains("clusterZOrder"))
+    // the same three box reads and the loud check through the
+    // distributed census (threshold 0): rows, listed and total agree
+    val boxes = Seq((0L, 63L, 0L, 63L), (0L, 63L, 0L, 255L),
+      (0L, 255L, 0L, 63L))
+    def readBoxes() = boxes.map { case (la, ha, lb, hb) =>
+      val (df, l, t) = Manifest.readRange2(spark, dir, la, ha, lb, hb)
+      (df.select("id").as[Long].collect().sorted.toSeq, l, t)
+    }
+    val viaDriver = readBoxes()
+    spark.conf.set("graft.manifest.driverCensusMaxFiles", "0")
+    try {
+      assert(readBoxes() === viaDriver,
+        "distributed readRange2 diverged from the driver census")
+      val e2 = intercept[IllegalArgumentException] {
+        Manifest.readRange2(spark, dir2, 0L, 1L, 0L, 1L)
+      }
+      assert(e2.getMessage.contains("clusterZOrder"))
+    } finally spark.conf.unset("graft.manifest.driverCensusMaxFiles")
   }
 
   test("mergeBatch: a replayed batch id applies nothing") {
@@ -1052,8 +1070,9 @@ class ManifestSpec extends SparkSpec {
     // the same flow twice: dirD under the default driver census, dirX
     // with graft.manifest.driverCensusMaxFiles=0 so EVERY census and
     // carry-forward commit routes through entriesRelation + the
-    // streaming writer — content, history, and skipping must agree
-    def flow(dir: String): Unit = {
+    // streaming writer — content, history, skipping and the verbs'
+    // return values must agree
+    def flow(dir: String): (Boolean, Int) = {
       Manifest.create(fixture, dir, "grp", statsCol = "id")
       Manifest.append(fixture.filter($"id" === 1L)
         .withColumn("id", lit(11L)), dir, "grp", statsCol = "id")
@@ -1069,9 +1088,11 @@ class ManifestSpec extends SparkSpec {
           (3L, "b", 0.0, true)).toDF("id", "grp", "value", "del"),
         Seq("id"), deleteCol = "del")
       Manifest.deleteRows(spark, dir, $"id" === 6L)
-      assert(Manifest.applyDeletes(spark, dir, "grp"))
-      assert(Manifest.autoCompact(spark, dir, "grp",
-        maxFilesPerPartition = 1) >= 0)
+      val applied = Manifest.applyDeletes(spark, dir, "grp")
+      assert(applied)
+      val compacted = Manifest.autoCompact(spark, dir, "grp",
+        maxFilesPerPartition = 1)
+      assert(compacted >= 0)
       // no-match streamed delete still stamps; a matching one deletes
       assert(!Manifest.deleteKeysBatch(spark, dir,
         Seq(12345L).toDF("id"), Seq("id"), batchId = 3L))
@@ -1084,13 +1105,17 @@ class ManifestSpec extends SparkSpec {
         .withColumn("grp", lit("z")), bdir, "grp")
       Manifest.branchMergeInto(spark, dir, "dev")
       Manifest.vacuum(spark, dir)
+      (applied, compacted)
     }
     val dirD = mkdir()
-    flow(dirD)
+    val resultsD = flow(dirD)
     val dirX = mkdir()
     spark.conf.set("graft.manifest.driverCensusMaxFiles", "0")
-    try flow(dirX)
-    finally spark.conf.unset("graft.manifest.driverCensusMaxFiles")
+    val resultsX = try flow(dirX)
+      finally spark.conf.unset("graft.manifest.driverCensusMaxFiles")
+    assert(resultsX === resultsD,
+      "applyDeletes / autoCompact (partitions compacted) returned " +
+        "different results under the distributed census")
     def content(dir: String) = Manifest.readWithDeletes(spark, dir)
       .drop("__file", "__pos").collect().map(_.toString).sorted.toSeq
     assert(content(dirX) === content(dirD),
@@ -1152,11 +1177,22 @@ class ManifestSpec extends SparkSpec {
         "an all-indexed refresh must converge to a no-op")
       // zero false negatives on every present key, through the
       // distributed probe path
-      (Seq(1L, 2L, 3L, 4L, 5L, 6L, 11L)).foreach { id =>
-        val (df, _, _) = Manifest.readPoint(spark, dir, "id", id)
+      val ids = Seq(1L, 2L, 3L, 4L, 5L, 6L, 11L)
+      val counts = ids.map { id =>
+        val (df, listed, total) = Manifest.readPoint(spark, dir, "id", id)
         assert(df.filter($"id" === id).count() === 1L,
           s"bloom point read lost id=$id")
+        (listed, total)
       }
+      // and each point read lists the same files as the driver census
+      spark.conf.unset("graft.manifest.driverCensusMaxFiles")
+      val viaDriver = try ids.map { id =>
+        val (_, listed, total) = Manifest.readPoint(spark, dir, "id", id)
+        (listed, total)
+      } finally spark.conf.set("graft.manifest.driverCensusMaxFiles", "0")
+      assert(counts === viaDriver,
+        "distributed readPoint (listed, total) diverged from the driver " +
+          "census")
       assert(Manifest.addDistinctSketch(spark, dir, "id", k = 64))
       assert(!Manifest.addDistinctSketch(spark, dir, "id", k = 64))
       val (est, _) = Manifest.approxDistinct(spark, dir)
@@ -1347,6 +1383,65 @@ class ManifestSpec extends SparkSpec {
     assert(bytes(dirX) === bytes(dirD),
       "the distributed-census commit writer produced different manifest " +
         "bytes than the driver writer for identical logical content")
+  }
+
+  test("the driver census regime launches zero Spark jobs: restore, " +
+      "changedPartitions, a no-op autoCompact and approxDistinct") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("zero-jobs-sentinel")) match {
+          case Some(tag) => seen.add(tag)
+          case None => jobs.incrementAndGet()
+        }
+    }
+    // the listener bus delivers in order: once a tagged sentinel job's
+    // start is seen, every job launched before it has been counted
+    var sentinels = 0
+    def drain(): Unit = {
+      sentinels += 1
+      val tag = s"zero-jobs-sentinel-$sentinels"
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(tag) && System.nanoTime() < deadline)
+        Thread.sleep(10L)
+      assert(seen.contains(tag), s"listener never saw $tag")
+    }
+    def jobsDuring(body: => Any): Long = {
+      drain()
+      val before = jobs.get()
+      body
+      drain()
+      jobs.get() - before
+    }
+    val dir = mkdir()
+    Manifest.create(fixture, dir, "grp")
+    Manifest.append(fixture.filter($"id" === 1L)
+      .withColumn("id", lit(11L)), dir, "grp")
+    assert(Manifest.addDistinctSketch(spark, dir, "id", k = 16))
+    val conf = sc.hadoopConfiguration
+    sc.addSparkListener(listener)
+    try {
+      // the counter is live: a real query registers
+      assert(jobsDuring(spark.range(3).count()) >= 1L)
+      assert(jobsDuring(Manifest.restore(spark, dir, 3)) === 0L,
+        "restore of a small layout launched Spark jobs")
+      val v = Manifest.latestVersion(dir, conf)
+      assert(jobsDuring(assert(Manifest.changedPartitions(spark, dir, 1, v,
+        conf) === Set("a"))) === 0L,
+        "changedPartitions of a small layout launched Spark jobs")
+      assert(jobsDuring(assert(Manifest.autoCompact(spark, dir, "grp") === 0))
+        === 0L, "a no-op autoCompact of a small layout launched Spark jobs")
+      assert(jobsDuring(assert(Manifest.approxDistinct(spark, dir)._1 === 7.0))
+        === 0L, "approxDistinct of a small layout launched Spark jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   // ---- Header schema tracking (round 18) -----------------------------
