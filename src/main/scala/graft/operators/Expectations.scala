@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * Great-Expectations / dbt-test capability) compiled into the minimum
   * number of passes instead of one job per check (the N+1 trap the
   * reference's quality checker fell into, fixed once already in
-  * `pipeline.Quality.profile`):
+  * `pipeline.Quality.profile`, whose one aggregate also yields the
+  * duplicate count):
   *
   *   - every ROW-LOCAL check (not-null, range, regex, set-membership)
   *     fuses into ONE aggregate over ONE scan — adding a check adds a

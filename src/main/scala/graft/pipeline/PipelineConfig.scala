@@ -41,7 +41,6 @@ final case class SinkConfig(
 final case class PipelineConfig(
     appName: String,
     ingest: IngestConfig,
-    shufflePartitions: Int,
     datasets: Seq[(String, DatasetSpec)],
     quality: QualityConfig,
     sink: SinkConfig,
@@ -75,7 +74,6 @@ object PipelineConfig {
           .asScala.toSeq.map(String.valueOf),
         multiLine = Option(ing.get("multi_line"))
           .forall(v => String.valueOf(v).toBoolean)),
-      shufflePartitions = String.valueOf(section("spark").get("shuffle_partitions")).toInt,
       datasets = section("datasets").asScala.toSeq.map { case (name, spec) =>
         val m = spec.asInstanceOf[JMap[String, AnyRef]]
         name -> DatasetSpec(

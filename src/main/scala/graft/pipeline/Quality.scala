@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * src/quality_checks.py:31-130).
   *
   * Scale note: the reference profiles nulls as N+1 separate count jobs
-  * (one full scan per column). Here the row count and every per-column
-  * null fraction fuse into ONE aggregate job — identical report
+  * (one full scan per column) and counts duplicates with two more. Here
+  * the row count, the distinct-row count and every per-column null
+  * fraction fuse into ONE aggregate execution — identical report
   * semantics, O(columns) fewer scans; at 100 TB the difference is the
   * feasibility of the QC pass.
   */
@@ -53,23 +54,33 @@ object Quality {
     */
   private def nullOrEmpty(c: String): Column = col(c).isNull || col(c) === ""
 
-  /** Row count + per-column null/empty fractions in a single aggregate
-    * job (the reference's A8 fused from N+1 jobs into 1).
+  /** Rows, distinct rows and per-column null/empty fractions of a frame. */
+  final case class Profile(rows: Long, distinct: Long, nullFractions: Seq[(String, Double)])
+
+  /** The reference's A8 and A5 from ONE aggregate execution: group by
+    * every column with a per-group count `n` (distinct's own plan, so
+    * nulls group and floats normalise exactly as in `distinct`), then
+    * fold the groups — rows = Σn, distinct = #groups, and a column's
+    * null/empty rows = Σn over the groups where it is null or empty.
     */
-  def profile(df: DataFrame): (Long, Seq[(String, Double)]) = {
-    val aggs = count(lit(1)).as("__rows") +:
-      df.columns.toSeq.map(c =>
-        sum(when(nullOrEmpty(c), 1L).otherwise(0L)).as(s"__n_$c"))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val total = row.getAs[Long]("__rows")
-    val fracs = df.columns.toSeq.map { c =>
-      c -> (if (total == 0) 0.0 else row.getAs[Long](s"__n_$c").toDouble / total)
-    }
-    (total, fracs)
+  def profile(df: DataFrame): Profile = {
+    val cols = df.columns.toSeq
+    def total(c: Column): Column = coalesce(sum(c), lit(0L))
+    val aggs = total(col("__n")) +: count(lit(1)) +:
+      cols.map(c => total(when(nullOrEmpty(c), col("__n"))))
+    val row = df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__n"))
+      .agg(aggs.head, aggs.tail: _*).head()
+    val rows = row.getLong(0)
+    Profile(rows, row.getLong(1), cols.zipWithIndex.map { case (c, i) =>
+      c -> (if (rows == 0) 0.0 else row.getLong(i + 2).toDouble / rows)
+    })
   }
 
   /** Full-row duplicate count: total - distinct (A5). */
-  def countDuplicateRows(df: DataFrame): Long = df.count() - df.distinct().count()
+  def countDuplicateRows(df: DataFrame): Long = {
+    val p = profile(df)
+    p.rows - p.distinct
+  }
 
   /** Subset duplicate count: number of key GROUPS with >1 row (A6 —
     * deliberately a different number than countDuplicateRows; both
@@ -79,31 +90,32 @@ object Quality {
     df.groupBy(subset.map(col): _*).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).count()
 
-  /** Full QC pass: enforce → profile (one job) → duplicate check →
-    * optional dropDuplicates → cache + typed view registration.
-    * Returns the typed frame and the report; like the reference,
-    * findings are reported, not thrown (fail_on_schema_mismatch=false
-    * by default).
+  /** Full QC pass: enforce → profile (one aggregate: rows, nulls and
+    * duplicates) → optional dropDuplicates → cache + typed view
+    * registration. Returns the typed frame and the report; like the
+    * reference, findings are reported, not thrown
+    * (fail_on_schema_mismatch=false by default).
     */
   def run(df: DataFrame, key: String, spec: DatasetSpec,
           cfg: QualityConfig): (DataFrame, QualityReport) = {
     val (typed0, schemaOk, schemaIssues) = enforceSchema(df, spec.schema, cfg.failOnSchemaMismatch)
-    // Cache BEFORE the QC actions: profile, duplicate check, and the
-    // final count otherwise each re-parse the CSV (the reference cached
-    // after dedup and paid three extra scans per dataset).
+    // Cache BEFORE the QC aggregate: it and every downstream consumer
+    // otherwise each re-parse the CSV (the reference cached after dedup
+    // and paid three extra scans per dataset).
     typed0.cache()
-    val (rows0, fracs) = profile(typed0)
-    val dupCount = rows0 - typed0.distinct().count()
+    val Profile(rows0, distinct, fracs) = profile(typed0)
+    val dupCount = rows0 - distinct
 
     // On dedup: materialize the replacement's cache BEFORE releasing the
-    // parent, or the later count would recompute from the raw source.
+    // parent, or its first reader would recompute from the raw source.
+    // Its row count is the distinct count already in hand.
     val (typed, rowCount) =
       if (dupCount > 0 && cfg.dropDuplicates) {
         val deduped = typed0.dropDuplicates()
         deduped.cache()
-        val n = deduped.count()
+        deduped.count()
         typed0.unpersist()
-        (deduped, n)
+        (deduped, distinct)
       } else (typed0, rows0)
 
     val nullIssues = fracs.collect {

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import graft.GraftSession
 import graft.operators.Par
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** End-to-end retail pipeline orchestrator (reference lifecycle §3:
   * acquire → scan → quality gate → transform → sink; reference
@@ -57,38 +58,24 @@ object RetailPipeline {
       byKey("train"), byKey("features"), byKey("stores"),
       cfg.datasets.toMap)
 
-    // The four table writes land in distinct locations and all read the
-    // persisted curated frame — independent jobs, run concurrently.
-    // The first write materializes the shared persist; do it alone so
-    // the others reuse the cache instead of racing to fill it.
+    // The four table writes land in distinct locations and run at once.
+    // Each table's row count is observed inside its own write (the
+    // write's job collects the Observation), so no count job and no
+    // per-table persist. The observe is the TOP node of the written frame
+    // — above each aggregate's orderBy, whose range-partitioner sampling
+    // job would otherwise feed the count too. The curated frame stays
+    // persisted by Transform; writes first touching the same cached
+    // partition wait on Spark's block write lock while one computes it.
     val sink = TableSink.from(cfg.sink)
-    val sinkTables = cfg.sink.tables.flatMap { case (logical, physical) =>
-      curated.get(logical).map(df => (physical, df))
-    }
-    val written = sinkTables match {
-      case head +: tail =>
-        def writeOne(physical: String, df: DataFrame): (String, Long) = {
-          // The write itself materializes the frame; persisting first
-          // means the post-write row count is a cache read instead of
-          // re-running the aggregation from the curated frame (three
-          // redundant jobs on q44's critical path otherwise). The big
-          // curated table is already persisted by Transform — don't
-          // double-cache it, and drop the short-lived caches once
-          // counted.
-          val wasCached =
-            df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-          if (!wasCached) df.persist()
-          try {
-            sink.write(physical, df)
-            val n = df.count()
-            log.info(s"Sink $physical: $n rows")
-            physical -> n
-          } finally if (!wasCached) df.unpersist(blocking = false)
-        }
-        val first = writeOne(head._1, head._2)
-        first +: Par.all(tail.map { case (p, df) => () => writeOne(p, df) })
-      case _ => Seq.empty
-    }
+    val written = Par.all(cfg.sink.tables.flatMap { case (logical, physical) =>
+      curated.get(logical).map { df => () =>
+        val rows = Observation()
+        sink.write(physical, df.observe(rows, count(lit(1)).as("n")))
+        val n = rows.get("n").asInstanceOf[Long]
+        log.info(s"Sink $physical: $n rows")
+        physical -> n
+      }
+    })
 
     log.info("Pipeline complete")
     Result(gated.map(_._3), curated, written)

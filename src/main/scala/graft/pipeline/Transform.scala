@@ -73,7 +73,7 @@ object Transform {
       col("cpi"), col("unemployment_rate"),
       col("store_type"), col("store_size"))
       // Materialize-once: every downstream consumer (three aggregates,
-      // four sink writes, the written-row counts, q54's full-table read)
+      // four sink writes, q54's full-table read)
       // derives from this frame — without the persist each one re-runs
       // the joins. MEMORY_AND_DISK (the Dataset default) spills rather
       // than OOMs when the curated table outgrows executor memory; a

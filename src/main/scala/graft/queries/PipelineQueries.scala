@@ -24,9 +24,9 @@ object PipelineQueries {
     * and the Spark query must run first (Verify does run queries before
     * the oracles execute). Known blind spot: the oracle aggregates the
     * raw CSVs without the quality gate's dropDuplicates — equivalent
-    * today because the retail CSVs contain no full-row duplicates; a
-    * dedup-affecting change would surface in RetailPipelineSpec's
-    * goldens instead.
+    * today because the retail CSVs contain no full-row duplicates. The
+    * dedup path is pinned instead by RetailPipelineLocalSpec, which
+    * plants a full-row duplicate in generated raw files.
     */
   private val workDir = "/tmp/graft_retail_q44"
 

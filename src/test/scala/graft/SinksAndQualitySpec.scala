@@ -73,7 +73,8 @@ class SinksAndQualitySpec extends SparkSpec {
     val base = Files.createDirectories(Paths.get("target/guard_spec"))
     val dir = Files.createTempDirectory(base, "occupied")
     Files.writeString(dir.resolve("precious.txt"), "user data")
-    val cfg = IngestConfig(rawDir = "/root/reference/data/raw",
+    val raw = RetailRaw.write(Files.createTempDirectory("retail_raw"))
+    val cfg = IngestConfig(rawDir = raw.toString,
       workDir = dir.toString, filePatterns = Seq("train.csv"))
     val ex = intercept[IllegalArgumentException](Ingest.acquire(cfg))
     assert(ex.getMessage.contains("refusing to rebuild"))
@@ -99,8 +100,8 @@ class SinksAndQualitySpec extends SparkSpec {
     val df = Seq(
       (Some("x"), Some(1)), (Some(""), Some(2)), (None: Option[String], None: Option[Int])
     ).toDF("s", "n")
-    val (rows, fracs) = Quality.profile(df)
-    assert(rows === 3L)
+    val Quality.Profile(rows, distinct, fracs) = Quality.profile(df)
+    assert(rows === 3L && distinct === 3L)
     val m = fracs.toMap
     assert(math.abs(m("s") - 2.0 / 3) < 1e-9) // "" and null
     assert(math.abs(m("n") - 1.0 / 3) < 1e-9) // only null
