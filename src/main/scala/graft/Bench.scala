@@ -1,6 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.time.Instant
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Per-round benchmark main. Runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line:
@@ -35,8 +42,89 @@ import org.apache.spark.sql.SparkSession
   *     cost would cross the budget, the run stops with the samples it
   *     has instead of being killed mid-battery. A query measured in
   *     fewer passes still reports the median of its own samples.
+  *
+  * PROFILE: every query sample (warm-up included) also gets one line in
+  * `profile_latest.jsonl` — its Spark job count, summed job time, driver
+  * gap (`driverGap`) and, for stream drains, the summed
+  * `StreamingQueryProgress.durationMs` phases of the micro-batches it
+  * triggered. A full run writes it and the JSON archives under `bench/`;
+  * a prefix run writes only under `target/`.
   */
 object Bench {
+
+  /** Local property naming the sample a Spark job belongs to. Set on the
+    * bench thread around each sample; `Par.all` chains and stream
+    * execution threads start under it and inherit it, so a job is
+    * attributed by who submitted it, not by when its event arrives.
+    */
+  private val SampleKey = "graft.bench.sample"
+
+  /** One timed (or warm-up) run of one query; the window is on the
+    * wall clock the listener bus stamps its job events with.
+    */
+  private final case class Sample(query: String, pass: String,
+      startMs: Long, endMs: Long, ok: Boolean)
+
+  /** Milliseconds of `[start, end]` that no job interval covers: the
+    * driver's share of a sample (planning, metadata IO, collects and
+    * waits between jobs). Overlapping intervals, as concurrent `Par.all`
+    * chains produce, count once; intervals are clipped to the window.
+    */
+  def driverGap(start: Long, end: Long, jobs: Seq[(Long, Long)]): Long = {
+    val clipped = jobs.map { case (a, b) => (math.max(a, start), math.min(b, end)) }
+      .filter { case (a, b) => a < b }.sortBy(_._1)
+    val (covered, _) = clipped.foldLeft((0L, start)) {
+      case ((sum, reach), (a, b)) =>
+        if (b <= reach) (sum, reach) else (sum + b - math.max(a, reach), b)
+    }
+    end - start - covered
+  }
+
+  /** Job intervals by sample and every stream progress, as the listener
+    * bus delivers them. Stream progress comes through `onOtherEvent`:
+    * drains run on `Scoped` clones, whose own `StreamingQueryManager`s a
+    * listener on the bench session would not hear.
+    */
+  private final class ProfileListener extends SparkListener {
+    val jobStarts = new ConcurrentHashMap[Int, (Int, Long)]()
+    val jobEnds = new ConcurrentHashMap[Int, Long]()
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(SampleKey)))
+        .foreach(s => jobStarts.put(e.jobId, (s.toInt, e.time)))
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobEnds.put(e.jobId, e.time)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case p: StreamingQueryListener.QueryProgressEvent => progress.add(p.progress)
+      case _ =>
+    }
+  }
+
+  /** One JSON line per sample; read after `spark.stop()` has drained
+    * the listener bus.
+    */
+  private def profileLines(samples: Seq[Sample], l: ProfileListener): Seq[String] = {
+    val jobs = l.jobStarts.asScala.toSeq.groupMap(_._2._1) { case (id, (_, t0)) =>
+      (t0, Option(l.jobEnds.get(id)).getOrElse(t0))
+    }
+    val progress = l.progress.asScala.toSeq
+      .map(p => (Instant.parse(p.timestamp).toEpochMilli, p))
+    samples.zipWithIndex.map { case (s, i) =>
+      val js = jobs.getOrElse(i, Nil)
+      val batches = progress.collect {
+        case (t, p) if t >= s.startMs && t <= s.endMs => p
+      }
+      val phases = batches.flatMap(_.durationMs.asScala.toSeq)
+        .groupMapReduce(_._1)(_._2.longValue)(_ + _).toSeq.sorted
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      f"""{"query":"${s.query}","pass":"${s.pass}","ok":${s.ok},""" +
+        f""""wall_s":${(s.endMs - s.startMs) / 1e3}%.3f,"jobs":${js.size},""" +
+        f""""job_s":${js.map { case (a, b) => b - a }.sum / 1e3}%.3f,""" +
+        f""""driver_gap_s":${driverGap(s.startMs, s.endMs, js) / 1e3}%.3f,""" +
+        f""""stream_batches":${batches.size},"stream_phases_ms":$phases}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val t0Wall = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - t0Wall) / 1e9
@@ -47,14 +135,24 @@ object Bench {
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "2100").toDouble
     val spark: SparkSession = GraftSession.get("graft-bench")
+    val sc = spark.sparkContext
+    val listener = new ProfileListener
+    sc.addSparkListener(listener)
+    val profiled = scala.collection.mutable.ArrayBuffer.empty[Sample]
 
     def run(name: String,
-            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+            pass: String): (Double, Boolean) = {
+      sc.setLocalProperty(SampleKey, profiled.size.toString)
+      val startMs = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}"); false }
-      ((System.nanoTime() - t0) / 1e9, ok)
+      val wall = (System.nanoTime() - t0) / 1e9
+      profiled += Sample(name, pass, startMs, System.currentTimeMillis(), ok)
+      sc.setLocalProperty(SampleKey, null)
+      (wall, ok)
     }
 
     // Untimed warm-up: exercises scan + shuffle + codegen paths once so
@@ -149,7 +247,6 @@ object Bench {
       val hist = java.nio.file.Paths.get("bench", "bench_history.jsonl")
       val runs: Seq[Map[String, Double]] =
         if (java.nio.file.Files.exists(hist)) {
-          import scala.jdk.CollectionConverters._
           java.nio.file.Files.readAllLines(hist).asScala.toSeq.map(parse)
         } else {
           val p = java.nio.file.Paths.get("bench", "bench_latest.json")
@@ -167,7 +264,7 @@ object Bench {
       else {
         graft.queries.PipelineQueries.reset(spark)
         selected.filterNot { case (n, _) => preHeavy(n) }
-          .map { case (name, fn) => name -> run(name, fn)._1 }.toMap
+          .map { case (name, fn) => name -> run(name, fn, "warmup")._1 }.toMap
       }
     // HEAVY-LAST SCHEDULE (round 16 — BENCH_r15's driver run landed 76
     // single-sample heavies in a pass inflated ~2.3x by ambient load,
@@ -207,7 +304,7 @@ object Bench {
       warmTimes.getOrElse(n, priorTimes.getOrElse(n, heavySec * 2)) }.sum
     graft.queries.PipelineQueries.reset(spark)
     val pass1: Seq[(String, (Double, Boolean))] =
-      lightSel.map { case (name, fn) => (name, run(name, fn)) }
+      lightSel.map { case (name, fn) => (name, run(name, fn, "1")) }
     val postWarmHeavy: Set[String] =
       if (warmup) heavy
       else pass1.map { case (n, (t, _)) => n -> t }.toMap
@@ -231,7 +328,7 @@ object Bench {
     while (p <= runs && extraSel.nonEmpty &&
         elapsedSec + lightEst + heavyEst * 2.2 <= budgetSec) {
       graft.queries.PipelineQueries.reset(spark)
-      extra += extraSel.map { case (name, fn) => (name, run(name, fn)) }
+      extra += extraSel.map { case (name, fn) => (name, run(name, fn, s"$p")) }
       p += 1
     }
     // Heavy passes LAST: one always; a second when the budget admits it
@@ -241,12 +338,12 @@ object Bench {
       .empty[Seq[(String, (Double, Boolean))]]
     if (heavySel.nonEmpty) {
       graft.queries.PipelineQueries.reset(spark)
-      heavyPasses += heavySel.map { case (name, fn) => (name, run(name, fn)) }
+      heavyPasses += heavySel.map { case (name, fn) => (name, run(name, fn, "heavy1")) }
       val measured = heavyPasses.head.map(_._2._1).sum
       if (elapsedSec + measured * 1.15 <= budgetSec) {
         graft.queries.PipelineQueries.reset(spark)
         heavyPasses +=
-          heavySel.map { case (name, fn) => (name, run(name, fn)) }
+          heavySel.map { case (name, fn) => (name, run(name, fn, "heavy2")) }
       }
     }
     val passes: Seq[Seq[(String, (Double, Boolean))]] =
@@ -271,31 +368,34 @@ object Bench {
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errors,"runs":$runs,"passes_run":${passes.size},"n_heavy_once":${postWarmHeavy.size},"n_preclassified_heavy":${preHeavy.size},"heavy_passes":${heavyPasses.size},"heavy_sec":$heavySec%.1f,"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsedSec%.1f,"warmup":$warmup,"run_totals":$runTotals,"sf":"$sfDir"}"""
     // Self-archive: the driver captures a tail of stdout, which truncates
     // the battery prefix once the query map outgrows it — the full
-    // per-query record must survive on disk regardless. Two copies:
-    // target/ (scratch, latest only) and bench/ (IN-REPO — committed
-    // per round, so cross-round per-query history is auditable; the
-    // history file appends one stamped line per run).
-    try {
-      val archive = java.nio.file.Paths.get("target", "bench_latest.json")
-      java.nio.file.Files.createDirectories(archive.getParent)
-      java.nio.file.Files.writeString(archive, line + "\n")
-      val benchDir = java.nio.file.Paths.get("bench")
-      java.nio.file.Files.createDirectories(benchDir)
-      java.nio.file.Files.writeString(benchDir.resolve("bench_latest.json"),
-        line + "\n")
-      val stamped =
-        s"""{"ts":"${java.time.Instant.now()}",""" + line.stripPrefix("{")
-      java.nio.file.Files.writeString(
-        benchDir.resolve("bench_history.jsonl"), stamped + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] archive write failed: ${e.getMessage}")
+    // per-query record must survive on disk regardless. target/ (scratch,
+    // latest only) always; bench/ (IN-REPO — committed per round, so
+    // cross-round per-query history is auditable; the history file
+    // appends one stamped line per run) only for a full run: a prefix
+    // run's partial line would otherwise replace the committed record
+    // and feed the heavy pre-classification above.
+    def write(dir: String, name: String, text: String,
+              opts: StandardOpenOption*): Unit =
+      try {
+        Files.createDirectories(Paths.get(dir))
+        Files.writeString(Paths.get(dir, name), text, opts: _*)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $dir/$name write failed: ${e.getMessage}")
+      }
+    val full = args.isEmpty
+    write("target", "bench_latest.json", line + "\n")
+    if (full) {
+      write("bench", "bench_latest.json", line + "\n")
+      write("bench", "bench_history.jsonl",
+        s"""{"ts":"${Instant.now()}",""" + line.stripPrefix("{") + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
     try spark.stop()
     catch { case e: Throwable =>
       System.err.println(s"[bench] spark.stop failed: ${e.getMessage}")
     }
+    write(if (full) "bench" else "target", "profile_latest.jsonl",
+      profileLines(profiled.toSeq, listener).map(_ + "\n").mkString)
     // The ONE JSON line prints LAST, after every other stdout writer
     // (archive notes and Spark shutdown included) — PERF_r17 lost its
     // round-over-round comparison because the driver's stdout-tail

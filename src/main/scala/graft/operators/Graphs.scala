@@ -61,7 +61,7 @@ object Graphs {
     // join finds the edge side already clustered and exchanges only
     // the node-sized rank relation. A lineage cut cannot carry this:
     // under AQE, `localCheckpoint` surfaces UnknownPartitioning (plan
-    // evidence in plans/r18 via tools/GraphRoundPlan), which is exactly
+    // evidence: plans/r18/graph_round_join_variants.txt), which is exactly
     // why the rounds re-shuffled before. N is the session's
     // shuffle-partition setting (scale-adaptive, not a local constant).
     // Durability trade vs the old replicated checkpoint: an executor

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.expressions.ArrayOps
+import graft.operators.Checkpoints.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -430,7 +431,7 @@ object KnnGraph {
       dir: String, ids: DataFrame): Unit = {
     readMeta(dir, spark.sparkContext.hadoopConfiguration) // loud non-layout
     val keys = ids.select(col(ids.columns.head).cast("long").as("__kid"))
-      .localCheckpoint(true) // two substores + two passes share one eval
+      .cutLineage // two substores + two passes share one eval
     // vectors/ is disjoint from graph/ — it overlaps the graph's two
     // SEQUENTIAL passes (those rewrite the same files; order matters)
     Par.all(

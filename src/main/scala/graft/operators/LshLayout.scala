@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.expressions.{ArrayOps, TextOps}
+import graft.operators.Checkpoints.CutOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -218,7 +219,7 @@ object LshLayout {
   def purge(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
     readMeta(dir, spark.sparkContext.hadoopConfiguration) // loud non-layout
     val keys = ids.select(col(ids.columns.head).cast("long").as("id"))
-      .localCheckpoint(true) // both substore purges share one eval
+      .cutLineage // both substore purges share one eval
     // disjoint substores — the two victim-partition rewrites overlap
     Par.all(
       () => ChangeData.purgeRowsKeys(spark, s"$dir/keys", "bucket", keys,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Checkpoints.CutOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
@@ -1171,10 +1172,10 @@ object Manifest {
     val latest = latestVersion(dir, conf)
     require(latest >= 1, s"$dir is not a manifested layout")
     var replica = readWithDeletes(spark, dir, 1).drop("__file", "__pos")
-      .localCheckpoint(true)
+      .cutLineage
     (2 to latest).foreach { v =>
       val feed = changesBetween(spark, dir, v - 1, v)
-        .localCheckpoint(true)
+        .cutLineage
       val merged = replica
         .unionByName(feed.drop("_change").limit(0),
           allowMissingColumns = true).schema
@@ -1183,7 +1184,7 @@ object Manifest {
       replica = alignTo(replica, merged)
         .exceptAll(alignTo(dels, merged))
         .unionAll(alignTo(ins, merged))
-        .localCheckpoint(true)
+        .cutLineage
     }
     replica
   }
@@ -1227,7 +1228,7 @@ object Manifest {
       else coalesce(col(deleteCol).cast("boolean"), lit(false))
     val src = source.withColumn("__del", isDel)
       .withColumn("__sp", col(partCol).cast("string"))
-      .localCheckpoint(true)
+      .cutLineage
     val dupKeys = src.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
       .limit(1).count()
@@ -1259,7 +1260,7 @@ object Manifest {
     val incoming = src.filter(!col("__del"))
       .select(srcCols.map(col): _*)
     val next = keep.select(srcCols.map(col): _*).unionByName(incoming)
-      .localCheckpoint(true)
+      .cutLineage
     // (a partition the merge empties needs no explicit drop: the
     // commit below replaces ALL affected partitions' entries, and an
     // emptied one simply contributes no new files)
@@ -1483,7 +1484,7 @@ object Manifest {
           if (vs.length <= 1) Map.empty
           else vs.zip(Par.all(vs.map(v => () =>
             changesBetween(spark, srcDir, v - 1, v)
-              .localCheckpoint(true)))).toMap
+              .cutLineage))).toMap
         }
         todo.foreach { v =>
           if (v == 1) {
@@ -1493,7 +1494,7 @@ object Manifest {
           } else {
             val feed = feeds.getOrElse(v,
               changesBetween(spark, srcDir, v - 1, v)
-                .localCheckpoint(true))
+                .cutLineage)
             val affected = feed
               .select(col(partCol).cast("string").as("__pv")).distinct()
               .collect().map(_.getString(0)).toSet
@@ -1515,7 +1516,7 @@ object Manifest {
                 .getOrElse(alignTo(ins.limit(0), merged))
                 .exceptAll(alignTo(dels, merged))
                 .unionAll(alignTo(ins, merged))
-                .localCheckpoint(true)
+                .cutLineage
               val stillThere = next
                 .select(col(partCol).cast("string").as("__pv")).distinct()
                 .collect().map(_.getString(0)).toSet

@@ -15,17 +15,17 @@ import scala.util.Using
   */
 object Ingest {
 
-  /** Copy raw files into workDir, extract every zip (recursively — the
-    * Kaggle bundle contains nested csv.zips), then quarantine files
-    * matching no configured pattern into `_ignored/`. Returns the
-    * retained files. Idempotent: workDir is rebuilt on each call.
-    */
   /** Marker proving a directory was created by acquire() — the rebuild
     * delete refuses to touch any directory without it, so a config typo
     * pointing work_dir at real data fails loudly instead of erasing it.
     */
   private val WorkDirMarker = ".graft_workdir"
 
+  /** Copy raw files into workDir, extract every zip (recursively — the
+    * Kaggle bundle contains nested csv.zips), then quarantine files
+    * matching no configured pattern into `_ignored/`. Returns the
+    * retained files. Idempotent: workDir is rebuilt on each call.
+    */
   def acquire(cfg: IngestConfig): Seq[Path] = {
     val raw = Paths.get(cfg.rawDir)
     val work = Paths.get(cfg.workDir)

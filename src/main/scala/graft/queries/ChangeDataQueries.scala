@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Scoped, Tables}
 import graft.operators.{ChangeData, Par}
+import graft.operators.Checkpoints.CutOps
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture battery: snapshot diff, MERGE/upsert, and SCD
@@ -160,7 +161,7 @@ object ChangeDataQueries {
       var firstBatch: org.apache.spark.sql.DataFrame = null
       val q = inserts.writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          if (id == 0L) firstBatch = b.localCheckpoint(true)
+          if (id == 0L) firstBatch = b.cutLineage
           Manifest.commitBatch(viewOf(b), tmp, "c_mktsegment", id)
           ()
         }
@@ -716,7 +717,7 @@ object ChangeDataQueries {
       // materialization; the diff reads only it and the final layout
       // state, so it rides the final job as a lazy sentinel instead of
       // a driver-blocking count
-      val replica = Manifest.replicateFromFeed(s, tmp).localCheckpoint(true)
+      val replica = Manifest.replicateFromFeed(s, tmp).cutLineage
       val direct = Manifest.read(s, tmp)
       val diverged = replica.exceptAll(direct)
         .unionAll(direct.exceptAll(replica))
@@ -812,7 +813,7 @@ object ChangeDataQueries {
       val files2 = Manifest.read(s, tmp).inputFiles.toSet
       val n2 = Manifest.ttlSweep(s, tmp, "event_type", "ts", policy, asOf)
       val live = Manifest.readWithDeletes(s, tmp)
-        .drop("__file", "__pos").localCheckpoint(true)
+        .drop("__file", "__pos").cutLineage
       Manifest.applyDeletes(s, tmp, "dt")
       val applied = Manifest.read(s, tmp)
       // `live` is pinned pre-apply and `applied` reads the final layout
@@ -856,7 +857,7 @@ object ChangeDataQueries {
       val n1 = Manifest.deleteRows(s, tmp, col("user_id").isin(3L, 7L))
       val files2 = Manifest.read(s, tmp).inputFiles.toSet
       val live1 = Manifest.readWithDeletes(s, tmp)
-        .drop("__file", "__pos").localCheckpoint(true)
+        .drop("__file", "__pos").cutLineage
       val n2 = Manifest.deleteRows(s, tmp, col("event_type") === "error")
       // readWithDeletes pins its version at construction and this
       // gate never vacuums, so the stage-2/TT snapshots stay readable
@@ -954,7 +955,7 @@ object ChangeDataQueries {
       Manifest.append(extra, tmp, "dt")
       val conf = s.sparkContext.hadoopConfiguration
       // the distributed manifest parse, pinned BEFORE any checkpoint
-      val parsed = Manifest.entriesRelation(s, tmp).localCheckpoint(true)
+      val parsed = Manifest.entriesRelation(s, tmp).cutLineage
       val v = Manifest.checkpoint(s, tmp)
       val ckptStale = v != Manifest.latestVersion(tmp, conf) ||
         Manifest.lastCheckpoint(tmp, conf) != v ||
@@ -1062,7 +1063,7 @@ object ChangeDataQueries {
       Manifest.checkpoint(s, tmp)
       graft.GraftSession.tune(s)
       val d = s.sql(s"SELECT * FROM graft_detail('$tmp')")
-        .localCheckpoint(true)
+        .cutLineage
       val row = d.head()
       // final layout state — the entry-census cross-check rides the
       // final job as a lazy probe instead of a driver-blocking count
@@ -1401,7 +1402,7 @@ object ChangeDataQueries {
             GraftSql.run(s, stmt)
         }).head().getLong(0)
       val live = Manifest.readWithDeletes(s, tmp)
-        .drop("__file", "__pos").localCheckpoint(true)
+        .drop("__file", "__pos").cutLineage
       GraftSql.run(s, s"GRAFT APPLY DELETES '$tmp' PARTITION BY dt")
       val applied = Manifest.read(s, tmp)
       // pinned pre-apply `live` vs the final layout state — lazy probe
@@ -1682,7 +1683,7 @@ object ChangeDataQueries {
       val untouchedRewritten = before.exists(f =>
         !after.contains(f) &&
           !touchedDays.exists(d => f.contains(s"__p=$d")))
-      val live1 = Manifest.read(s, tmp).localCheckpoint(true)
+      val live1 = Manifest.read(s, tmp).cutLineage
       Manifest.merge(s, tmp, "dt", source, Seq("event_id"),
         deleteCol = "_d")
       val live2 = Manifest.read(s, tmp)
@@ -1783,7 +1784,7 @@ object ChangeDataQueries {
           .otherwise(0L)).as("n_feb")).head()
       val forensicsLost = fRow.getLong(0) > 0 || fRow.getLong(1) == 0
       val preVac = Manifest.readWithDeletes(s, tmp, vRestored)
-        .drop("__file", "__pos").localCheckpoint(true)
+        .drop("__file", "__pos").cutLineage
       Manifest.vacuum(s, tmp)
       val postVac = Manifest.readWithDeletes(s, tmp)
         .drop("__file", "__pos")
@@ -1898,7 +1899,7 @@ object ChangeDataQueries {
       Manifest.branchCreate(s, tmp, "audit")
       val bdir = Manifest.branchDir(tmp, "audit")
       val before = Manifest.readWithDeletes(s, bdir)
-        .drop("__file", "__pos").localCheckpoint(true)
+        .drop("__file", "__pos").cutLineage
       def day(d: String) = col("dt") === lit(d).cast("date")
       Manifest.overwritePartitions(
         ev.filter(day("2024-01-03")).withColumn("value", col("value") * 5),
@@ -1976,7 +1977,7 @@ object ChangeDataQueries {
       // against a terminated predecessor.
       val replicaPinned = Manifest.read(s, dst)
       val (replica, replayed) = Par.all(
-        () => replicaPinned.localCheckpoint(true),
+        () => replicaPinned.cutLineage,
         () => {
           // restart from the same checkpoint: nothing new -> no commit
           Manifest.changeFeedStream(s, tmp, dst, "dt", ckpt)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Dedup, Par}
+import graft.operators.Checkpoints.CutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,7 +250,7 @@ object DedupQueries {
           LshLayout.writeLshLayout(history, "doc_id", "text", tmp)
           LshLayout.dedupAgainstLayout(tmp, batch, "doc_id",
             "text", threshold = 0.8).select(sel.map(col): _*)
-            .localCheckpoint(true)
+            .cutLineage
         },
         () => Dedup.lshNewAgainstHistory(history, batch, "doc_id",
           "text", threshold = 0.8).select(sel.map(col): _*))
@@ -580,7 +581,7 @@ object DedupQueries {
           explode(graft.expressions.TextOps.cdcChunks(col("text"), 8, 64))
             .as("c"))
         .select(col("doc_id"), col("c.c_len").as("c_len"), col("c.fp").as("fp"))
-        .localCheckpoint(true)
+        .cutLineage
       val hist = chunks.filter(col("doc_id") % 3 =!= 0)
         .select("fp", "c_len").distinct()
       chunks.filter(col("doc_id") % 2 === 0)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Multimodal
+import graft.operators.Checkpoints.CutOps
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -111,7 +112,7 @@ object EventQueries {
       // fresh attribute ids (the in-memory twin of the batch scan)
       cusumFromCensus(graft.streaming.EventStreams
         .runToMemory(census, OutputMode.Complete())
-        .localCheckpoint(true))
+        .cutLineage)
     }),
 
     // KAPLAN–MEIER survival with right-censoring (the duration
@@ -334,12 +335,12 @@ object EventQueries {
       // strictly smaller than the event scans that build them).
       val v = ev.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts").as("t_view"))
-        .localCheckpoint(true)
+        .cutLineage
       val c = ev.filter(col("event_type") === "click")
         .join(v, Seq("user_id"))
         .filter(col("ts") > col("t_view"))
         .groupBy("user_id").agg(min("ts").as("t_click"))
-        .localCheckpoint(true)
+        .cutLineage
       val p = ev.filter(col("event_type") === "purchase")
         .join(c, Seq("user_id"))
         .filter(col("ts") > col("t_click"))

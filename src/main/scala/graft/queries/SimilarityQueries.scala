@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Similarity, Par}
+import graft.operators.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -281,7 +282,7 @@ object SimilarityQueries {
         () => Similarity.bruteForceTopK(union, queries, "vec_id",
             "embedding", k = 5)
           .select(col("query_id"), col("neighbor_id"))
-          .localCheckpoint(true))
+          .cutLineage)
       val fresh = java.nio.file.Files
         .createTempDirectory("graft_ivf_fresh").toString
       Similarity.rebalanceIvfLayout(s, stale, fresh, nlist = 8,
@@ -333,7 +334,7 @@ object SimilarityQueries {
           explode(array(lit(1L), lit(2L), lit(4L), lit(8L))).as("nprobe"))
         .join(counted, Seq("query_id", "nprobe"), "left")
         .withColumn("hits", coalesce(col("hits"), lit(0L)))
-        .localCheckpoint(true)
+        .cutLineage
       val a = hits.select(col("query_id"), col("nprobe").as("np_lo"),
         col("hits").as("hits_lo"))
       val b = hits.select(col("query_id"), col("nprobe").as("np_hi"),
@@ -388,7 +389,7 @@ object SimilarityQueries {
           explode(array(lit(0L), lit(1L))).as("rounds"))
         .join(counted, Seq("query_id", "rounds"), "left")
         .withColumn("hits", coalesce(col("hits"), lit(0L)))
-        .localCheckpoint(true)
+        .cutLineage
       val viol = hits.filter(col("rounds") === 0)
         .select(col("query_id"), col("hits").as("hits0"))
         .join(hits.filter(col("rounds") === 1)
@@ -424,7 +425,7 @@ object SimilarityQueries {
         () => Similarity.bruteForceTopKAgg(e, e, "vec_id", "embedding",
             k = 5)
           .select(col("query_id"), col("neighbor_id"))
-          .localCheckpoint(true),
+          .cutLineage,
         () => {
           val layoutDir = Tables.embeddingsKnnLayout(s, dir, k = 5,
             nlist = 16, nassign = 3)
@@ -445,7 +446,7 @@ object SimilarityQueries {
           explode(array(lit(0L), lit(2L))).as("hops"))
         .join(counted, Seq("query_id", "hops"), "left")
         .withColumn("hits", coalesce(col("hits"), lit(0L)))
-        .localCheckpoint(true)
+        .cutLineage
       val viol = hits.filter(col("hops") === 0)
         .select(col("query_id"), col("hits").as("hits0"))
         .join(hits.filter(col("hops") === 2)
@@ -1223,7 +1224,7 @@ object SimilarityQueries {
         },
         () => {
           val exact = Similarity.bruteForceTopK(survivors, victims,
-            "vec_id", "embedding", k = 5).localCheckpoint(true)
+            "vec_id", "embedding", k = 5).cutLineage
           (exact, survivors.count().toInt)
         })
       val (exact, nSurv) = exactAndN

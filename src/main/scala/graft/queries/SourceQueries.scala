@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Par
+import graft.operators.Checkpoints.CutOps
 import org.apache.spark.sql.functions._
 
 /** Source-format round-trips beyond parquet/CSV: ORC and JSON lines.
@@ -940,7 +941,7 @@ object SourceQueries {
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .localCheckpoint(true)
+        .cutLineage
       val good = parsed.filter(col("_corrupt_record").isNull)
         .groupBy("event_type").agg(count(lit(1)).as("n"))
         .select(lit("good").as("kind"), col("event_type").as("key"),

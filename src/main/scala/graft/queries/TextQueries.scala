@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.operators.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -257,7 +258,7 @@ object TextQueries {
         .select(explode(wordBigramStructs(col("text"))).as("g"))
         .select(col("g.w1").as("w1"), col("g.w2").as("w2"))
       val c2 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("nab"))
-        .localCheckpoint(eager = true)
+        .cutLineage
       val ca = c2.groupBy("w1").agg(sum("nab").as("na"))
       val cb = c2.groupBy("w2").agg(sum("nab").as("nb"))
       val n = broadcast(c2.agg(sum("nab").as("n")))
@@ -1029,7 +1030,7 @@ object TextQueries {
       val tf = d.select(col("doc_id"), explode(words(col("text"))).as("term"))
         .filter(col("term") =!= "")
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(eager = true)
+        .cutLineage
       val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy(col("tfidf").desc, col("term").asc)
@@ -1258,7 +1259,7 @@ object TextQueries {
         .select(col("doc_id"), explode(words(col("text"))).as("term"))
         .filter(col("term") =!= "")
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(eager = true)
+        .cutLineage
       val vocab = tf.groupBy("term").agg(sum("tf").as("cnt"))
         .orderBy(col("cnt").desc, col("term").asc).limit(100)
         .select(col("term"), lit(1L).as("__in"))
@@ -1354,7 +1355,7 @@ object TextQueries {
         .select(col("doc_id"),
           explode(wordBigramStructs(col("text"))).as("g"))
         .select(col("doc_id"), col("g.w1").as("w1"), col("g.w2").as("w2"))
-        .localCheckpoint(eager = true)
+        .cutLineage
       val c2 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
       // c1 (context counts) re-aggregates the MODEL-sized c2, not the
       // corpus-sized bi: Σ_w2 c2(w1, w2) = c1(w1) exactly, and it
@@ -1390,9 +1391,9 @@ object TextQueries {
         .select(col("doc_id"),
           explode(wordBigramStructs(col("text"))).as("g"))
         .select(col("doc_id"), col("g.w1").as("w1"), col("g.w2").as("w2"))
-        .localCheckpoint(eager = true)
+        .cutLineage
       val c2 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        .localCheckpoint(eager = true)
+        .cutLineage
       val left = c2.groupBy("w1")
         .agg(sum("c2").as("c1"), count(lit(1)).as("n1f"))
       val right = c2.groupBy("w2").agg(count(lit(1)).as("n1b"))
@@ -3302,7 +3303,7 @@ object TextQueries {
     // heaps; only candidate docs reach the scoring aggregate.
     "q347_maxscore_bm25" -> ((s, dir) =>
       graft.operators.MaxScore
-        .prunedTopK(bm25ContribsMicro(s, dir).localCheckpoint(eager = true),
+        .prunedTopK(bm25ContribsMicro(s, dir).cutLineage,
           k = 10)
         .orderBy("query_id", "rnk")),
 
@@ -3856,7 +3857,7 @@ object TextQueries {
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .distinct()
-        .localCheckpoint(eager = true)
+        .cutLineage
       graft.operators.Graphs.triangleCensus(und)
     }),
 
@@ -3885,7 +3886,7 @@ object TextQueries {
         .withColumn("part",
           when(pmod(col("doc_id") * 2654435761L, lit(4294967296L)) % 10 < 9,
             "hist").otherwise("delta"))
-        .localCheckpoint(eager = true)
+        .cutLineage
       val tf = base
         .select(col("part"), col("doc_id"), col("dl"),
           explode(col("qtoks")).as("w"))
@@ -4317,7 +4318,7 @@ object TextQueries {
         size(words(col("text"))).cast("bigint").as("dl"),
         filter(words(col("text")),
           w => w.isInCollection(termSet)).as("qtoks"))
-      .localCheckpoint(eager = true)
+      .cutLineage
     val global = broadcast(base.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("sum_dl")))
     val tf = base
@@ -4359,7 +4360,7 @@ object TextQueries {
         size(words(col("text"))).cast("bigint").as("dl"),
         filter(words(col("text")),
           w => w.isInCollection(termSet)).as("qtoks"))
-      .localCheckpoint(eager = true)
+      .cutLineage
     val global = broadcast(base.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("sum_dl")))
     val tf = base
@@ -4648,7 +4649,7 @@ object TextQueries {
   private[graft] def corpusScorecard(censusIn: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
       .orderBy(col("cnt").desc, col("w").asc)
-    val census = censusIn.localCheckpoint(true)
+    val census = censusIn.cutLineage
     val ent = census.groupBy("source")
       .agg(count(lit(1)).as("vocab"), sum("cnt").as("total"),
         sum(col("cnt").cast("double") * log(col("cnt").cast("double")))

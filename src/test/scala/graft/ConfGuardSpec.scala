@@ -8,11 +8,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * `conf.unset` pair around a body leaks into every chain `Par.all`
   * runs beside it and races any other pair; the engine's only writers
   * of a session conf are `GraftSession.tune` (semantics confs, once per
-  * session) and `Scoped` (on its own cloned session).
+  * session) and `Scoped` (on its own cloned session). The same scan
+  * keeps every lineage cut on `Checkpoints.cut`, the one place that
+  * honours a configured reliable checkpoint dir.
   */
 class ConfGuardSpec extends AnyFunSuite {
 
   private val flip = raw"\bconf\.(set|unset)\(".r
+
+  /** A direct lineage cut: Dataset `localCheckpoint`/`checkpoint`, not
+    * the manifest verb `Manifest.checkpoint`.
+    */
+  private val directCut = raw"\blocalCheckpoint\(|(?<!Manifest)\.checkpoint\(".r
+
+  private val root = Paths.get("src/main/scala")
+
+  private def mainSources: Seq[Path] = {
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, s"no sources under $root")
+    files
+  }
 
   /** Non-comment source lines of `path` with their 1-based numbers. */
   private def codeLines(path: Path): Seq[(String, Int)] =
@@ -36,11 +52,7 @@ class ConfGuardSpec extends AnyFunSuite {
   }
 
   test("src/main sets or unsets a session conf only in GraftSession.tune and Scoped") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.nonEmpty, s"no sources under $root")
-    val offences = files.flatMap { f =>
+    val offences = mainSources.flatMap { f =>
       val allowed: Int => Boolean = f.getFileName.toString match {
         case "Scoped.scala" => _ => true
         case "GraftSession.scala" => tuneLines(f).contains
@@ -54,6 +66,20 @@ class ConfGuardSpec extends AnyFunSuite {
     assert(offences.isEmpty,
       "session-global conf flips leak into overlapped chains — build the " +
         "work on Scoped.withConf(spark, key -> value) { scoped => ... } " +
+        "instead:\n" + offences.mkString("\n"))
+  }
+
+  test("src/main cuts lineage only through Checkpoints") {
+    val offences = mainSources
+      .filterNot(_.getFileName.toString == "Checkpoints.scala")
+      .flatMap { f =>
+        codeLines(f).collect { case (l, n) if directCut.findFirstIn(l).isDefined =>
+          s"${root.relativize(f)}:$n: ${l.trim}"
+        }
+      }
+    assert(offences.isEmpty,
+      "a direct localCheckpoint/checkpoint ignores a configured reliable " +
+        "checkpoint dir — cut with `.cutLineage` (Checkpoints.CutOps) " +
         "instead:\n" + offences.mkString("\n"))
   }
 }

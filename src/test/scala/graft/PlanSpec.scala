@@ -26,6 +26,10 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), "dim join degraded to SMJ:\n" + p.take(2000))
   }
 
+  test("SparkEntry.entry, the flagship star join, returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("q19 filters are pushed into the parquet scan") {
     val p = planOf("q19_filter_pushdown")
     // toString elides long filter lists — assert the prefix and that the
