@@ -173,43 +173,28 @@ object Bench {
           .write.mode("overwrite").parquet(wdir.resolve("out").toString)
       } finally graft.pipeline.Ingest.deleteRecursively(wdir)
     } catch { case _: Throwable => () }
-    // Untimed data-layout prep: q65's date-partitioned events copy is
-    // storage layout (built once, _SUCCESS-marked), not query work — a
-    // 100 TB event table ships partitioned; building it inside the
-    // timer would charge the query for a one-time ETL.
-    try Tables.eventsDayLayout(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Same for q102's IVF layout: the index build is one-time storage
-    // work (a 100 TB ANN index ships pre-built); the gate should time
-    // the pruned search, not the write.
-    try Tables.embeddingsIvfLayout(spark, sfDir)
-    catch { case _: Throwable => () }
-    // And q107's incrementally-appended layout, same reasoning.
-    try Tables.embeddingsIvfAppendLayout(spark, sfDir)
-    catch { case _: Throwable => () }
-    // And the q315/q318 k-NN-graph layouts (round 17): they are the
-    // same build-once persisted-index artifacts as the IVF layouts
-    // above — a 100 TB graph index ships pre-built, and the gates time
-    // the search + referee, not the one-time storage write. They were
-    // the only derived index layouts still built inside the timed
-    // region (whichever of q315/q318 ran first on a cold /tmp paid the
-    // build); prepping them here makes the timed numbers mean the same
-    // thing on a cold and a warm box.
-    try Tables.embeddingsKnnLayout(spark, sfDir)
-    catch { case _: Throwable => () }
-    try Tables.embeddingsKnnAppendLayout(spark, sfDir)
-    catch { case _: Throwable => () }
-    // And q121's z-ordered orders copy: clustering is the compaction
-    // job's one-time output, not per-query work.
-    try Tables.ordersZOrderLayout(spark, sfDir)
-    catch { case _: Throwable => () }
-    // And q140's backfilled day-partitioned events copy: the layout
-    // build + one-day dynamic overwrite is one-time maintenance work.
-    try Tables.eventsBackfillLayout(spark, sfDir)
-    catch { case _: Throwable => () }
-    // And q145's two-generation schema-evolution layout, same reasoning.
-    try Tables.documentsEvolvedLayout(spark, sfDir)
-    catch { case _: Throwable => () }
+    // Untimed data-layout prep, built once (each is _SUCCESS-marked)
+    // before the timer: these derived layouts are one-time storage work,
+    // not query work — a 100 TB table ships partitioned, clustered and
+    // indexed, so a gate times its read, not the write, and means the
+    // same on a cold and a warm box. In order: q65's day-partitioned
+    // events, q102's IVF index, q107's appended IVF index, the
+    // q315/q318 k-NN graphs, q121's z-ordered orders, q140's backfilled
+    // events and q145's schema-evolved documents. A failed build is
+    // swallowed here: the query that reads the layout builds it itself,
+    // and fails loudly if it still cannot.
+    Seq[(SparkSession, String) => String](
+      Tables.eventsDayLayout(_, _),
+      Tables.embeddingsIvfLayout(_, _),
+      Tables.embeddingsIvfAppendLayout(_, _),
+      Tables.embeddingsKnnLayout(_, _),
+      Tables.embeddingsKnnAppendLayout(_, _),
+      Tables.ordersZOrderLayout(_, _),
+      Tables.eventsBackfillLayout(_, _),
+      Tables.documentsEvolvedLayout(_, _)
+    ).foreach { build =>
+      try build(spark, sfDir) catch { case _: Throwable => () }
+    }
 
     // Optional positional args = query-name prefixes, for iterating on a
     // subset locally; the driver passes none and measures everything.

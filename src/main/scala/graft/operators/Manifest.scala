@@ -92,13 +92,21 @@ object Manifest {
   /** Version-level metadata carried in the manifest header line:
     * `batch` (exactly-once streaming stamp), `dv` (the ordered list of
     * immutable deletion-vector delta dirs constituting this version's
-    * DV — merge-on-read state), `bloomK` (the hash count every
-    * per-entry Bloom bitset was built with; bits derive from each
-    * bitset's own byte length). Every commit built from a base version
-    * must CARRY the base's `dv`/`bloomK` forward (or consciously drop
-    * them — `applyDeletes`/`compact` fold the DV in), otherwise a
-    * routine append would silently resurrect merge-on-read-deleted
-    * rows.
+    * DV — merge-on-read state), `bloomK`/`kmvK` (the hash count every
+    * per-entry Bloom bitset was built with — bits derive from each
+    * bitset's own byte length — and the KMV sketch size), `op` (the
+    * history tag) and `n` (the entry count, set by the writer).
+    *
+    * Carry rule: a commit built over a base version heads itself with
+    * `base.next(op, schema, batch)`, which carries `dv`, `bloomK` and
+    * `kmvK` forward and never `batch` or `n` — a stamp belongs to the
+    * one commit that applied its batch (history hashes it), and the
+    * count belongs to the entries written. Carrying the DV is what
+    * stops a routine append from resurrecting merge-on-read-deleted
+    * rows, so a verb that changes it says so with `.copy(dv = …)`: a
+    * delete appends its delta, `applyDeletes`/`compact`/`clusterZOrder`
+    * fold it to Nil, a branch absolutizes it and a branch merge appends
+    * the branch's own deltas.
     *
     * `schema` (round 18) is the snapshot's UNION column schema as
     * `StructType.json` — exactly what a `mergeSchema` read over the
@@ -116,7 +124,10 @@ object Manifest {
     */
   private[graft] case class Header(batch: Long = -1L, bloomK: Int = -1,
       dv: Seq[String] = Nil, kmvK: Int = -1, op: String = "",
-      n: Long = -1L, schema: String = "")
+      n: Long = -1L, schema: String = "") {
+    def next(op: String, schema: String, batch: Long = -1L): Header =
+      Header(batch, bloomK, dv, kmvK, op, schema = schema)
+  }
 
   /** Per-layout commit lock: the exists-then-rename CAS below is atomic
     * on HDFS/object stores (rename onto an existing destination fails)
@@ -138,23 +149,19 @@ object Manifest {
     * snapshot.
     */
   private[graft] def commitManifest(dir: String, version: Int,
-      entries: Seq[Entry], conf: Configuration, batch: Long = -1L,
-      dv: Seq[String] = Nil, bloomK: Int = -1, kmvK: Int = -1,
-      op: String = "", schema: String = ""): Unit =
-    commitManifestStreamed(dir, version, entries.length,
-      entries.sortBy(e => (e.p, e.file)).iterator, conf, batch, dv,
-      bloomK, kmvK, op, schema)
+      entries: Seq[Entry], conf: Configuration, h: Header = Header()): Unit =
+    commitManifestStreamed(dir, version,
+      entries.sortBy(e => (e.p, e.file)).iterator, conf,
+      h.copy(n = entries.length))
 
   /** The streaming form of the commit writer: entries arrive as an
     * ITERATOR (the distributed carry paths feed it one executor
     * partition at a time via `toLocalIterator`), so the driver's
-    * working set is one line, never the table's file census. `n` rides
-    * the header up front because the header is the first line.
+    * working set is one line, never the table's file census. `h.n`
+    * must already count them because the header is the first line.
     */
-  private def commitManifestStreamed(dir: String, version: Int, n: Long,
-      entries: Iterator[Entry], conf: Configuration, batch: Long,
-      dv: Seq[String], bloomK: Int, kmvK: Int, op: String,
-      schema: String = ""): Unit = {
+  private def commitManifestStreamed(dir: String, version: Int,
+      entries: Iterator[Entry], conf: Configuration, h: Header): Unit = {
     val f = fs(dir, conf)
     // tmp names must be unique per ATTEMPT, not per process: two
     // threads of one driver racing the same version otherwise write
@@ -165,23 +172,8 @@ object Manifest {
         s"x${System.nanoTime().toHexString}-v$version")
     val out = f.create(tmp, true)
     try {
-      // the entry COUNT rides the header so census consumers (DESCRIBE
-      // HISTORY) never parse entry lines — one header line per version
-      // is the driver's whole working set however many files there are
-      val fields = Seq(s""""version":$version""",
-        s""""n":$n""") ++
-        (if (batch >= 0) Seq(s""""batch":$batch""") else Nil) ++
-        (if (bloomK >= 1) Seq(s""""bloomk":$bloomK""") else Nil) ++
-        (if (kmvK >= 1) Seq(s""""kmvk":$kmvK""") else Nil) ++
-        (if (op.nonEmpty) Seq(s""""op":"$op"""") else Nil) ++
-        (if (dv.nonEmpty)
-          Seq(s""""dv":[${dv.map(p => s""""$p"""").mkString(",")}]""")
-        else Nil) ++
-        // schema LAST: the scalar-field regex scans stop at its key, so
-        // the nested StructType JSON can never shadow a header field
-        (if (schema.nonEmpty) Seq(s""""schema":$schema""") else Nil)
-      val header = fields.mkString("{", ",", "}") + "\n"
-      out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.write(headerLine(version, h)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       entries.foreach { e =>
         val stats = (e.lo, e.hi) match {
           case (Some(l), Some(h)) => s""","lo":$l,"hi":$h"""
@@ -414,15 +406,12 @@ object Manifest {
     */
   private def commitCarry(spark: SparkSession, dstDir: String,
       newVersion: Int, legs: Seq[CarryLeg], extra: Seq[Entry],
-      conf: Configuration, batch: Long = -1L, dv: Seq[String] = Nil,
-      bloomK: Int = -1, kmvK: Int = -1, op: String = "",
-      schema: String = ""): Unit =
+      conf: Configuration, h: Header): Unit =
     census(spark, legs.map(l => (l.dir, l.version)), allPayloads)
       .carry(legs.map(_.carry)) match {
-      case Left(es) => commitManifest(dstDir, newVersion, es ++ extra, conf,
-        batch, dv, bloomK, kmvK, op, schema)
-      case Right(rel) => commitRelationStreamed(dstDir, newVersion, rel,
-        extra, conf, batch, dv, bloomK, kmvK, op, schema)
+      case Left(es) => commitManifest(dstDir, newVersion, es ++ extra, conf, h)
+      case Right(rel) =>
+        commitRelationStreamed(dstDir, newVersion, rel, extra, conf, h)
     }
 
   /** Publish an entry RELATION (any DataFrame with the entry columns)
@@ -438,17 +427,15 @@ object Manifest {
     * manifest log.
     */
   private[graft] def commitRelationStreamed(dstDir: String, newVersion: Int,
-      rel: DataFrame, extra: Seq[Entry], conf: Configuration, batch: Long,
-      dv: Seq[String], bloomK: Int, kmvK: Int, op: String,
-      schema: String = ""): Unit = {
+      rel: DataFrame, extra: Seq[Entry], conf: Configuration,
+      h: Header): Unit = {
     val carry = rel.select(entryCols.map(col): _*)
       .orderBy("p", "file").as(enc[Entry]).persist()
     try {
       val n = carry.count() + extra.length
       val it = mergeByKey(toScalaIterator(carry.toLocalIterator()),
         extra.sortBy(e => (e.p, e.file)).iterator)
-      commitManifestStreamed(dstDir, newVersion, n, it, conf, batch,
-        dv, bloomK, kmvK, op, schema)
+      commitManifestStreamed(dstDir, newVersion, it, conf, h.copy(n = n))
     } finally carry.unpersist()
   }
 
@@ -485,12 +472,9 @@ object Manifest {
     */
   private def commitCarryExcept(spark: SparkSession, dir: String,
       fromVersion: Int, newVersion: Int, dropParts: Set[String],
-      extra: Seq[Entry], conf: Configuration, batch: Long = -1L,
-      dv: Seq[String] = Nil, bloomK: Int = -1, kmvK: Int = -1,
-      op: String = "", schema: String = ""): Unit =
+      extra: Seq[Entry], conf: Configuration, h: Header): Unit =
     commitCarry(spark, dir, newVersion, Seq(CarryLeg(dir, fromVersion,
-      e => Option.unless(dropParts(e.p))(e))), extra, conf,
-      batch, dv, bloomK, kmvK, op, schema)
+      e => Option.unless(dropParts(e.p))(e))), extra, conf, h)
 
   /** Rows of the data files `files` of `dir`, schemas merged. */
   private def readFiles(spark: SparkSession, dir: String,
@@ -577,6 +561,27 @@ object Manifest {
       dv = D.findFirstMatchIn(scalars).map(_.group(1)).toSeq
         .flatMap(a => S.findAllMatchIn(a).map(_.group(1)).toSeq),
       schema = schema)
+  }
+
+  /** The header line `readHeader` parses: optional fields appear only
+    * when set, in a fixed order. The entry COUNT rides the header so
+    * census consumers (DESCRIBE HISTORY) never parse entry lines — one
+    * header line per version is the driver's whole working set however
+    * many files there are.
+    */
+  private def headerLine(version: Int, h: Header): String = {
+    val fields = Seq(s""""version":$version""", s""""n":${h.n}""") ++
+      (if (h.batch >= 0) Seq(s""""batch":${h.batch}""") else Nil) ++
+      (if (h.bloomK >= 1) Seq(s""""bloomk":${h.bloomK}""") else Nil) ++
+      (if (h.kmvK >= 1) Seq(s""""kmvk":${h.kmvK}""") else Nil) ++
+      (if (h.op.nonEmpty) Seq(s""""op":"${h.op}"""") else Nil) ++
+      (if (h.dv.nonEmpty)
+        Seq(s""""dv":[${h.dv.map(p => s""""$p"""").mkString(",")}]""")
+      else Nil) ++
+      // schema LAST: the scalar-field regex scans stop at its key, so
+      // the nested StructType JSON can never shadow a header field
+      (if (h.schema.nonEmpty) Seq(s""""schema":${h.schema}""") else Nil)
+    fields.mkString("{", ",", "}") + "\n"
   }
 
   private val SchemaKey = "\"schema\":"
@@ -768,7 +773,7 @@ object Manifest {
     require(latestVersion(dir, conf) == 0,
       s"$dir already holds a manifested layout - use append/overwrite")
     commitManifest(dir, 1, writeCommitFiles(df, dir, partCol, 1, statsCol),
-      conf, op = "create", schema = df.schema.json)
+      conf, Header(op = "create", schema = df.schema.json))
   }
 
   /** Batch ids already committed into this layout. Served from the
@@ -786,26 +791,12 @@ object Manifest {
     val f = fs(dir, conf)
     if (!f.exists(mdir)) return Set.empty
     val ckptV = lastCheckpoint(dir, conf)
-    val fromCkpt = checkpointBatches(dir, conf)
-    val B = """"batch":(\d+)""".r
     val V = """v(\d{6})\.json""".r
-    fromCkpt ++ f.listStatus(mdir).toSeq
-      .filter { st =>
-        st.getPath.getName match {
-          case V(v) => v.toInt > ckptV
-          case _ => false
-        }
-      }
-      .flatMap { st =>
-        val in = f.open(st.getPath)
-        val head = try {
-          val r = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in,
-              java.nio.charset.StandardCharsets.UTF_8))
-          Option(r.readLine()).getOrElse("")
-        } finally in.close()
-        B.findFirstMatchIn(headerPrefix(head)).map(_.group(1).toLong)
-      }.toSet
+    checkpointBatches(dir, conf) ++ f.listStatus(mdir).toSeq
+      .map(_.getPath.getName)
+      .collect { case V(v) if v.toInt > ckptV =>
+        readHeader(dir, v.toInt, conf).batch }
+      .filter(_ >= 0).toSet
   }
 
   /** EXACTLY-ONCE streaming sink commit (the foreachBatch contract):
@@ -828,7 +819,7 @@ object Manifest {
     val base = latestVersion(dir, conf)
     val entries = writeCommitFiles(df, dir, partCol, base + 1, statsCol,
       suffix = writerToken())
-    appendEntries(df.sparkSession, dir, entries, conf, batchId = batchId,
+    appendEntries(df.sparkSession, dir, entries, batchId = batchId,
       dfSchema = df.schema)
     true
   }
@@ -842,29 +833,105 @@ object Manifest {
       s"t${Thread.currentThread().getId}" +
       s"x${System.nanoTime().toHexString}"
 
-  /** Publish pure-addition entries with a bounded rebase loop: an
-    * append can NEVER conflict semantically (it touches nothing that
-    * exists), so a lost CAS — a concurrent writer published first —
-    * rebases onto the new latest and retries instead of aborting. The
-    * replay stamp is re-checked each attempt (a racing duplicate
-    * delivery of the same batch must still land exactly once).
+  /** THE optimistic-concurrency publish (the Delta/Iceberg commit
+    * protocol), shared by every verb that stages bytes first and
+    * publishes them over whatever version is latest: appends, prepared
+    * overwrites, merges and merge-on-read deletes. The staged bytes —
+    * `entries`' data files plus any other `staged` path (a DV delta) —
+    * are manifest-invisible until this lands, and `entries` replace the
+    * partitions in `touched`. Each attempt, in order:
+    *
+    *   1. reads the latest version;
+    *   2. re-checks the batch stamp: if a racing duplicate delivery
+    *      already committed it, returns None and publishes nothing;
+    *   3. checks that the staged bytes still exist — until published
+    *      they are orphans a `vacuum` legally reaps, and a snapshot
+    *      naming reaped bytes breaks every later read;
+    *   4. when `touched` is non-empty, fails on write-write conflicts
+    *      since `base`: partitions whose file set changed, and
+    *      partitions holding victims of DV deltas committed after
+    *      `base` (a DV-only delete is invisible to the file-set diff,
+    *      and the staged rewrite, computed through base's DV, would
+    *      resurrect its victims);
+    *   5. runs the caller's `check` on the latest version;
+    *   6. commits over latest, headed by `header(latest, its header)`.
+    *      A lost CAS rebases: the next attempt starts again at 1, up to
+    *      `maxAttempts` retries — the staged bytes never move, only the
+    *      manifest merge is redone, so a retry is census-cheap.
+    *
+    * Returns the committed version. `abort` runs on every exit that
+    * does not publish (a delete drops its staged delta there).
     */
-  private def appendEntries(spark: SparkSession, dir: String,
-      entries: Seq[Entry], conf: Configuration, batchId: Long = -1L,
-      maxAttempts: Int = 20, op: String = null,
-      dfSchema: org.apache.spark.sql.types.StructType = null): Unit = {
-    var attempt = 0
-    while (true) {
+  private def publish(spark: SparkSession, dir: String, what: String,
+      redo: String, entries: Seq[Entry], staged: Seq[String] = Nil,
+      base: Int = 0, touched: Set[String] = Set.empty, batch: Long = -1L,
+      maxAttempts: Int = 5, check: Int => Unit = _ => (),
+      abort: () => Unit = () => ())(
+      header: (Int, Header) => Header): Option[Int] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val f = fs(dir, conf)
+    val paths = entries.map(e => filePath(dir, e.file)) ++ staged
+    lazy val baseDv = readHeader(dir, base, conf).dv.toSet
+    def parts(ps: Set[String]) = ps.toSeq.sorted.mkString(", ")
+    @annotation.tailrec
+    def go(attempt: Int): Option[Int] = {
       val latest = latestVersion(dir, conf)
       // stamp re-check AFTER the latest read: a rival publishing our
       // batch id between check and CAS makes the CAS lose (the version
       // is taken), and the retry's fresh read then sees the stamp — no
       // interleaving lands a duplicate
-      if (batchId >= 0 && committedBatches(dir, conf).contains(batchId))
-        return
-      val h = if (latest >= 1) readHeader(dir, latest, conf) else Header()
-      val opTag = if (op != null) op
-                  else if (batchId >= 0) "append-batch" else "append"
+      if (batch >= 0 && committedBatches(dir, conf).contains(batch)) None
+      else {
+        val h = if (latest >= 1) readHeader(dir, latest, conf) else Header()
+        val reaped = paths.filterNot(p => f.exists(new Path(p)))
+        require(reaped.isEmpty,
+          s"$what: ${reaped.length} staged path(s) no longer exist " +
+            s"(first: ${reaped.headOption.getOrElse("")}) - a vacuum ran " +
+            s"between staging and publish; $redo")
+        if (touched.nonEmpty) {
+          val conflicts = changedPartitions(spark, dir, base, latest, conf)
+            .intersect(touched)
+          require(conflicts.isEmpty,
+            s"$what: write-write conflict on partitions ${parts(conflicts)}" +
+              s": they changed after base v$base - $redo")
+          val dvConf = dvPartitions(spark, dir, latest,
+            h.dv.filterNot(baseDv)).intersect(touched)
+          require(dvConf.isEmpty,
+            s"$what: concurrent merge-on-read delete on partitions " +
+              s"${parts(dvConf)} landed after base v$base - $redo")
+        }
+        check(latest)
+        val won =
+          try {
+            if (latest >= 1)
+              commitCarryExcept(spark, dir, latest, latest + 1, touched,
+                entries, conf, header(latest, h))
+            else commitManifest(dir, 1, entries, conf, header(latest, h))
+            true
+          } catch {
+            case e: IllegalArgumentException if attempt < maxAttempts =>
+              false // lost the rename race - rebase and retry
+          }
+        if (won) Some(latest + 1) else go(attempt + 1)
+      }
+    }
+    val out = try go(0) catch { case e: Throwable => abort(); throw e }
+    if (out.isEmpty) abort()
+    out
+  }
+
+  /** Publish pure-addition entries: an append touches nothing that
+    * exists, so it never conflicts, and a lost CAS just rebases. A
+    * stamped append whose batch a racing duplicate delivery already
+    * committed publishes nothing.
+    */
+  private[graft] def appendEntries(spark: SparkSession, dir: String,
+      entries: Seq[Entry], batchId: Long = -1L, op: String = null,
+      dfSchema: org.apache.spark.sql.types.StructType = null): Unit = {
+    val opTag = if (op != null) op
+                else if (batchId >= 0) "append-batch" else "append"
+    publish(spark, dir, opTag, "re-write and re-append", entries,
+        batch = batchId, maxAttempts = 20) { (latest, h) =>
       // pure addition: union schema = merge(base, new data); an entry-
       // less commit (stamped no-op) carries the base's verbatim
       val schema =
@@ -872,19 +939,7 @@ object Manifest {
           if (dfSchema != null) appendSchemaJson(h.schema, dfSchema)
           else h.schema
         } else if (dfSchema != null) dfSchema.json else ""
-      try {
-        if (latest >= 1)
-          commitCarryExcept(spark, dir, latest, latest + 1, Set.empty,
-            entries, conf, batch = batchId, dv = h.dv, bloomK = h.bloomK,
-            kmvK = h.kmvK, op = opTag, schema = schema)
-        else
-          commitManifest(dir, 1, entries, conf, batch = batchId,
-            op = opTag, schema = schema)
-        return
-      } catch {
-        case e: IllegalArgumentException if attempt < maxAttempts =>
-          attempt += 1 // lost the rename race - rebase and retry
-      }
+      h.next(opTag, schema, batchId)
     }
   }
 
@@ -900,7 +955,7 @@ object Manifest {
     require(base >= 1, s"$dir is not a manifested layout")
     val entries = writeCommitFiles(df, dir, partCol, base + 1, statsCol,
       suffix = writerToken())
-    appendEntries(df.sparkSession, dir, entries, conf, dfSchema = df.schema)
+    appendEntries(df.sparkSession, dir, entries, dfSchema = df.schema)
   }
 
   /** Multi-partition overwrite published as ONE commit: every partition
@@ -919,8 +974,8 @@ object Manifest {
     // stale-but-harmless, folded away by the next applyDeletes
     val h = readHeader(dir, base, conf)
     commitCarryExcept(df.sparkSession, dir, base, base + 1, touched,
-      entries, conf, dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK,
-      op = "overwrite", schema = coveringSchemaJson(h.schema, df.schema))
+      entries, conf,
+      h.next("overwrite", coveringSchemaJson(h.schema, df.schema)))
   }
 
   /** A prepared-but-unpublished partition overwrite: data files are on
@@ -964,75 +1019,28 @@ object Manifest {
   }
 
   /** Publish a prepared overwrite under SNAPSHOT-ISOLATION optimistic
-    * concurrency (the Delta/Iceberg commit protocol): commits that
-    * landed after `prep.base` are examined — if any touched one of the
-    * writer's partitions, the publish fails LOUDLY (first committer
-    * wins; the loser must re-read and re-prepare, because its inputs
-    * may be stale); if all are disjoint, the writer's delta REBASES
-    * onto the latest manifest and retries the one-rename CAS. Returns
-    * the committed version. A writer that loses the rename race itself
-    * (two publishes in the same instant) re-reads and retries up to
-    * `maxAttempts` times — its data files never move, only the
-    * manifest merge is redone, so a retry is census-cheap.
+    * concurrency (the Delta/Iceberg commit protocol, `publish`): commits
+    * that landed after `prep.base` are examined — if any touched one of
+    * the writer's partitions, by a rewrite or a merge-on-read delete,
+    * the publish fails LOUDLY (first committer wins; the loser must
+    * re-read and re-prepare, because its inputs may be stale); if all
+    * are disjoint, the writer's delta REBASES onto the latest manifest
+    * and retries the one-rename CAS. Staged files a `vacuum` reaped fail
+    * it loudly too; both checks run again on every attempt. A writer
+    * that loses the rename race itself (two publishes in the same
+    * instant) re-reads and retries up to `maxAttempts` times. Returns
+    * the committed version.
     */
   def commitPrepared(spark: SparkSession, dir: String,
-      prep: PreparedCommit, maxAttempts: Int = 5): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // staged files are manifest-invisible, so a vacuum run during the
-    // prepare window legally reaped them as orphans — verify before
-    // publishing, or the new snapshot would reference deleted bytes
-    val f = fs(dir, conf)
-    val reaped = prep.entries.filterNot(e =>
-      f.exists(new Path(filePath(dir, e.file))))
-    require(reaped.isEmpty,
-      s"commitPrepared: ${reaped.length} staged file(s) no longer exist " +
-        s"(first: ${reaped.head.file}) - a vacuum ran during the prepare " +
-        "window; re-prepare the overwrite")
-    val baseDv = readHeader(dir, prep.base, conf).dv.toSet
-    var attempt = 0
-    while (true) {
-      val latest = latestVersion(dir, conf)
-      val conflicts =
-        changedPartitions(spark, dir, prep.base, latest, conf)
-          .intersect(prep.touched)
-      require(conflicts.isEmpty,
-        s"write-write conflict on partitions ${conflicts.toSeq.sorted
-          .mkString(", ")}: they changed after base v${prep.base} - " +
-          "re-read the table and re-prepare")
-      val h = readHeader(dir, latest, conf)
-      // a concurrent MOR delete is a DV-only commit, invisible to
-      // changedPartitions — if it hit one of the prepared partitions,
-      // the staged files (computed through BASE's deletion vector)
-      // would silently resurrect its victims; abort like a rewrite
-      val dvConf = dvPartitions(spark, dir, latest, h.dv.filterNot(baseDv))
-        .intersect(prep.touched)
-      require(dvConf.isEmpty,
-        s"commitPrepared: concurrent merge-on-read delete on partitions " +
-          s"${dvConf.toSeq.sorted.mkString(", ")} landed after base " +
-          s"v${prep.base} - re-read the table and re-prepare")
-      try {
-        commitCarryExcept(spark, dir, latest, latest + 1, prep.touched,
-          prep.entries, conf, dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK,
-          op = "overwrite",
-          schema = if (prep.schemaJson.isEmpty) ""
-            else coveringSchemaJson(h.schema, parseSchema(prep.schemaJson)))
-        return latest + 1
-      } catch {
-        case e: IllegalArgumentException if attempt < maxAttempts =>
-          attempt += 1 // lost the rename race - re-read and rebase again
-      }
-    }
-    -1 // unreachable
-  }
+      prep: PreparedCommit, maxAttempts: Int = 5): Int =
+    publish(spark, dir, "commitPrepared", "re-read the table and re-prepare",
+        prep.entries, base = prep.base, touched = prep.touched,
+        maxAttempts = maxAttempts) { (_, h) =>
+      h.next("overwrite",
+        if (prep.schemaJson.isEmpty) ""
+        else coveringSchemaJson(h.schema, parseSchema(prep.schemaJson)))
+    }.get // unstamped: never "already applied"
 
-  /** CHANGE DATA FEED between two committed versions: because data
-    * files are IMMUTABLE, the row-level delta IS the file-level delta —
-    * inserted rows live in files only the newer manifest references,
-    * deleted rows in files only the older one does, and NOTHING ELSE is
-    * read (an in-place update surfaces as delete+insert, the standard
-    * CDF shape without row ids). Cost scales with the changed files,
-    * never the table.
-    */
   /** The feed's raw legs between two versions, without the `_change`
     * tag: (kind, rows). Three sources of change, all LAZY scans over
     * only the touched bytes:
@@ -1101,6 +1109,14 @@ object Manifest {
       dvSide.map("delete" -> _)).flatten
   }
 
+  /** CHANGE DATA FEED between two committed versions: because data
+    * files are IMMUTABLE, the row-level delta IS the file-level delta —
+    * inserted rows live in files only the newer manifest references,
+    * deleted rows in files only the older one does, and NOTHING ELSE is
+    * read (an in-place update surfaces as delete+insert, the standard
+    * CDF shape without row ids). Cost scales with the changed files,
+    * never the table.
+    */
   def changesBetween(spark: SparkSession, dir: String, from: Int,
       to: Int): DataFrame = {
     val sides = changeSides(spark, dir, from, to)
@@ -1200,9 +1216,11 @@ object Manifest {
     * (the purge discipline). Publishes under the same
     * snapshot-isolation OCC as `commitPrepared`: files stage first, a
     * concurrent commit touching a merge partition aborts loudly, a
-    * disjoint one rebases. Reads THROUGH the deletion vector (a merge
-    * rewrite must not resurrect MOR-deleted rows) and carries the DV
-    * forward for untouched partitions. Duplicate keys in the source
+    * disjoint one rebases, and every attempt re-checks the staged files
+    * and the batch stamp (a racing duplicate `mergeBatch` is a replay).
+    * Reads THROUGH the deletion vector (a merge rewrite must not
+    * resurrect MOR-deleted rows) and carries the DV forward for
+    * untouched partitions. Duplicate keys in the source
     * are a loud error — "last writer wins among my own rows" is a
     * silent-corruption generator, not a semantics. Returns the
     * committed version (base version if the merge had nothing to do).
@@ -1214,7 +1232,17 @@ object Manifest {
     */
   def merge(spark: SparkSession, dir: String, partCol: String,
       source: DataFrame, keyCols: Seq[String],
-      deleteCol: String = null, batchId: Long = -1L): Int = {
+      deleteCol: String = null, batchId: Long = -1L): Int =
+    mergeStamped(spark, dir, partCol, source, keyCols, deleteCol, batchId)
+      .getOrElse(latestVersion(spark, dir))
+
+  /** `merge`, or None when `batchId` was already committed — found
+    * before any file is written, or by the publish when a racing
+    * duplicate delivery wins.
+    */
+  private def mergeStamped(spark: SparkSession, dir: String,
+      partCol: String, source: DataFrame, keyCols: Seq[String],
+      deleteCol: String, batchId: Long): Option[Int] = {
     require(keyCols.nonEmpty, "merge: keyCols must be non-empty")
     val conf = spark.sparkContext.hadoopConfiguration
     val base = latestVersion(dir, conf)
@@ -1222,7 +1250,7 @@ object Manifest {
     // exactly-once streaming apply: a replayed micro-batch is detected
     // by its stamp before any file is written
     if (batchId >= 0 && committedBatches(dir, conf).contains(batchId))
-      return base
+      return None
     val isDel =
       if (deleteCol == null) lit(false)
       else coalesce(col(deleteCol).cast("boolean"), lit(false))
@@ -1247,7 +1275,7 @@ object Manifest {
     val landingParts = src.filter(!col("__del"))
       .select(col("__sp")).distinct().collect().map(_.getString(0)).toSet
     val affected = matchedParts ++ landingParts
-    if (affected.isEmpty) return base
+    if (affected.isEmpty) return Some(base)
     // new content for the affected partitions: their target rows minus
     // EVERY matched key (replaced, moved, or deleted), plus the
     // source's surviving rows
@@ -1269,54 +1297,10 @@ object Manifest {
     val entries = writeCommitFiles(
       next.filter(col(partCol).cast("string").isInCollection(affected)),
       dir, partCol, base + 1, suffix = writerToken())
-    val baseDv = readHeader(dir, base, conf).dv.toSet
-    var attempt = 0
-    val fsys = fs(dir, conf)
-    while (true) {
-      // staged files are manifest-invisible, so a vacuum run during
-      // the merge window legally reaped them as orphans — verify per
-      // attempt (the commitPrepared/commitDelete guard, mirrored), or
-      // the published snapshot would reference deleted bytes
-      val reaped = entries.filterNot(e =>
-        fsys.exists(new Path(filePath(dir, e.file))))
-      require(reaped.isEmpty,
-        s"merge: ${reaped.length} staged file(s) no longer exist " +
-          s"(first: ${reaped.headOption.map(_.file).getOrElse("")}) - a " +
-          "vacuum ran during the merge window; re-read and re-merge")
-      val latest = latestVersion(dir, conf)
-      val conflicts = changedPartitions(spark, dir, base, latest, conf)
-        .intersect(affected)
-      require(conflicts.isEmpty,
-        s"merge: write-write conflict on partitions ${conflicts.toSeq
-          .sorted.mkString(", ")}: they changed after base v$base - " +
-          "re-read and re-merge")
-      val h = readHeader(dir, latest, conf)
-      // rewrite-vs-DV-delete conflict: a concurrent MERGE-ON-READ
-      // delete is a DV-only commit (entries unchanged — invisible to
-      // changedPartitions). The merge's rewrite of `affected` was
-      // computed through BASE's deletion vector, so publishing it
-      // would re-materialize the concurrently-deleted victims while
-      // their carried-forward (file,pos) rows go stale against the
-      // dropped files — a silent resurrect. Abort like any other
-      // write-write conflict on the affected partitions.
-      val dvConf = dvPartitions(spark, dir, latest, h.dv.filterNot(baseDv))
-        .intersect(affected)
-      require(dvConf.isEmpty,
-        s"merge: concurrent merge-on-read delete on partitions " +
-          s"${dvConf.toSeq.sorted.mkString(", ")} landed after base " +
-          s"v$base - re-read and re-merge")
-      try {
-        commitCarryExcept(spark, dir, latest, latest + 1, affected,
-          entries, conf, batch = batchId, dv = h.dv, bloomK = h.bloomK,
-          kmvK = h.kmvK, op = "merge",
-          schema = coveringSchemaJson(h.schema, next.schema))
-        return latest + 1
-      } catch {
-        case e: IllegalArgumentException if attempt < 5 =>
-          attempt += 1 // lost the rename race - rebase and retry
-      }
+    publish(spark, dir, "merge", "re-read and re-merge", entries,
+        base = base, touched = affected, batch = batchId) { (_, h) =>
+      h.next("merge", coveringSchemaJson(h.schema, next.schema), batchId)
     }
-    -1 // unreachable
   }
 
   /** Partitions of `version` holding victims of the DV deltas `dv`.
@@ -1346,10 +1330,8 @@ object Manifest {
       source: DataFrame, keyCols: Seq[String], batchId: Long,
       deleteCol: String = null): Boolean = {
     require(batchId >= 0, s"mergeBatch: batchId must be >= 0, got $batchId")
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (committedBatches(dir, conf).contains(batchId)) return false
-    merge(spark, dir, partCol, source, keyCols, deleteCol, batchId)
-    true
+    mergeStamped(spark, dir, partCol, source, keyCols, deleteCol, batchId)
+      .isDefined
   }
 
   /** Targeted small-file compaction — the auto-OPTIMIZE maintenance
@@ -1382,8 +1364,7 @@ object Manifest {
     val newEntries = writeCommitFiles(packed, dir, partCol, base + 1)
     val h = readHeader(dir, base, conf)
     commitCarryExcept(spark, dir, base, base + 1, hot, newEntries, conf,
-      dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK, op = "auto-compact",
-      schema = coveringSchemaJson(h.schema, packed.schema))
+      h.next("auto-compact", coveringSchemaJson(h.schema, packed.schema)))
     hot.size
   }
 
@@ -1404,8 +1385,7 @@ object Manifest {
     val h = readHeader(dir, toVersion, conf)
     // entries are exactly toVersion's — so is the schema
     commitCarryExcept(spark, dir, toVersion, base + 1, Set.empty, Nil,
-      conf, dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK, op = "restore",
-      schema = h.schema)
+      conf, h.next("restore", h.schema))
     base + 1
   }
 
@@ -1431,9 +1411,9 @@ object Manifest {
     val touched = entries.map(_.p).toSet ++ dropEmpty
     val h = readHeader(dir, base, conf)
     commitCarryExcept(df.sparkSession, dir, base, base + 1, touched,
-      entries, conf, batch = batchId, dv = h.dv, bloomK = h.bloomK,
-      kmvK = h.kmvK, op = "replace-batch",
-      schema = coveringSchemaJson(h.schema, df.schema))
+      entries, conf,
+      h.next("replace-batch", coveringSchemaJson(h.schema, df.schema),
+        batchId))
     true
   }
 
@@ -1565,9 +1545,8 @@ object Manifest {
     val h = readHeader(dir, base, conf)
     commitCarry(spark, bdir, 1,
       Seq(CarryLeg(dir, base, e => Some(e.copy(file = filePath(dir, e.file))))),
-      Nil, conf,
-      dv = h.dv.map(p => dvFilePath(dir, p)), bloomK = h.bloomK,
-      kmvK = h.kmvK, op = "branch-create", schema = h.schema)
+      Nil, conf, h.next("branch-create", h.schema)
+        .copy(dv = h.dv.map(p => dvFilePath(dir, p))))
     val f = fs(dir, conf)
     val out = f.create(new Path(bdir, "_branch_base"), true)
     try out.write(base.toString
@@ -1632,8 +1611,7 @@ object Manifest {
       Seq(CarryLeg(dir, mainLatest, e => Option.unless(branchChanged(e.p))(e)),
         CarryLeg(bdir, bLatest, e => Option.when(branchChanged(e.p))(
           e.copy(file = filePath(bdir, e.file))))), Nil, conf,
-      dv = mainH.dv ++ branchNewDv, bloomK = mainH.bloomK,
-      kmvK = mainH.kmvK, op = "branch-merge", schema = schema)
+      mainH.next("branch-merge", schema).copy(dv = mainH.dv ++ branchNewDv))
     mainLatest + 1
   }
 
@@ -1678,7 +1656,8 @@ object Manifest {
     require(h.bloomK < 1 || h.bloomK == k,
       s"addBloomIndex: layout was indexed with k=${h.bloomK}, got k=$k - " +
         "rebuild the index (compact + reindex) to change hash counts")
-    indexPass(spark, dir, base, h.copy(bloomK = k, op = "bloom-index"),
+    indexPass(spark, dir, base,
+      h.next("bloom-index", h.schema).copy(bloomK = k),
       "bloom", _.bloom, (e, b) => e.copy(bloom = Some(b)),
       bloomPackB64(_, lit(bits))) { paths =>
       readFiles(spark, dir, paths).filter(col(column).isNotNull)
@@ -1720,17 +1699,14 @@ object Manifest {
       val m = payload.collect().map(r => r.getString(0) -> r.getString(1))
         .toMap
       commitManifest(dir, base + 1, readManifest(dir, base, conf)
-          .map(e => m.get(tailKey(e.file)).fold(e)(set(e, _))), conf,
-        dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK, op = h.op,
-        schema = h.schema)
+        .map(e => m.get(tailKey(e.file)).fold(e)(set(e, _))), conf, h)
     } else {
       val rel = entriesRelation(spark, dir, base).as(enc[Entry])
         .map(e => (tailKey(e.file), e))(enc[(String, Entry)])
         .joinWith(payload, col("_1") === col("__file"), "left_outer")
         .map { case ((_, e), r) =>
           if (r == null) e else set(e, r.getString(1)) }(enc[Entry])
-      commitRelationStreamed(dir, base + 1, rel.toDF(), Nil, conf, -1L,
-        h.dv, h.bloomK, h.kmvK, h.op, schema = h.schema)
+      commitRelationStreamed(dir, base + 1, rel.toDF(), Nil, conf, h)
     }
     true
   }
@@ -2108,7 +2084,8 @@ object Manifest {
     // same pass as addBloomIndex, including why unscanned files must
     // stay kmv-NULL: an empty sketch silently under-counts, a missing
     // one is loud
-    indexPass(spark, dir, base, h.copy(kmvK = k, op = "distinct-sketch"),
+    indexPass(spark, dir, base,
+      h.next("distinct-sketch", h.schema).copy(kmvK = k),
       "kmv", _.kmv, (e, b) => e.copy(kmv = Some(b)), kmvPackB64(_)) {
       paths => Sketches.kmvSketch(readFiles(spark, dir, paths)
           .filter(col(column).isNotNull).withColumn("__file", metaTail),
@@ -2264,58 +2241,28 @@ object Manifest {
   def commitDelete(spark: SparkSession, dir: String, prep: PreparedDelete,
       maxAttempts: Int = 5, batchId: Long = -1L): Long = {
     if (prep.nNew == 0L) return 0L
+    val delta = s"$dir/${prep.delta}"
     val conf = spark.sparkContext.hadoopConfiguration
-    val f = fs(dir, conf)
-    var attempt = 0
-    while (true) {
-      // streaming replay stamp, re-checked per attempt (the
-      // appendEntries discipline): a racing duplicate delivery of the
-      // same batch must land exactly once
-      if (batchId >= 0 && committedBatches(dir, conf).contains(batchId)) {
-        f.delete(new Path(s"$dir/${prep.delta}"), true)
-        return 0L
-      }
-      // the staged delta is header-invisible, so a vacuum run during
-      // the prepare window legally reaped it as an orphan — verify
-      // (EVERY attempt: a vacuum can also land between rebase retries)
-      // before publishing, or the new header would reference deleted
-      // bytes and every later read of the layout would fail. The
-      // commitPrepared guard for staged data files, mirrored here.
-      require(f.exists(new Path(s"$dir/${prep.delta}")),
-        s"commitDelete: the staged DV delta ${prep.delta} no longer " +
-          "exists - a vacuum ran during the prepare window; re-prepare " +
-          "the delete")
-      val latest = latestVersion(dir, conf)
-      // staleness census: the victims' files must all still be latest-
-      // referenced (victimFiles is delete-sized — a driver set already)
+    // staleness census: the victims' files must all still be latest-
+    // referenced (victimFiles is delete-sized — a driver set already)
+    def fresh(latest: Int): Unit = {
       val present = census(spark, Seq(dir -> latest))
         .join(e => tailKey(e.file), Left(prep.victimFiles))(e =>
           tailKey(e.file)).toSet
       val stale = prep.victimFiles.filterNot(present)
-      if (stale.nonEmpty) {
-        fs(dir, conf).delete(new Path(s"$dir/${prep.delta}"), true)
+      if (stale.nonEmpty)
         sys.error(
           s"commitDelete: ${stale.size} victim file(s) were rewritten " +
             s"after base v${prep.base} (first: ${stale.head}) - the " +
             "staged positions are stale; re-read and re-prepare the delete")
-      }
-      val h = readHeader(dir, latest, conf)
-      try {
-        // DV-only commit: files unchanged, schema carries verbatim
-        commitCarryExcept(spark, dir, latest, latest + 1, Set.empty, Nil,
-          conf, batch = batchId, dv = h.dv :+ prep.delta,
-          bloomK = h.bloomK, kmvK = h.kmvK, op = "delete",
-          schema = h.schema)
-        return prep.nNew
-      } catch {
-        case e: IllegalArgumentException if attempt < maxAttempts =>
-          attempt += 1 // lost the rename race - rebase and retry
-        case e: Throwable =>
-          fs(dir, conf).delete(new Path(s"$dir/${prep.delta}"), true)
-          throw e
-      }
     }
-    -1L // unreachable
+    // DV-only commit: files unchanged, schema carries verbatim
+    publish(spark, dir, "commitDelete", "re-read and re-prepare the delete",
+        Nil, staged = Seq(delta), batch = batchId, maxAttempts = maxAttempts,
+        check = fresh,
+        abort = () => fs(dir, conf).delete(new Path(delta), true)) { (_, h) =>
+      h.next("delete", h.schema, batchId).copy(dv = h.dv :+ prep.delta)
+    }.fold(0L)(_ => prep.nNew)
   }
 
   /** Merge-on-read delete: victims become (file, position) rows in a
@@ -2349,7 +2296,7 @@ object Manifest {
     if (committedBatches(dir, conf).contains(batchId)) return false
     val prep = prepareDeleteKeys(spark, dir, keys, keyCols)
     if (prep.nNew == 0L) {
-      appendEntries(spark, dir, Seq.empty, conf, batchId = batchId,
+      appendEntries(spark, dir, Seq.empty, batchId = batchId,
         op = "delete-noop")
       return false
     }
@@ -2413,9 +2360,9 @@ object Manifest {
       .drop("__file", "__pos")
     val newEntries = writeCommitFiles(survivors, dir, partCol, base + 1)
     commitCarryExcept(spark, dir, base, base + 1, affectedParts,
-      newEntries, conf, bloomK = h.bloomK, kmvK = h.kmvK,
-      op = "apply-deletes",
-      schema = coveringSchemaJson(h.schema, survivors.schema))
+      newEntries, conf,
+      h.next("apply-deletes", coveringSchemaJson(h.schema, survivors.schema))
+        .copy(dv = Nil))
     true
   }
 
@@ -2460,9 +2407,8 @@ object Manifest {
     val entries = writeCommitFiles(survivors, dir, partCol, base + 1)
     val h = readHeader(dir, base, conf)
     commitCarryExcept(spark, dir, base, base + 1, affected, entries,
-      conf, dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK,
-      op = "dedup-repair",
-      schema = coveringSchemaJson(h.schema, survivors.schema))
+      conf,
+      h.next("dedup-repair", coveringSchemaJson(h.schema, survivors.schema)))
     true
   }
 
@@ -2526,7 +2472,7 @@ object Manifest {
       val entries = writeCommitFiles(df, tdir, partCol, base + 1)
       // full-replace semantics: the new files ARE the snapshot
       commitManifest(tdir, base + 1, entries, conf,
-        schema = df.schema.json)
+        Header(schema = df.schema.json))
       t -> (base + 1)
     }
     val f = fs(dir, conf)
@@ -2600,8 +2546,7 @@ object Manifest {
         dir, partCol, base + 1)
     val h = readHeader(dir, base, conf)
     commitCarryExcept(spark, dir, base, base + 1, affected, entries,
-      conf, dv = h.dv, bloomK = h.bloomK, kmvK = h.kmvK, op = "purge",
-      schema = coveringSchemaJson(h.schema, t.schema))
+      conf, h.next("purge", coveringSchemaJson(h.schema, t.schema)))
   }
 
   /** Snapshot read of a pinned version — exactly that manifest's files,
@@ -2714,10 +2659,8 @@ object Manifest {
     // full rewrite: the new files ARE the snapshot, so their schema is
     // the union schema regardless of the base header's state — a
     // cluster/compact re-anchors schema tracking on legacy layouts
-    commitManifest(dir, base + 1, entries, conf,
-      bloomK = readHeader(dir, base, conf).bloomK,
-      kmvK = readHeader(dir, base, conf).kmvK, op = "cluster",
-      schema = clustered.schema.json)
+    commitManifest(dir, base + 1, entries, conf, readHeader(dir, base, conf)
+      .next("cluster", clustered.schema.json).copy(dv = Nil))
   }
 
   /** Two-dimensional DATA-SKIPPING box read: only files whose tracked
@@ -2781,10 +2724,8 @@ object Manifest {
     val entries = writeCommitFiles(clustered, dir, partCol, base + 1,
       statsCol)
     // full rewrite — new files are the whole snapshot (see clusterZOrder)
-    commitManifest(dir, base + 1, entries, conf,
-      bloomK = readHeader(dir, base, conf).bloomK,
-      kmvK = readHeader(dir, base, conf).kmvK, op = "compact",
-      schema = clustered.schema.json)
+    commitManifest(dir, base + 1, entries, conf, readHeader(dir, base, conf)
+      .next("compact", clustered.schema.json).copy(dv = Nil))
   }
 
   /** Every manifest version number currently committed in `dir`. */

@@ -225,4 +225,27 @@ class ManifestConcurrencySpec extends SparkSpec {
     assert(Manifest.read(spark, dir).filter($"id" === 3L).count() === 1L,
       "the batch-stamped merge double-applied or vanished under the race")
   }
+
+  test("racing duplicate mergeBatch deliveries: exactly one returns " +
+      "true, the others return false, none throws, the row lands once") {
+    val dir = mkdir()
+    val base = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "grp", "value")
+    Manifest.create(base, dir, "grp")
+    val src = Seq((3L, "a", 30.0)).toDF("id", "grp", "value")
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    // race rethrows the first racer's exception: none may throw
+    race((1 to 3).map { _ => () =>
+      results.add(Manifest.mergeBatch(spark, dir, "grp", src, Seq("id"),
+        batchId = 7L))
+      ()
+    })
+    import scala.jdk.CollectionConverters._
+    assert(results.asScala.toSeq.sorted === Seq(false, false, true),
+      "a duplicate delivery must apply exactly once and report the rest " +
+        "as replays")
+    assert(Manifest.read(spark, dir).filter($"id" === 3L).count() === 1L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(Manifest.latestVersion(dir, conf) === 2,
+      "a duplicate delivery published a version")
+  }
 }

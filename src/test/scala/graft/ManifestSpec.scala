@@ -595,6 +595,29 @@ class ManifestSpec extends SparkSpec {
       "the reaped prepare must not move the version")
   }
 
+  test("an append refuses to publish staged files a vacuum reaped") {
+    val dir = mkdir()
+    Manifest.create(fixture, dir, "grp")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val staged = Manifest.writeCommitFiles(
+      fixture.filter($"grp" === "a").withColumn("id", $"id" + 100L),
+      dir, "grp", 2, suffix = "-wtest")
+    // staged files are manifest-invisible orphans until published, so a
+    // retention pass in the write window legally reaps them
+    Manifest.vacuum(spark, dir)
+    assert(staged.nonEmpty && staged.forall(e =>
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(dir, e.file))),
+      "fixture bug: vacuum left the staged files in place")
+    val e = intercept[IllegalArgumentException] {
+      Manifest.appendEntries(spark, dir, staged)
+    }
+    assert(e.getMessage.contains("no longer exist"), e.getMessage)
+    assert(Manifest.latestVersion(dir, conf) === 1,
+      "the reaped append must not move the version")
+    assert(Manifest.read(spark, dir).count() === 6L,
+      "the table must stay readable")
+  }
+
   test("one-pass replica == stepwise referee == direct read across " +
       "appends, overwrites, MOR deletes and a schema-widening append; " +
       "plan size independent of version count") {
@@ -1354,7 +1377,7 @@ class ManifestSpec extends SparkSpec {
 
   test("both census regimes emit byte-identical manifests for the same " +
       "logical content (carried + extra merge-sorted, not concatenated)") {
-    import graft.operators.Manifest.Entry
+    import graft.operators.Manifest.{Entry, Header}
     val conf = spark.sparkContext.hadoopConfiguration
     // entries deliberately interleave: extra keys sort BETWEEN carried
     // keys, so a concatenating writer would emit them out of order
@@ -1369,7 +1392,7 @@ class ManifestSpec extends SparkSpec {
       Entry("z", "data/c000002/__p=z/f6.parquet"))
     val dirD = mkdir()
     Manifest.commitManifest(dirD, 1, scala.util.Random.shuffle(
-      carried ++ extra), conf, batch = 9L, op = "test")
+      carried ++ extra), conf, Header(batch = 9L, op = "test"))
     val dirX = mkdir()
     import spark.implicits._
     val rel = scala.util.Random.shuffle(carried)
@@ -1377,7 +1400,7 @@ class ManifestSpec extends SparkSpec {
       .toDF("p", "file", "lo", "hi", "lo2", "hi2", "bloom", "kmv")
       .repartition(4)
     Manifest.commitRelationStreamed(dirX, 1, rel, extra, conf,
-      9L, Nil, -1, -1, "test")
+      Header(batch = 9L, op = "test"))
     def bytes(dir: String) = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_manifests", "v000001.json")).toSeq
     assert(bytes(dirX) === bytes(dirD),
@@ -1551,5 +1574,91 @@ class ManifestSpec extends SparkSpec {
       "branch v1 must carry the source schema")
     assert(Manifest.read(spark, bdir).collect().toSet ===
       Manifest.read(spark, dir).collect().toSet)
+  }
+
+  test("header carry policy: every commit verb carries dv, bloomK and " +
+      "kmvK by its own rule, and batch only from its own stamp") {
+    import graft.operators.Manifest.Header
+    val dir = mkdir()
+    val conf = spark.sparkContext.hadoopConfiguration
+    def latest = Manifest.latestVersion(dir, conf)
+    def header(d: String, v: Int): Header = Manifest.readHeader(d, v, conf)
+    def row(id: Long, grp: String, value: Double) =
+      Seq((id, grp, value)).toDF("id", "grp", "value")
+    Manifest.create(fixture, dir, "grp")
+    assert(Manifest.addBloomIndex(spark, dir, "id", bits = 64, k = 3))
+    assert(Manifest.addDistinctSketch(spark, dir, "id", k = 16))
+    assert(Manifest.deleteRows(spark, dir, $"id" === 2L) === 1L)
+    val carried: (Seq[String], Seq[String]) => Boolean = _ == _
+    val extended: (Seq[String], Seq[String]) => Boolean =
+      (b, h) => h.length == b.length + 1 && h.init == b
+    val folded: (Seq[String], Seq[String]) => Boolean = (_, h) => h.isEmpty
+    /** `verb` publishes exactly one version, whose header is checked
+      * against the base's (`from`, default the version it replaced).
+      */
+    def step(op: String, batch: Long = -1L, from: Int = 0,
+        dv: (Seq[String], Seq[String]) => Boolean = carried)(
+        verb: => Any): Unit = {
+      val v = latest
+      val base = header(dir, if (from > 0) from else v)
+      assert(base.dv.nonEmpty || op == "delete",
+        s"fixture bug: no live DV for $op to carry or fold")
+      verb
+      assert(latest === v + 1, s"$op did not publish exactly one version")
+      val h = header(dir, v + 1)
+      assert(h.op === op && h.batch === batch && h.bloomK === 3 &&
+        h.kmvK === 16 && dv(base.dv, h.dv),
+        s"$op: header $h over base $base")
+    }
+    step("append") { Manifest.append(row(7L, "a", 10.0), dir, "grp") }
+    step("append-batch", batch = 11L) {
+      assert(Manifest.commitBatch(row(8L, "a", 80.0), dir, "grp", 11L))
+    }
+    val stamped = latest
+    step("overwrite") {
+      Manifest.overwritePartitions(fixture.filter($"grp" === "b"), dir, "grp")
+    }
+    step("overwrite") {
+      Manifest.commitPrepared(spark, dir, Manifest.prepareOverwrite(
+        fixture.filter($"grp" === "c"), dir, "grp"))
+    }
+    step("merge") {
+      Manifest.merge(spark, dir, "grp", row(3L, "b", 33.0), Seq("id"))
+    }
+    step("auto-compact") {
+      assert(Manifest.autoCompact(spark, dir, "grp",
+        maxFilesPerPartition = 2) > 0)
+    }
+    // restore heads the new version with the RESTORED version's carry,
+    // but not with its stamp
+    step("restore", from = stamped) { Manifest.restore(spark, dir, stamped) }
+    step("replace-batch", batch = 12L) {
+      assert(Manifest.replacePartitionsBatch(fixture.filter($"grp" === "c"),
+        Set.empty, dir, "grp", 12L))
+    }
+    step("dedup-repair") { // id 7 duplicates id 1's value
+      assert(Manifest.dedupRepair(spark, dir, "grp", $"value", "id"))
+    }
+    step("purge") { Manifest.purge(spark, dir, "grp", $"id" === 3L) }
+    step("delete", dv = extended) {
+      assert(Manifest.deleteRows(spark, dir, $"id" === 4L) === 1L)
+    }
+    step("apply-deletes", dv = folded) {
+      assert(Manifest.applyDeletes(spark, dir, "grp"))
+    }
+    step("delete", dv = extended) {
+      assert(Manifest.deleteRows(spark, dir, $"id" === 5L) === 1L)
+    }
+    step("compact", dv = folded) { Manifest.compact(spark, dir, "grp") }
+    step("delete", dv = extended) {
+      assert(Manifest.deleteRows(spark, dir, $"id" === 6L) === 1L)
+    }
+    // a branch's v1 carries the source's DV with absolute paths
+    val src = header(dir, latest)
+    Manifest.branchCreate(spark, dir, "carry")
+    val b = header(Manifest.branchDir(dir, "carry"), 1)
+    assert(b.op === "branch-create" && b.batch === -1L && b.bloomK === 3 &&
+      b.kmvK === 16 && b.dv === src.dv.map(p => s"$dir/$p"),
+      s"branch-create: header $b over source $src")
   }
 }
