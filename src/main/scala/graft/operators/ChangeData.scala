@@ -226,12 +226,10 @@ object ChangeData {
     * this bound the purge entry points route the list through the
     * key-relation overloads instead — a 2^20-id literal is a multi-MB
     * plan the driver re-serializes into every task, where a broadcast
-    * hash join ships the ids once (guide §3). Session-configurable so
-    * cluster deployments can tune the crossover; the default keeps the
-    * small gate lists on the literal path (bench-neutral locally).
+    * hash join ships the ids once. The battery's forget-lists stay on the
+    * literal path.
     */
-  private[graft] def inListMaxIds(spark: SparkSession): Int =
-    spark.conf.get("graft.purge.inListMaxIds", "10000").toInt
+  private[graft] val inListMaxIds = 10000
 
   def purgeRowsKeys(spark: SparkSession, layoutDir: String,
       partitionCol: String, keys: DataFrame, keyCols: Seq[String],

@@ -406,7 +406,7 @@ object KnnGraph {
     require(ids.nonEmpty, "purgeKnnGraphLayout: empty id set")
     require(ids.length <= (1 << 20),
       "purgeKnnGraphLayout: more than 2^20 ids - batch the purge")
-    if (ids.length > ChangeData.inListMaxIds(spark)) {
+    if (ids.length > ChangeData.inListMaxIds) {
       // past the IN-list bound, the key-relation join replaces the
       // multi-MB literal plan (guide §3)
       import spark.implicits._

@@ -198,7 +198,7 @@ object LshLayout {
     require(ids.nonEmpty, "LshLayout.purge: empty id set")
     require(ids.length <= (1 << 20),
       "LshLayout.purge: more than 2^20 ids - batch the purge")
-    if (ids.length > ChangeData.inListMaxIds(spark)) {
+    if (ids.length > ChangeData.inListMaxIds) {
       // the literal IN-list plan is multi-MB past the bound: the
       // key-relation join is the right shape there (guide §3)
       import spark.implicits._

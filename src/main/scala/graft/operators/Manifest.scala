@@ -923,11 +923,12 @@ object Manifest {
   /** Publish pure-addition entries: an append touches nothing that
     * exists, so it never conflicts, and a lost CAS just rebases. A
     * stamped append whose batch a racing duplicate delivery already
-    * committed publishes nothing.
+    * committed publishes nothing (None); otherwise returns the
+    * committed version.
     */
   private[graft] def appendEntries(spark: SparkSession, dir: String,
       entries: Seq[Entry], batchId: Long = -1L, op: String = null,
-      dfSchema: org.apache.spark.sql.types.StructType = null): Unit = {
+      dfSchema: org.apache.spark.sql.types.StructType = null): Option[Int] = {
     val opTag = if (op != null) op
                 else if (batchId >= 0) "append-batch" else "append"
     publish(spark, dir, opTag, "re-write and re-append", entries,
@@ -1275,7 +1276,13 @@ object Manifest {
     val landingParts = src.filter(!col("__del"))
       .select(col("__sp")).distinct().collect().map(_.getString(0)).toSet
     val affected = matchedParts ++ landingParts
-    if (affected.isEmpty) return Some(base)
+    // nothing to rewrite: a stamped batch still commits an entry-less
+    // version ("merge-noop", as deleteKeysBatch's "delete-noop"), or a
+    // redelivery arriving after later commits land its keys would apply
+    if (affected.isEmpty)
+      return if (batchId < 0) Some(base)
+        else appendEntries(spark, dir, Seq.empty, batchId = batchId,
+          op = "merge-noop")
     // new content for the affected partitions: their target rows minus
     // EVERY matched key (replaced, moved, or deleted), plus the
     // source's surviving rows
@@ -1320,8 +1327,10 @@ object Manifest {
         .select("__file").distinct().as(Encoders.STRING)))(_.p).toSet
 
   /** Streaming MERGE (the apply-changes sink): `merge` stamped with the
-    * micro-batch id — a replayed batch applies nothing. Returns whether
-    * this delivery committed (false = replay no-op). Note merge is
+    * micro-batch id — a replayed batch applies nothing. A batch with
+    * nothing to apply still commits its stamp (an entry-less
+    * "merge-noop" version). Returns whether this delivery committed
+    * (false = replay no-op). Note merge is
     * additionally IDEMPOTENT on content (re-applying the same source
     * yields the same rows), so even a lost stamp degrades to a
     * harmless same-content commit, never to duplicated rows.

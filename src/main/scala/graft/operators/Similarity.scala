@@ -874,7 +874,7 @@ object Similarity {
     require(ids.nonEmpty, "purgeIvfLayout: empty id set")
     require(ids.length <= (1 << 20),
       "purgeIvfLayout: more than 2^20 ids - batch the purge")
-    if (ids.length > ChangeData.inListMaxIds(spark)) {
+    if (ids.length > ChangeData.inListMaxIds) {
       // past the IN-list bound the literal plan is itself multi-MB:
       // route through the key-relation join (guide §3 — a broadcast
       // hash join beats a giant literal); results pinned equal in

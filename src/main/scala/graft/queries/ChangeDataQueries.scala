@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Scoped, Tables}
 import graft.operators.{ChangeData, Par}
 import graft.operators.Checkpoints.CutOps
+import GateOps.{flag, refereed}
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture battery: snapshot diff, MERGE/upsert, and SCD
@@ -173,12 +174,9 @@ object ChangeDataQueries {
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), sum("o_orderkey").as("sum_okey"),
           round(sum("o_totalprice"), 2).as("sum_price"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("c_mktsegment"), lit(-1L).as("n"),
-          lit(0L).as("sum_okey"), lit(0.0).as("sum_price"))
-      census
-        .unionByName(viol(replayed, "REPLAY_COMMITTED"))
-        .unionByName(viol(firstBatch == null, "NO_BATCHES"))
+      refereed(census, "c_mktsegment")(
+          flag("REPLAY_COMMITTED", replayed),
+          flag("NO_BATCHES", firstBatch == null))
         .orderBy("c_mktsegment")
     }),
 
@@ -342,11 +340,9 @@ object ChangeDataQueries {
         .select(concat(lit("PIN:"), col("dt").cast("string")).as("dt"))
         .groupBy("dt").agg(count(lit(1)).as("n"))
         .withColumn("sum_value", lit(0.0))
-      val crashViol = s.range(1)
-        .filter(lit(crashMovedVersion))
-        .select(lit("CRASH_VISIBLE").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      freshAgg.unionByName(pinViol).unionByName(crashViol).orderBy("dt")
+      refereed(freshAgg.unionByName(pinViol), "dt")(
+          flag("CRASH_VISIBLE", crashMovedVersion))
+        .orderBy("dt")
     }),
 
     // Manifest DATA SKIPPING (min/max file stats — the Delta/Iceberg
@@ -375,11 +371,8 @@ object ChangeDataQueries {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
           round(sum("o_totalprice"), 2).as("sum_price"))
-      val viol = s.range(1).filter(lit(listed * 2 > total))
-        .select(lit("NOSKIP").as("o_orderstatus"),
-          lit(listed.toLong).as("n"), lit(total.toLong).as("sum_cust"),
-          lit(0.0).as("sum_price"))
-      census.unionByName(viol).orderBy("o_orderstatus")
+      refereed(census, "o_orderstatus")(flag("NOSKIP", listed * 2 > total))
+        .orderBy("o_orderstatus")
     }),
 
     // Manifest COMPACTION (the q319 accretion repair): three appends
@@ -415,12 +408,9 @@ object ChangeDataQueries {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
           round(sum("o_totalprice"), 2).as("sum_price"))
-      val viol = s.range(1)
-        .filter(lit(after > nParts || after >= before))
-        .select(lit("FRAGMENTED").as("o_orderstatus"),
-          lit(after.toLong).as("n"), lit(before.toLong).as("sum_cust"),
-          lit(0.0).as("sum_price"))
-      census.unionByName(viol).orderBy("o_orderstatus")
+      refereed(census, "o_orderstatus")(
+          flag("FRAGMENTED", after > nParts || after >= before))
+        .orderBy("o_orderstatus")
     }),
 
     // OPTIMISTIC CONCURRENCY on the manifest (the Delta/Iceberg commit
@@ -465,14 +455,10 @@ object ChangeDataQueries {
       val census = Manifest.read(s, tmp)
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1)
-        .filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(vA != 2 || vB != 3, "REBASE_LOST"))
-        .unionByName(viol(!cFailed, "CONFLICT_MISSED"))
-        .unionByName(viol(vAfterC != 3, "LOSER_MUTATED"))
+      refereed(census, "dt")(
+          flag("REBASE_LOST", vA != 2 || vB != 3),
+          flag("CONFLICT_MISSED", !cFailed),
+          flag("LOSER_MUTATED", vAfterC != 3))
         .orderBy("dt")
     }),
 
@@ -527,15 +513,10 @@ object ChangeDataQueries {
         s.sparkContext.hadoopConfiguration) != 2
       val out = Manifest.catalogRead(s, tmp, "census")
         .select(col("source"), col("n"), col("sum_chars"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("source"), lit(-1L).as("n"),
-          lit(0L).as("sum_chars"))
-      def sent(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(name).as("source"), lit(-1L).as("n"),
-          lit(0L).as("sum_chars"))
-      out.unionByName(sent(pinProbe, "PIN_INVARIANT"))
-        .unionByName(sent(latestProbe, "LATEST_INVARIANT"))
-        .unionByName(viol(crashMoved, "CRASH_VISIBLE"))
+      refereed(out, "source")(
+          flag("PIN_INVARIANT", pinProbe),
+          flag("LATEST_INVARIANT", latestProbe),
+          flag("CRASH_VISIBLE", crashMoved))
         .orderBy("source")
     }),
 
@@ -579,12 +560,9 @@ object ChangeDataQueries {
         .groupBy("lang")
         .agg(count(lit(1)).as("n"), sum("n_chars").as("sum_chars"),
           sum("doc_id").as("sum_ids"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("lang"), lit(-1L).as("n"),
-          lit(0L).as("sum_chars"), lit(0L).as("sum_ids"))
-      census
-        .unionByName(viol(!did1 || v1 != 2, "NOT_ATOMIC"))
-        .unionByName(viol(did2 || v2 != v1, "NOT_IDEMPOTENT"))
+      refereed(census, "lang")(
+          flag("NOT_ATOMIC", !did1 || v1 != 2),
+          flag("NOT_IDEMPOTENT", did2 || v2 != v1))
         .orderBy("lang")
     }),
 
@@ -633,21 +611,12 @@ object ChangeDataQueries {
           val (df, listed, total) = Manifest.readPoint(d, tmp, "o_orderkey", keys.head)
           (Scoped.rebind(df, s), listed, total)
         }
-      val pathProbe = s.range(1)
-        .filter(lit(xListed != dListed || xTotal != dTotal))
-        .select(lit(1).as("one"))
-        .unionAll(xDf.exceptAll(dDf).unionAll(dDf.exceptAll(xDf))
-          .select(lit(1).as("one")))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(-1L).as("o_orderkey"), lit(-1L).as("o_custkey"),
-          lit(name).as("o_orderstatus"), lit(0.0).as("o_totalprice"))
-      def sent(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(-1L).as("o_orderkey"),
-          lit(-1L).as("o_custkey"), lit(name).as("o_orderstatus"),
-          lit(0.0).as("o_totalprice"))
-      rows.unionByName(viol(noskip, "NOSKIP"))
-        .unionByName(sent(ghost, "GHOST"))
-        .unionByName(sent(pathProbe, "PATH_DIVERGED"))
+      refereed(rows, "o_orderstatus")(
+          flag("NOSKIP", noskip),
+          flag("GHOST", ghost),
+          flag("PATH_DIVERGED", xListed != dListed || xTotal != dTotal),
+          flag("PATH_DIVERGED",
+            xDf.exceptAll(dDf).unionAll(dDf.exceptAll(xDf))))
         .orderBy("o_orderkey")
     }),
 
@@ -680,9 +649,7 @@ object ChangeDataQueries {
       val census = feed.groupBy(col("_change"),
           col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      census.unionByName(GateOps.sentinel(selfNonEmpty,
-          lit("SELF_NONEMPTY").as("_change"), lit("").as("dt"),
-          lit(-1L).as("n"), lit(0.0).as("sum_value")))
+      refereed(census, "_change")(flag("SELF_NONEMPTY", selfNonEmpty))
         .orderBy("_change", "dt")
     }),
 
@@ -723,10 +690,8 @@ object ChangeDataQueries {
         .unionAll(direct.exceptAll(replica))
       val census = replica.groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      val viol = GateOps.sentinel(diverged,
-        lit("REPLICA_DIVERGED").as("dt"), lit(-1L).as("n"),
-        lit(0.0).as("sum_value"))
-      census.unionByName(viol).orderBy("dt")
+      refereed(census, "dt")(flag("REPLICA_DIVERGED", diverged))
+        .orderBy("dt")
     }),
 
     // ZERO-COPY BRANCHES (git-for-data over the manifest layer): two
@@ -775,16 +740,11 @@ object ChangeDataQueries {
       val census = Manifest.read(s, tmp)
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(copied, "BRANCH_COPIED"))
-        .unionByName(GateOps.sentinel(mainLeaked,
-          lit("MAIN_LEAKED").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
-        .unionByName(viol(!conflicted, "NO_CONFLICT"))
-        .unionByName(viol(vAfter != vMerge, "LOSER_MUTATED"))
+      refereed(census, "dt")(
+          flag("BRANCH_COPIED", copied),
+          flag("MAIN_LEAKED", mainLeaked),
+          flag("NO_CONFLICT", !conflicted),
+          flag("LOSER_MUTATED", vAfter != vMerge))
         .orderBy("dt")
     }),
 
@@ -822,15 +782,10 @@ object ChangeDataQueries {
         .unionAll(applied.exceptAll(live))
       val census = applied.groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("event_type"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(n1 == 0 || files2 != files1, "MOR_REWROTE"))
-        .unionByName(viol(n2 != 0, "NOT_IDEMPOTENT"))
-        .unionByName(GateOps.sentinel(applyDiverged,
-          lit("APPLY_DIVERGED").as("event_type"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
+      refereed(census, "event_type")(
+          flag("MOR_REWROTE", n1 == 0 || files2 != files1),
+          flag("NOT_IDEMPOTENT", n2 != 0),
+          flag("APPLY_DIVERGED", applyDiverged))
         .orderBy("event_type")
     }),
 
@@ -867,33 +822,24 @@ object ChangeDataQueries {
         .drop("__file", "__pos")
       val expected2 = live1.filter(col("event_type") =!= "error")
       val cumulativeProbe = live2.exceptAll(expected2)
-        .unionAll(expected2.exceptAll(live2)).select(lit(1).as("one"))
+        .unionAll(expected2.exceptAll(live2))
       val tt = Manifest.readWithDeletes(s, tmp, version = 1)
         .drop("__file", "__pos")
       val ttProbe = tt.exceptAll(ev).unionAll(ev.exceptAll(tt))
-        .select(lit(1).as("one"))
       val applied = Manifest.applyDeletes(s, tmp, "dt")
       val conf = s.sparkContext.hadoopConfiguration
       val dvProbe = Manifest.deletionVector(s, tmp,
-        Manifest.latestVersion(tmp, conf)).select(lit(1).as("one"))
+        Manifest.latestVersion(tmp, conf))
       val census = Manifest.read(s, tmp)
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      def boolProbe(cond: Boolean) =
-        s.range(1).filter(lit(cond)).select(lit(1).as("one"))
-      def sent(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(n1 == 0 || files2 != files1, "MOR_REWROTE"))
-        .unionByName(sent(boolProbe(n2 == 0).unionAll(cumulativeProbe),
-          "NOT_CUMULATIVE"))
-        .unionByName(sent(ttProbe, "TT_DIVERGED"))
-        .unionByName(sent(boolProbe(!applied).unionAll(dvProbe),
-          "DV_NOT_DROPPED"))
+      refereed(census, "dt")(
+          flag("MOR_REWROTE", n1 == 0 || files2 != files1),
+          flag("NOT_CUMULATIVE", n2 == 0),
+          flag("NOT_CUMULATIVE", cumulativeProbe),
+          flag("TT_DIVERGED", ttProbe),
+          flag("DV_NOT_DROPPED", !applied),
+          flag("DV_NOT_DROPPED", dvProbe))
         .orderBy("dt")
     }),
 
@@ -980,17 +926,11 @@ object ChangeDataQueries {
       val staleProbe = Manifest.entriesRelation(s, tmp)
         .agg(count(lit(1)).as("c2"))
         .crossJoin(parsed.agg(count(lit(1)).as("c1")))
-        .filter(col("c2") <= col("c1")).select(lit(1).as("one"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      def sent(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(ckptStale, "CKPT_STALE"))
-        .unionByName(sent(parseDiverged, "PARSE_DIVERGED"))
-        .unionByName(sent(staleProbe, "STALE_SERVED"))
+        .filter(col("c2") <= col("c1"))
+      refereed(census, "dt")(
+          flag("CKPT_STALE", ckptStale),
+          flag("PARSE_DIVERGED", parseDiverged),
+          flag("STALE_SERVED", staleProbe))
         .orderBy("dt")
     }),
 
@@ -1031,12 +971,9 @@ object ChangeDataQueries {
            |  ROUND(SUM(value), 2) AS sum_value
            |FROM graft_snapshot('$tmp', -1)
            |GROUP BY dt""".stripMargin)
-      def sent(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(sent(histDiverged, "SQL_HISTORY_DIVERGED"))
-        .unionByName(sent(ttDiverged, "TT_DIVERGED"))
+      refereed(census, "dt")(
+          flag("SQL_HISTORY_DIVERGED", histDiverged),
+          flag("TT_DIVERGED", ttDiverged))
         .orderBy("dt")
     }),
 
@@ -1070,12 +1007,9 @@ object ChangeDataQueries {
       val nFilesProbe = Manifest.entriesRelation(s, tmp)
         .agg(count(lit(1)).as("c"))
         .filter(col("c") =!= lit(row.getLong(2)))
-      d.select(col("version"), col("op"), col("n_partitions"),
-          col("n_dv_deltas"), col("checkpoint_version"))
-        .unionByName(GateOps.sentinel(nFilesProbe,
-          lit(-1L).as("version"), lit("N_FILES_DIVERGED").as("op"),
-          lit(-1L).as("n_partitions"), lit(-1L).as("n_dv_deltas"),
-          lit(-1L).as("checkpoint_version")))
+      refereed(d.select(col("version"), col("op"), col("n_partitions"),
+          col("n_dv_deltas"), col("checkpoint_version")), "op")(
+          flag("N_FILES_DIVERGED", nFilesProbe))
         .orderBy("version")
     }),
 
@@ -1133,26 +1067,19 @@ object ChangeDataQueries {
       val nBefore = Manifest.readWithDeletes(s, tmp).count()
       val vac = GraftSql.run(s, s"GRAFT VACUUM '$tmp'").head()
       // the post-vacuum row-count check reads final state — it rides
-      // the final job as a lazy probe, OR-ed (via union) with the
-      // driver-side receipt check so the sentinel fires once either way
-      val vacuumProbe = s.range(1).filter(lit(vac.getLong(1) <= 0L))
-        .select(lit(1).as("one"))
-        .unionAll(Manifest.readWithDeletes(s, tmp)
-          .agg(count(lit(1)).as("c")).filter(col("c") =!= nBefore)
-          .select(lit(1).as("one")))
+      // the final job as a lazy probe, OR-ed (one flag name) with the
+      // driver-side receipt check so the referee fires once either way
+      val vacuumProbe = Manifest.readWithDeletes(s, tmp)
+        .agg(count(lit(1)).as("c")).filter(col("c") =!= nBefore)
       val census = Manifest.readWithDeletes(s, tmp)
         .drop("__file", "__pos")
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1)
-        .filter(lit(cond)).select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      Scoped.rebind(census
-        .unionByName(viol(dvNotFolded, "DV_NOT_FOLDED"))
-        .unionByName(viol(doorDiverged, "DOOR_DIVERGED"))
-        .unionByName(GateOps.sentinel(vacuumProbe,
-          lit("VACUUM_BROKE").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
+      Scoped.rebind(refereed(census, "dt")(
+          flag("DV_NOT_FOLDED", dvNotFolded),
+          flag("DOOR_DIVERGED", doorDiverged),
+          flag("VACUUM_BROKE", vac.getLong(1) <= 0L),
+          flag("VACUUM_BROKE", vacuumProbe))
         .orderBy("dt"), caller)
     }),
 
@@ -1205,16 +1132,10 @@ object ChangeDataQueries {
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
         .withColumn("user_id", col("user_id").cast("string"))
-      def viol(cond: Boolean, name: String) = s.range(1)
-        .filter(lit(cond)).select(lit(name).as("user_id"),
-          lit(-1L).as("n"), lit(0.0).as("sum_value"))
-      def sent(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(name).as("user_id"),
-          lit(-1L).as("n"), lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(notStamped, "NOT_STAMPED"))
-        .unionByName(sent(noNoopOp, "NO_NOOP_OP"))
-        .unionByName(sent(replayDeleted, "REPLAY_DELETED"))
+      refereed(census, "user_id")(
+          flag("NOT_STAMPED", notStamped),
+          flag("NO_NOOP_OP", noNoopOp),
+          flag("REPLAY_DELETED", replayDeleted))
         .orderBy("user_id")
     }),
 
@@ -1257,14 +1178,9 @@ object ChangeDataQueries {
       val census = Manifest.readWithDeletes(s, tmp)
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(notApplied, "NOT_APPLIED"))
-        .unionByName(GateOps.sentinel(mainLeaked,
-          lit("MAIN_LEAKED").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
+      refereed(census, "dt")(
+          flag("NOT_APPLIED", notApplied),
+          flag("MAIN_LEAKED", mainLeaked))
         .orderBy("dt")
     }),
 
@@ -1304,14 +1220,9 @@ object ChangeDataQueries {
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"),
           sum(when(col("user_id").isin(3L, 7L), 1L).otherwise(0L))
             .as("n_victim_rows"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"), lit(-1L).as("n_victim_rows"))
-      census
-        .unionByName(GateOps.sentinel(wrongCount, lit("WRONG_COUNT").as("dt"),
-          lit(-1L).as("n"), lit(0.0).as("sum_value"),
-          lit(-1L).as("n_victim_rows")))
-        .unionByName(viol(notIdempotent, "NOT_IDEMPOTENT"))
+      refereed(census, "dt")(
+          flag("WRONG_COUNT", wrongCount),
+          flag("NOT_IDEMPOTENT", notIdempotent))
         .orderBy("dt")
     }),
 
@@ -1360,15 +1271,10 @@ object ChangeDataQueries {
       // against the sketch's driver-side estimate
       val errProbe = o.agg(countDistinct("o_custkey").as("c"))
         .filter(abs(lit(est) - col("c")) / col("c") > 0.08)
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(-1L).as("o_orderkey"), lit(-1L).as("o_custkey"),
-          lit(name).as("o_orderstatus"), lit(0.0).as("o_totalprice"))
-      rows.unionByName(viol(noskip, "NOSKIP"))
-        .unionByName(viol(notConverged, "NOT_CONVERGED"))
-        .unionByName(GateOps.sentinel(errProbe,
-          lit(-1L).as("o_orderkey"), lit(-1L).as("o_custkey"),
-          lit("ERR_BOUND").as("o_orderstatus"),
-          lit(0.0).as("o_totalprice")))
+      refereed(rows, "o_orderstatus")(
+          flag("NOSKIP", noskip),
+          flag("NOT_CONVERGED", notConverged),
+          flag("ERR_BOUND", errProbe))
         .orderBy("o_orderkey")
     }),
 
@@ -1410,15 +1316,10 @@ object ChangeDataQueries {
         .unionAll(applied.exceptAll(live))
       val census = applied.groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("event_type"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(n1 == 0 || files2 != files1, "MOR_REWROTE"))
-        .unionByName(viol(n2 != 0, "NOT_IDEMPOTENT"))
-        .unionByName(GateOps.sentinel(applyDiverged,
-          lit("APPLY_DIVERGED").as("event_type"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
+      refereed(census, "event_type")(
+          flag("MOR_REWROTE", n1 == 0 || files2 != files1),
+          flag("NOT_IDEMPOTENT", n2 != 0),
+          flag("APPLY_DIVERGED", applyDiverged))
         .orderBy("event_type")
     }),
 
@@ -1475,14 +1376,12 @@ object ChangeDataQueries {
       }
       val census = o.groupBy("o_orderstatus")
         .agg(countDistinct("o_custkey").as("n_distinct"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("o_orderstatus"), lit(-1L).as("n_distinct"))
-      census
-        .unionByName(viol(errBound, "ERR_BOUND"))
-        .unionByName(viol(notConverged, "NOT_CONVERGED"))
-        .unionByName(viol(silentStale, "SILENT_STALE"))
-        .unionByName(viol(refreshBroken, "REFRESH_BROKEN"))
-        .unionByName(viol(ndvPathDiverged, "NDV_PATH_DIVERGED"))
+      refereed(census, "o_orderstatus")(
+          flag("ERR_BOUND", errBound),
+          flag("NOT_CONVERGED", notConverged),
+          flag("SILENT_STALE", silentStale),
+          flag("REFRESH_BROKEN", refreshBroken),
+          flag("NDV_PATH_DIVERGED", ndvPathDiverged))
         .orderBy("o_orderstatus")
     }),
 
@@ -1534,10 +1433,8 @@ object ChangeDataQueries {
       val census = Manifest.read(s, tmp).groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").cast("long").as("sum_chars"))
-      val viol = s.range(1).filter(lit(replayed.get() > 0))
-        .select(lit("REPLAYED").as("source"), lit(-1L).as("n_docs"),
-          lit(-1L).as("sum_chars"))
-      census.unionByName(viol).orderBy("source")
+      refereed(census, "source")(flag("REPLAYED", replayed.get() > 0))
+        .orderBy("source")
     }),
 
     // STREAMING MERGE-ON-READ DELETE — the ingestion-door twin of the
@@ -1584,12 +1481,9 @@ object ChangeDataQueries {
         .drop("__file", "__pos")
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(files2 != files1, "MOR_REWROTE"))
-        .unionByName(viol(replayed.get() > 0, "REPLAYED"))
+      refereed(census, "dt")(
+          flag("MOR_REWROTE", files2 != files1),
+          flag("REPLAYED", replayed.get() > 0))
         .orderBy("dt")
     }),
 
@@ -1632,12 +1526,9 @@ object ChangeDataQueries {
       val (_, listed2, total2) = Manifest.readRange2(s, tmp, umn, umx,
         emn, eHi)
       val dim2Noskip = listed2 >= total2
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-          lit(name).as("dt"), lit(0.0).as("value"))
-      rows
-        .unionByName(viol(noskip, "NOSKIP"))
-        .unionByName(viol(dim2Noskip, "DIM2_NOSKIP"))
+      refereed(rows, "dt")(
+          flag("NOSKIP", noskip),
+          flag("DIM2_NOSKIP", dim2Noskip))
         .orderBy("event_id")
     }),
 
@@ -1693,14 +1584,9 @@ object ChangeDataQueries {
         .unionAll(live1.exceptAll(live2))
       val census = live2.groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(untouchedRewritten, "UNTOUCHED_REWRITTEN"))
-        .unionByName(GateOps.sentinel(notIdem,
-          lit("NOT_IDEMPOTENT").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
+      refereed(census, "dt")(
+          flag("UNTOUCHED_REWRITTEN", untouchedRewritten),
+          flag("NOT_IDEMPOTENT", notIdem))
         .orderBy("dt")
     }),
 
@@ -1738,14 +1624,10 @@ object ChangeDataQueries {
       val census = Manifest.read(s, tmp)
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(nHot != 1 || untouchedRewritten,
-          "UNTOUCHED_REWRITTEN"))
-        .unionByName(viol(hotFiles != 1, "NOT_COMPACTED"))
-        .unionByName(viol(nAgain != 0, "NOT_CONVERGED"))
+      refereed(census, "dt")(
+          flag("UNTOUCHED_REWRITTEN", nHot != 1 || untouchedRewritten),
+          flag("NOT_COMPACTED", hotFiles != 1),
+          flag("NOT_CONVERGED", nAgain != 0))
         .orderBy("dt")
     }),
 
@@ -1793,14 +1675,9 @@ object ChangeDataQueries {
         .unionAll(preVac.exceptAll(postVac))
       val census = postVac.groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(viol(forensicsLost, "FORENSICS_LOST"))
-        .unionByName(GateOps.sentinel(vacProbe,
-          lit("VACUUM_BROKE").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
+      refereed(census, "dt")(
+          flag("FORENSICS_LOST", forensicsLost),
+          flag("VACUUM_BROKE", vacProbe))
         .orderBy("dt")
     }),
 
@@ -1840,10 +1717,10 @@ object ChangeDataQueries {
       val appended = live1
         .filter(col("dt") === lit("2024-02-01").cast("date"))
       val appendDiff = appended.exceptAll(extra)
-        .unionAll(extra.exceptAll(appended)).select(lit(1).as("one"))
+        .unionAll(extra.exceptAll(appended))
       val deleteMissed = live1
         .filter(col("dt") =!= lit("2024-02-01").cast("date") &&
-          col("user_id").isin(3L, 7L)).select(lit(1).as("one"))
+          col("user_id").isin(3L, 7L))
       // writer C stages a delete, then its victims' files get rewritten
       val prepC = Manifest.prepareDelete(s, tmp,
         col("event_type") === "view")
@@ -1863,18 +1740,13 @@ object ChangeDataQueries {
         .drop("__file", "__pos")
         .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(GateOps.sentinel(
-          s.range(1).filter(lit(n1 == 0)).select(lit(1).as("one"))
-            .unionAll(appendDiff).unionAll(deleteMissed),
-          lit("BOTH_LOST").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
-        .unionByName(viol(!conflicted, "NO_CONFLICT"))
-        .unionByName(viol(deltaLeaked, "DELTA_LEAKED"))
-        .unionByName(viol(vAfter != vBefore, "LOSER_MUTATED"))
+      refereed(census, "dt")(
+          flag("BOTH_LOST", n1 == 0),
+          flag("BOTH_LOST", appendDiff),
+          flag("BOTH_LOST", deleteMissed),
+          flag("NO_CONFLICT", !conflicted),
+          flag("DELTA_LEAKED", deltaLeaked),
+          flag("LOSER_MUTATED", vAfter != vBefore))
         .orderBy("dt")
     }),
 
@@ -1921,14 +1793,9 @@ object ChangeDataQueries {
       }
       val census = after.groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(GateOps.sentinel(corrupted,
-          lit("BRANCH_CORRUPTED").as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value")))
-        .unionByName(viol(vacNoop, "VACUUM_NOOP"))
+      refereed(census, "dt")(
+          flag("BRANCH_CORRUPTED", corrupted),
+          flag("VACUUM_NOOP", vacNoop))
         .orderBy("dt")
     }),
 
@@ -1992,13 +1859,9 @@ object ChangeDataQueries {
         .unionAll(srcLive.exceptAll(replica))
       val census = replica.groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("dt"), lit(-1L).as("n"),
-          lit(0.0).as("sum_value"))
-      census
-        .unionByName(GateOps.sentinel(diverged, lit("DIVERGED").as("dt"),
-          lit(-1L).as("n"), lit(0.0).as("sum_value")))
-        .unionByName(viol(replayed, "REPLAYED"))
+      refereed(census, "dt")(
+          flag("DIVERGED", diverged),
+          flag("REPLAYED", replayed))
         .orderBy("dt")
     }),
 
@@ -2037,10 +1900,8 @@ object ChangeDataQueries {
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"),
           sum(when(col("user_id").isin(3L, 7L), 1L).otherwise(0L))
             .as("n_victim_rows"))
-      val ttViol = s.range(1).filter(lit(ttViolations > 0))
-        .select(lit("TT_DIVERGED").as("dt"), lit(ttViolations).as("n"),
-          lit(0.0).as("sum_value"), lit(-1L).as("n_victim_rows"))
-      postAgg.unionByName(ttViol).orderBy("dt")
+      refereed(postAgg, "dt")(flag("TT_DIVERGED", ttViolations > 0))
+        .orderBy("dt")
     })
   )
 

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Dedup, Par}
 import graft.operators.Checkpoints.CutOps
+import GateOps.{flag, refereed}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -263,13 +264,9 @@ object DedupQueries {
       val appendBroken = LshLayout.dedupAgainstLayout(tmp,
         d.join(kept.select("doc_id"), Seq("doc_id")), "doc_id", "text",
         threshold = 0.8)
-      def viol(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(-1L).as("doc_id"),
-          lit(name).as("lang"), lit("").as("source"),
-          lit(-1L).as("n_chars"))
-      kept
-        .unionByName(viol(diverged, "DIVERGED"))
-        .unionByName(viol(appendBroken, "APPEND_BROKEN"))
+      refereed(kept, "lang")(
+          flag("DIVERGED", diverged),
+          flag("APPEND_BROKEN", appendBroken))
         .orderBy("doc_id")
     }),
 
@@ -311,13 +308,9 @@ object DedupQueries {
       val admitted = LshLayout.dedupAgainstLayout(tmp, d, "doc_id",
           "text", threshold = 0.8)
         .select("doc_id", "lang", "source", "n_chars")
-      def viol(probe: org.apache.spark.sql.DataFrame, name: String) =
-        GateOps.sentinel(probe, lit(-1L).as("doc_id"),
-          lit(name).as("lang"), lit("").as("source"),
-          lit(-1L).as("n_chars"))
-      admitted
-        .unionByName(viol(leftKeys, "CENSUS_KEYS"))
-        .unionByName(viol(leftSets, "CENSUS_SETS"))
+      refereed(admitted, "lang")(
+          flag("CENSUS_KEYS", leftKeys),
+          flag("CENSUS_SETS", leftSets))
         .orderBy("doc_id")
     }),
 

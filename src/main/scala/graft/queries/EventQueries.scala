@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.Multimodal
 import graft.operators.Checkpoints.CutOps
+import GateOps.{flag, refereed}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -179,12 +180,9 @@ object EventQueries {
       val released = Profile.dpCountRelease(cohorts, "cohort", 500L)
       val admitted = released.crossJoin(gate(2000L)).drop("__g")
       val refused = released.crossJoin(gate(1300L)).drop("__g")
-      val refuseViol = refused.limit(1)
-        .select(lit(-2L).as("cohort"), lit(-1L).as("released"))
-      val admitViol = s.range(1)
-        .filter(lit(admitted.limit(1).isEmpty))
-        .select(lit(-1L).as("cohort"), lit(-1L).as("released"))
-      admitted.unionByName(refuseViol).unionByName(admitViol)
+      refereed(admitted, "cohort")(
+          flag("-2", refused),
+          flag("-1", admitted.limit(1).isEmpty))
         .orderBy("cohort")
     }),
 

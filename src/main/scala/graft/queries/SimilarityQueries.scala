@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Similarity, Par}
 import graft.operators.Checkpoints.CutOps
+import GateOps.{flag, refereed}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -230,11 +231,8 @@ object SimilarityQueries {
         .agg(count(lit(1)).cast("double").as("metric"))
         .filter(col("metric") > 0)
         .select(lit("predicate_escape").as("violation"), col("metric"))
-      val starved = s.range(1)
-        .filter(lit(filtered.limit(5).count() < 5))
-        .select(lit("vacuous_fixture").as("violation"),
-          lit(0.0).as("metric"))
-      floor.unionByName(escaped).unionByName(starved)
+      refereed(floor.unionByName(escaped), "violation")(
+          flag("vacuous_fixture", filtered.limit(5).count() < 5))
         .orderBy("violation")
     }),
 
@@ -298,12 +296,12 @@ object SimilarityQueries {
       // the two recall probes read disjoint, finished layouts
       val (rStale, rFresh) = Par.all(
         () => recallOf(stale), () => recallOf(fresh))
-      def viol(cond: Boolean, name: String) = s.range(1).filter(lit(cond))
-        .select(lit(name).as("violation"),
-          round(lit(rFresh - rStale), 6).as("metric"))
-      viol(rFresh < rStale, "REGRESSED")
-        .unionByName(viol(rFresh <= rStale, "NOT_IMPROVED"))
-        .unionByName(viol(rFresh < 0.8, "FLOOR"))
+      import s.implicits._
+      val verdict = Seq.empty[(String, Double)].toDF("violation", "metric")
+      refereed(verdict, "violation")(
+          flag("REGRESSED", rFresh < rStale),
+          flag("NOT_IMPROVED", rFresh <= rStale),
+          flag("FLOOR", rFresh < 0.8))
         .orderBy("violation")
     }),
 
@@ -1246,16 +1244,11 @@ object SimilarityQueries {
       val viaGraph = KnnGraph.searchFromLayout(s"$tmp/knn", victims,
         "vec_id", "embedding", k = 5, ef = nSurv, hops = 1,
         nprobe = nlist)
-      def viol(probe: org.apache.spark.sql.DataFrame, tag: Long) =
-        GateOps.sentinel(probe, lit(-1L).as("query_id"),
-          lit(tag).as("rank"), lit(-1L).as("neighbor_id"),
-          lit(-1.0).as("sim"))
-      viaIvf.exceptAll(exact).unionAll(exact.exceptAll(viaIvf))
+      val diffs = viaIvf.exceptAll(exact).unionAll(exact.exceptAll(viaIvf))
         .unionAll(viaGraph.exceptAll(exact))
         .unionAll(exact.exceptAll(viaGraph))
-        .unionAll(viol(leftIvf, 1L))
-        .unionAll(viol(leftVec, 2L))
-        .unionAll(viol(leftGraph, 3L))
+      refereed(diffs, "rank")(
+          flag("1", leftIvf), flag("2", leftVec), flag("3", leftGraph))
         .withColumnRenamed("rank", "rnk")
         .orderBy("query_id", "rnk", "neighbor_id")
     }),

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.Checkpoints.CutOps
+import GateOps.{flag, refereed}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -2275,14 +2276,11 @@ object TextQueries {
         }
         .reduce(_.join(_, Seq("doc_id", "pos")))
         .groupBy("doc_id").agg(count(lit(1)).as("n_occ"))
-      def viol(cond: Boolean, tag: Long) = s.range(1).filter(lit(cond))
-        .select(lit(-1L).as("doc_id"), lit(tag).as("n_occ"))
-      hits
-        .unionByName(GateOps.sentinel(leftover, lit(-1L).as("doc_id"),
-          lit(1L).as("n_occ")))
-        .unionByName(viol(n2 != 0L, 2L))
-        .unionByName(viol(!stillBucketed, 3L))
-        .unionByName(viol(n == 0L, 4L))
+      refereed(hits, "n_occ")(
+          flag("1", leftover),
+          flag("2", n2 != 0L),
+          flag("3", !stillBucketed),
+          flag("4", n == 0L))
         .orderBy("doc_id")
     }),
 
@@ -3512,11 +3510,8 @@ object TextQueries {
           Seq("source"))
         .filter(col("source") =!= "src3" && col("b") =!= col("p"))
         .select(lit("bystander_flipped").as("violation"), col("source"))
-      val vacuous = s.range(1)
-        .filter(lit(cur.filter(col("source") === "src3").isEmpty))
-        .select(lit("vacuous_fixture").as("violation"),
-          lit("src3").as("source"))
-      silent.unionByName(flipped).unionByName(vacuous)
+      refereed(silent.unionByName(flipped), "violation")(
+          flag("vacuous_fixture", cur.filter(col("source") === "src3").isEmpty))
         .orderBy("violation", "source")
     }),
 

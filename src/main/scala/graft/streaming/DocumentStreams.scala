@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{GraftSession, Tables}
 import graft.expressions.{ArrayOps, TextOps}
 import graft.functions.TextFunctions._
+import graft.queries.GateOps.{flag, refereed}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -630,11 +631,8 @@ object DocumentStreams {
     val census = graft.operators.Manifest.read(spark, out)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-    val viol = spark.range(1)
-      .filter(lit(replayCommitted.get() > 0))
-      .select(lit("REPLAYED").as("source"),
-        lit(replayCommitted.get()).as("n_docs"), lit(-1L).as("sum_chars"))
-    census.unionByName(viol).orderBy("source")
+    refereed(census, "source")(flag("REPLAYED", replayCommitted.get() > 0))
+      .orderBy("source")
   }
 
   /** Streaming frequent-token downsampling — q182's rewrite applied at

@@ -15,7 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * attach (`indexPass`). Likewise every verb that stages bytes and then
   * publishes them goes through `Manifest.publish`, the one
   * optimistic-concurrency loop; a second lost-race retry is how four
-  * drifting copies of that loop came about.
+  * drifting copies of that loop came about. And every query gate
+  * reports a broken invariant through `GateOps.refereed`; a one-row
+  * relation filtered on a driver flag, or a probe's first row selected
+  * as literals, is how about seventy hand-typed copies of that row grew
+  * across the battery.
   */
 class CensusGuardSpec extends AnyFunSuite {
 
@@ -37,21 +41,34 @@ class CensusGuardSpec extends AnyFunSuite {
     raw"(?:def|val|var|class|case class|object|type) (\w+)"
   private val memberRe = member.r
 
-  /** `pattern`'s hits in the code of `path` — doc and line comments and
-    * a trailing `//` tail skipped — as (enclosing member, location).
+  /** A hand-built referee row, even split across lines. */
+  private val refereeRow =
+    raw"range\(1\)\s*\.filter\(lit\(|\.limit\(1\)\s*\.select\(lit\(".r
+
+  private val sources = Files.walk(Paths.get("src/main/scala")).iterator()
+    .asScala.filter(_.toString.endsWith(".scala")).toSeq
+
+  /** The lines of `path` with doc and line comments and a trailing `//`
+    * tail blanked.
+    */
+  private def code(path: Path): Seq[String] =
+    Files.readAllLines(path).asScala.toSeq.map { line =>
+      val t = line.trim
+      if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
+      else line.replaceAll("//.*$", "")
+    }
+
+  /** `pattern`'s hits in the code of `path` as (enclosing member,
+    * location).
     */
   private def hits(path: Path, pattern: Regex): Seq[(String, String)] = {
     var owner = ""
-    Files.readAllLines(path).asScala.toSeq.zipWithIndex.flatMap {
-      case (line, i) =>
+    Files.readAllLines(path).asScala.toSeq.zip(code(path)).zipWithIndex
+      .flatMap { case ((line, c), i) =>
         memberRe.findFirstMatchIn(line).foreach(m => owner = m.group(1))
-        val t = line.trim
-        val code =
-          if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
-          else line.replaceAll("//.*$", "")
-        pattern.findFirstIn(code)
-          .map(_ => owner -> s"$path:${i + 1} (in $owner): $t")
-    }
+        pattern.findFirstIn(c)
+          .map(_ => owner -> s"$path:${i + 1} (in $owner): ${line.trim}")
+      }
   }
 
   test("Manifest reads entries only in census, vacuum and indexPass") {
@@ -66,8 +83,6 @@ class CensusGuardSpec extends AnyFunSuite {
   }
 
   test("src/main retries a lost publish race only in Manifest.publish") {
-    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
     val found = sources.flatMap(p =>
       hits(p, retry).map { case (owner, at) => (p == manifest, owner, at) })
     assert(found.exists { case (m, owner, _) => m && owner == "publish" },
@@ -80,6 +95,23 @@ class CensusGuardSpec extends AnyFunSuite {
       "a lost-race retry loop outside Manifest.publish — stage the bytes " +
         "and publish them through `publish`, which re-checks the stamp, " +
         "the staged bytes and the write-set conflicts on every attempt:\n" +
+        offences.mkString("\n"))
+  }
+
+  test("src/main builds referee rows only in GateOps.refereed") {
+    assert(refereeRow.findFirstIn("s.range(1)\n    .filter(lit(cond))")
+      .nonEmpty && refereeRow.findFirstIn("p.limit(1)\n  .select(lit(1))")
+      .nonEmpty, "the referee-row pattern no longer matches its idioms")
+    val offences = sources.filterNot(_.endsWith("queries/GateOps.scala"))
+      .flatMap { p =>
+        val text = code(p).mkString("\n")
+        refereeRow.findAllMatchIn(text).map(m =>
+          s"$p:${text.take(m.start).count(_ == '\n') + 1}")
+      }
+    assert(offences.isEmpty,
+      "a hand-built referee row outside GateOps — report the violation " +
+        "as `GateOps.refereed(out, label)(flag(name, cond | probe))`, " +
+        "which types the row from the gate's own schema:\n" +
         offences.mkString("\n"))
   }
 }

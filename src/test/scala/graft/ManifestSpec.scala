@@ -856,6 +856,34 @@ class ManifestSpec extends SparkSpec {
       .select("value").as[Double].head() === 111.0)
   }
 
+  test("a merge batch with nothing to apply is STAMPED: redelivery " +
+      "after an append lands its key deletes nothing") {
+    val dir = mkdir()
+    Manifest.create(fixture, dir, "grp")
+    // batch 5 deletes key 9, which no live row holds
+    val source = Seq((9L, "c", 0.0, true)).toDF("id", "grp", "value", "_d")
+    assert(Manifest.mergeBatch(spark, dir, "grp", source, Seq("id"),
+      batchId = 5L, deleteCol = "_d"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(Manifest.committedBatches(dir, conf).contains(5L),
+      "an empty merge batch must still record its stamp")
+    assert(Manifest.history(spark, dir).filter($"op" === "merge-noop")
+      .count() === 1L)
+    Manifest.append(Seq((9L, "c", 90.0)).toDF("id", "grp", "value"),
+      dir, "grp")
+    assert(!Manifest.mergeBatch(spark, dir, "grp", source, Seq("id"),
+      batchId = 5L, deleteCol = "_d"), "redelivered batch 5 applied")
+    assert(Manifest.read(spark, dir).filter($"id" === 9L).count() === 1L,
+      "a replayed empty merge batch deleted a row the original " +
+        "delivery never touched")
+    // an unstamped merge with nothing to do still commits nothing
+    val v = Manifest.latestVersion(dir, conf)
+    assert(Manifest.merge(spark, dir, "grp",
+      Seq((10L, "c", 0.0, true)).toDF("id", "grp", "value", "_d"),
+      Seq("id"), deleteCol = "_d") === v)
+    assert(Manifest.latestVersion(dir, conf) === v)
+  }
+
   test("distinct sketch: exact below k, answered from the manifest " +
       "alone, loud when stale, convergent refresh, k persisted") {
     val dir = mkdir()
@@ -1410,61 +1438,24 @@ class ManifestSpec extends SparkSpec {
 
   test("the driver census regime launches zero Spark jobs: restore, " +
       "changedPartitions, a no-op autoCompact and approxDistinct") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicLong()
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-            Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("zero-jobs-sentinel")) match {
-          case Some(tag) => seen.add(tag)
-          case None => jobs.incrementAndGet()
-        }
-    }
-    // the listener bus delivers in order: once a tagged sentinel job's
-    // start is seen, every job launched before it has been counted
-    var sentinels = 0
-    def drain(): Unit = {
-      sentinels += 1
-      val tag = s"zero-jobs-sentinel-$sentinels"
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(tag) && System.nanoTime() < deadline)
-        Thread.sleep(10L)
-      assert(seen.contains(tag), s"listener never saw $tag")
-    }
-    def jobsDuring(body: => Any): Long = {
-      drain()
-      val before = jobs.get()
-      body
-      drain()
-      jobs.get() - before
-    }
     val dir = mkdir()
     Manifest.create(fixture, dir, "grp")
     Manifest.append(fixture.filter($"id" === 1L)
       .withColumn("id", lit(11L)), dir, "grp")
     assert(Manifest.addDistinctSketch(spark, dir, "id", k = 16))
-    val conf = sc.hadoopConfiguration
-    sc.addSparkListener(listener)
-    try {
-      // the counter is live: a real query registers
-      assert(jobsDuring(spark.range(3).count()) >= 1L)
-      assert(jobsDuring(Manifest.restore(spark, dir, 3)) === 0L,
-        "restore of a small layout launched Spark jobs")
-      val v = Manifest.latestVersion(dir, conf)
-      assert(jobsDuring(assert(Manifest.changedPartitions(spark, dir, 1, v,
-        conf) === Set("a"))) === 0L,
-        "changedPartitions of a small layout launched Spark jobs")
-      assert(jobsDuring(assert(Manifest.autoCompact(spark, dir, "grp") === 0))
-        === 0L, "a no-op autoCompact of a small layout launched Spark jobs")
-      assert(jobsDuring(assert(Manifest.approxDistinct(spark, dir)._1 === 7.0))
-        === 0L, "approxDistinct of a small layout launched Spark jobs")
-    } finally sc.removeSparkListener(listener)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the counter is live: a real query registers
+    assert(jobsDuring(spark.range(3).count()) >= 1L)
+    assert(jobsDuring(Manifest.restore(spark, dir, 3)) === 0L,
+      "restore of a small layout launched Spark jobs")
+    val v = Manifest.latestVersion(dir, conf)
+    assert(jobsDuring(assert(Manifest.changedPartitions(spark, dir, 1, v,
+      conf) === Set("a"))) === 0L,
+      "changedPartitions of a small layout launched Spark jobs")
+    assert(jobsDuring(assert(Manifest.autoCompact(spark, dir, "grp") === 0))
+      === 0L, "a no-op autoCompact of a small layout launched Spark jobs")
+    assert(jobsDuring(assert(Manifest.approxDistinct(spark, dir)._1 === 7.0))
+      === 0L, "approxDistinct of a small layout launched Spark jobs")
   }
 
   // ---- Header schema tracking (round 18) -----------------------------

@@ -1,20 +1,17 @@
 package graft
 
-import graft.operators.Similarity
-import org.apache.spark.sql.functions._
+import graft.operators.{ChangeData, Similarity}
 
-/** Round-18 purge routing: the Seq[Long] purge overloads compile small
-  * forget-lists into `isInCollection` literals but must route big ones
-  * through the key-relation join (a 2^20-id literal is a multi-MB plan;
-  * the broadcast join ships ids once — guide §3). This suite pins that
-  * the two paths delete exactly the same rows, so the crossover
-  * (`graft.purge.inListMaxIds`) is purely an execution-shape knob.
+/** Purge routing: the Seq[Long] purge overloads compile small
+  * forget-lists into `isInCollection` literals but route lists longer
+  * than `ChangeData.inListMaxIds` through the key-relation join (a
+  * 2^20-id literal is a multi-MB plan; the broadcast join ships ids
+  * once). This suite pins that both paths, and the
+  * key-relation overload called directly, delete exactly the same rows,
+  * so the crossover is purely an execution-shape choice.
   */
 class PurgeRoutingSpec extends SparkSpec {
   import spark.implicits._
-
-  private def mkdir() = java.nio.file.Files
-    .createTempDirectory("graft_purge_routing").toString
 
   private def corpus = (1L to 40L)
     .map(i => (i, Array(math.cos(i * 0.37), math.sin(i * 0.37))))
@@ -22,28 +19,30 @@ class PurgeRoutingSpec extends SparkSpec {
 
   test("purgeIvfLayout(Seq) above the IN-list bound routes through the " +
       "key relation with identical surviving rows") {
-    val key = "graft.purge.inListMaxIds"
-    val prev = spark.conf.get(key, "10000")
     val victims = Seq(3L, 17L, 29L, 40L)
-    val literalDir = mkdir()
-    val routedDir = mkdir()
-    Similarity.writeIvfLayout(corpus, "id", "vec", literalDir,
-      nlist = 2, nassign = 1)
-    Similarity.writeIvfLayout(corpus, "id", "vec", routedDir,
-      nlist = 2, nassign = 1)
+    // the same victims padded with absent ids past the bound
+    val padded = victims ++
+      (1L to ChangeData.inListMaxIds.toLong).map(_ + 1000L)
+    assert(padded.length > ChangeData.inListMaxIds)
+    def build() = {
+      val d = java.nio.file.Files
+        .createTempDirectory("graft_purge_routing").toString
+      Similarity.writeIvfLayout(corpus, "id", "vec", d, nlist = 2,
+        nassign = 1)
+      d
+    }
     def survivors(dir: String): Set[Long] =
       spark.read.parquet(dir).select("neighbor_id").distinct()
         .as[Long].collect().toSet
-    try {
-      spark.conf.set(key, "10000") // literal path (4 <= 10000)
-      Similarity.purgeIvfLayout(spark, literalDir, victims)
-      spark.conf.set(key, "2")     // routed path (4 > 2)
-      Similarity.purgeIvfLayout(spark, routedDir, victims)
-    } finally spark.conf.set(key, prev)
+    val (literalDir, routedDir, keysDir) = (build(), build(), build())
+    Similarity.purgeIvfLayout(spark, literalDir, victims)
+    Similarity.purgeIvfLayout(spark, routedDir, padded)
+    Similarity.purgeIvfLayout(spark, keysDir, victims.toDF("forget_id"))
     val lit = survivors(literalDir)
-    val routed = survivors(routedDir)
-    assert(lit === routed,
+    assert(survivors(routedDir) === lit,
       "routed purge deleted a different row set than the literal purge")
+    assert(survivors(keysDir) === lit,
+      "key-relation purge deleted a different row set than the literal purge")
     assert(victims.forall(v => !lit.contains(v)), "victim survived")
     assert(lit.size === 40 - victims.size, "non-victim rows were lost")
   }

@@ -109,33 +109,6 @@ class RetailPipelineLocalSpec extends SparkSpec {
   }
 
   test("a warm RetailPipeline.run launches at most 39 Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicLong()
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-            Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("job-budget-sentinel")) match {
-          case Some(tag) => seen.add(tag)
-          case None => jobs.incrementAndGet()
-        }
-    }
-    // the listener bus delivers in order: once a tagged sentinel job's
-    // start is seen, every job launched before it has been counted
-    var sentinels = 0
-    def drain(): Unit = {
-      sentinels += 1
-      val tag = s"job-budget-sentinel-$sentinels"
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(tag) && System.nanoTime() < deadline)
-        Thread.sleep(10L)
-      assert(seen.contains(tag), s"listener never saw $tag")
-    }
     // The budget: 3 CSV header reads; per dataset, one QC aggregate
     // (cache, two exchanges, result); 4 for the planted duplicate's dedup
     // cache; 2 broadcasts; and the four observed writes with their
@@ -144,14 +117,7 @@ class RetailPipelineLocalSpec extends SparkSpec {
     def runOnce(): Unit =
       RetailPipeline.run(spark, config()).curated.values.foreach(_.unpersist(blocking = true))
     runOnce() // warm-up
-    sc.addSparkListener(listener)
-    try {
-      drain()
-      val before = jobs.get()
-      runOnce()
-      drain()
-      val n = jobs.get() - before
-      assert(n > 0L && n <= 39L, s"a warm RetailPipeline.run launched $n Spark jobs")
-    } finally sc.removeSparkListener(listener)
+    val n = jobsDuring(runOnce())
+    assert(n > 0L && n <= 39L, s"a warm RetailPipeline.run launched $n Spark jobs")
   }
 }

@@ -18,4 +18,40 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** sf0.001 testdata — tiny, used for end-to-end operator checks. */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. A tagged drain job brackets
+    * it on each side: the listener bus delivers in order, so once a
+    * drain job's start is seen, every job started before it is counted.
+    */
+  def jobsDuring(body: => Any): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-during-drain-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val drains = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.job.description") == tag))
+          drains.incrementAndGet()
+        else jobs.incrementAndGet()
+    }
+    def drain(n: Int): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (drains.get < n && System.nanoTime() < deadline)
+        Thread.sleep(10L)
+      assert(drains.get >= n, s"listener never saw drain job $n")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain(1)
+      val before = jobs.get()
+      body
+      drain(2)
+      jobs.get() - before
+    } finally sc.removeSparkListener(listener)
+  }
 }
