@@ -4,7 +4,7 @@ import graft.operators.Checkpoints.CutOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
-  SparkSession}
+  Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
@@ -105,8 +105,10 @@ object Manifest {
     * stops a routine append from resurrecting merge-on-read-deleted
     * rows, so a verb that changes it says so with `.copy(dv = …)`: a
     * delete appends its delta, `applyDeletes`/`compact`/`clusterZOrder`
-    * fold it to Nil, a branch absolutizes it and a branch merge appends
-    * the branch's own deltas.
+    * fold it to Nil, a merge drops every base delta whose victims all
+    * lie in partitions it rewrote (their files leave the snapshot), a
+    * branch absolutizes it and a branch merge appends the branch's own
+    * deltas.
     *
     * `schema` (round 18) is the snapshot's UNION column schema as
     * `StructType.json` — exactly what a `mergeSchema` read over the
@@ -1073,9 +1075,6 @@ object Manifest {
     val hF = readHeader(dir, from, conf)
     val hT = readHeader(dir, to, conf)
     val dvNew = hT.dv.filterNot(hF.dv.toSet)
-    def readDv(rels: Seq[String]): DataFrame =
-      spark.read.parquet(rels.map(p => dvFilePath(dir, p)): _*)
-        .select(col("__file"), col("__pos"))
     val insSide =
       if (inserted.isEmpty) None
       else Some(readFiles(spark, dir, inserted))
@@ -1084,11 +1083,11 @@ object Manifest {
       else if (hF.dv.isEmpty && dvNew.isEmpty)
         Some(readFiles(spark, dir, removed))
       else Some(byPos(readFiles(spark, dir, removed),
-        readDv(hF.dv ++ dvNew), "left_anti"))
+        readDeltas(spark, dir, hF.dv ++ dvNew), "left_anti"))
     val dvSide =
       if (dvNew.isEmpty) None
       else {
-        val victims = readDv(dvNew)
+        val victims = readDeltas(spark, dir, dvNew)
         // victim-file census (bounded by the snapshot's file count),
         // resolved against every still-present manifest in the window —
         // a victim's file may have been dropped later (overwritten)
@@ -1221,15 +1220,19 @@ object Manifest {
     * and the batch stamp (a racing duplicate `mergeBatch` is a replay).
     * Reads THROUGH the deletion vector (a merge rewrite must not
     * resurrect MOR-deleted rows) and carries the DV forward for
-    * untouched partitions. Duplicate keys in the source
+    * untouched partitions; a base DV delta whose victims all lie in
+    * rewritten partitions names only files the new version drops, so
+    * the merge retires it from the header. Duplicate keys in the source
     * are a loud error — "last writer wins among my own rows" is a
     * silent-corruption generator, not a semantics. Returns the
     * committed version (base version if the merge had nothing to do).
     *
-    * Scale shape: the match census is one keyed join; affected
-    * partitions are a driver census (partition-domain-sized); the
-    * rewrite reads |affected partitions| of stored bytes, never the
-    * table.
+    * Scale shape: ONE census action (the largest per-key source count,
+    * the affected partitions via one keyed join, and each base DV
+    * delta's partitions), whose driver result is partition-domain-
+    * sized; then the rewrite, clustered by the partition column so
+    * each affected partition gets one file. It reads |affected
+    * partitions| of stored bytes, never the table.
     */
   def merge(spark: SparkSession, dir: String, partCol: String,
       source: DataFrame, keyCols: Seq[String],
@@ -1258,24 +1261,42 @@ object Manifest {
     val src = source.withColumn("__del", isDel)
       .withColumn("__sp", col(partCol).cast("string"))
       .cutLineage
-    val dupKeys = src.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-      .limit(1).count()
-    require(dupKeys == 0L,
-      s"merge: source holds duplicate keys on (${keyCols.mkString(", ")}) " +
-        "- deduplicate the source first (ambiguous upserts corrupt silently)")
+    val baseDv = readHeader(dir, base, conf).dv
     val target = readWithDeletes(spark, dir, base).drop("__file", "__pos")
       .withColumn("__tp", col(partCol).cast("string"))
-    val srcKeyed = src.select(
-      keyCols.map(col) :+ col("__sp") :+ col("__del"): _*)
-    // affected partitions: where a matched key lives + where a
-    // non-delete source row lands (driver census, partition-domain)
-    val matchedParts = target
-      .join(srcKeyed.select(keyCols.map(col): _*).distinct(), keyCols)
-      .select(col("__tp")).distinct().collect().map(_.getString(0)).toSet
-    val landingParts = src.filter(!col("__del"))
-      .select(col("__sp")).distinct().collect().map(_.getString(0)).toSet
-    val affected = matchedParts ++ landingParts
+    val keys = src.select(keyCols.map(col): _*).distinct()
+    // ONE census action over narrow relations of (__c, __d, __p): the
+    // per-key source counts; the affected partitions — where a matched
+    // key lives + where a non-delete source row lands; and the
+    // partitions each base DV delta (dir name __d) names in its `__file`
+    // tails (`__p=<v>/<file>`)
+    val nullStr = lit(null).cast("string")
+    val nullLong = lit(null).cast("long")
+    val census = Seq(
+      src.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__c"))
+        .select(col("__c"), nullStr.as("__d"), nullStr.as("__p")),
+      target.join(keys, keyCols)
+        .select(nullLong.as("__c"), nullStr.as("__d"), col("__tp").as("__p")),
+      src.filter(!col("__del"))
+        .select(nullLong.as("__c"), nullStr.as("__d"), col("__sp").as("__p"))) ++
+      Option.when(baseDv.nonEmpty)(readDeltas(spark, dir, baseDv).select(
+        nullLong.as("__c"),
+        element_at(split(col("_metadata.file_path"), "/"), -2).as("__d"),
+        regexp_extract(col("__file"), s"^$PartDir=([^/]*)/", 1).as("__p")))
+    val row = census.reduce(_ unionAll _).agg(max("__c"),
+      collect_set(when(col("__c").isNull, struct(col("__d"), col("__p")))))
+      .head()
+    require(row.isNullAt(0) || row.getLong(0) <= 1L,
+      s"merge: source holds duplicate keys on (${keyCols.mkString(", ")}) " +
+        "- deduplicate the source first (ambiguous upserts corrupt silently)")
+    val (dvRows, affRows) =
+      row.getSeq[Row](1).partition(!_.isNullAt(0))
+    val affected = affRows.map(_.getString(1)).toSet
+    // a base delta is dead when every partition it names is rewritten:
+    // the new version drops all of those partitions' base files
+    val dvParts = dvRows.groupMap(_.getString(0))(_.getString(1))
+    val dead = baseDv.filter(d =>
+      dvParts.getOrElse(new Path(d).getName, Nil).forall(affected)).toSet
     // nothing to rewrite: a stamped batch still commits an entry-less
     // version ("merge-noop", as deleteKeysBatch's "delete-noop"), or a
     // redelivery arriving after later commits land its keys would apply
@@ -1289,24 +1310,27 @@ object Manifest {
     val srcCols = source.columns.filterNot(c =>
       deleteCol != null && c == deleteCol).toSeq
     val keep = target.filter(col("__tp").isInCollection(affected))
-      .join(srcKeyed.select(keyCols.map(col): _*).distinct(), keyCols,
-        "left_anti")
+      .join(keys, keyCols, "left_anti")
       .drop("__tp")
     val incoming = src.filter(!col("__del"))
       .select(srcCols.map(col): _*)
     val next = keep.select(srcCols.map(col): _*).unionByName(incoming)
-      .cutLineage
     // (a partition the merge empties needs no explicit drop: the
     // commit below replaces ALL affected partitions' entries, and an
     // emptied one simply contributes no new files)
     // stage + OCC publish (the commitPrepared protocol, plus the
-    // emptied-partition drop a plain overwrite cannot express)
+    // emptied-partition drop a plain overwrite cannot express); the
+    // rewrite is clustered by partition, one file per affected one
     val entries = writeCommitFiles(
-      next.filter(col(partCol).cast("string").isInCollection(affected)),
+      next.filter(col(partCol).cast("string").isInCollection(affected))
+        .repartition(affected.size, col(partCol)),
       dir, partCol, base + 1, suffix = writerToken())
+    // deltas committed after base survive: publish refuses any that
+    // touch the affected partitions
     publish(spark, dir, "merge", "re-read and re-merge", entries,
         base = base, touched = affected, batch = batchId) { (_, h) =>
       h.next("merge", coveringSchemaJson(h.schema, next.schema), batchId)
+        .copy(dv = h.dv.filterNot(dead))
     }
   }
 
@@ -1323,7 +1347,7 @@ object Manifest {
       dv: Seq[String]): Set[String] =
     if (dv.isEmpty) Set.empty
     else census(spark, Seq(dir -> version)).join(e => tailKey(e.file),
-      Right(spark.read.parquet(dv.map(p => dvFilePath(dir, p)): _*)
+      Right(readDeltas(spark, dir, dv)
         .select("__file").distinct().as(Encoders.STRING)))(_.p).toSet
 
   /** Streaming MERGE (the apply-changes sink): `merge` stamped with the
@@ -2165,6 +2189,18 @@ object Manifest {
   private def dvFilePath(dir: String, rel: String): String =
     if (isAbsolute(rel)) rel else s"$dir/$rel"
 
+  /** The schema `stageDelete` writes every delta with. */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "__file STRING, __pos BIGINT")
+
+  /** THE reader of DV deltas: the rows of the deltas `rels` (header
+    * entries of `dir`). The schema is fixed, so it is passed rather
+    * than inferred — inference is a footer-reading job per read.
+    */
+  private def readDeltas(spark: SparkSession, dir: String,
+      rels: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(rels.map(dvFilePath(dir, _)): _*)
+
   /** The (file, row_index) deletion vector of `version` (empty frame if
     * the version carries none). Duplicate (file, pos) pairs — two
     * racing deletes that both targeted a row live in their shared base
@@ -2177,8 +2213,7 @@ object Manifest {
     val h = readHeader(dir, version,
       spark.sparkContext.hadoopConfiguration)
     if (h.dv.isEmpty) Seq.empty[(String, Long)].toDF("__file", "__pos")
-    else spark.read.parquet(h.dv.map(p => dvFilePath(dir, p)): _*)
-      .select(col("__file"), col("__pos"))
+    else readDeltas(spark, dir, h.dv)
   }
 
   /** A staged-but-unpublished merge-on-read delete: the victim delta is
@@ -2192,7 +2227,8 @@ object Manifest {
     * (rows of the base snapshot matching `victim`, minus rows already
     * deleted) land as ONE immutable (file, pos) delta dir under `_dv/`.
     * Nothing is visible until `commitDelete` publishes a header
-    * referencing the delta.
+    * referencing the delta. Staging is one write: the victim count and
+    * victim-file set are observed inside it, never read back.
     */
   def prepareDelete(spark: SparkSession, dir: String,
       victim: org.apache.spark.sql.Column): PreparedDelete =
@@ -2222,20 +2258,21 @@ object Manifest {
     val token =
       s"w${ProcessHandle.current().pid()}x${System.nanoTime().toHexString}"
     val rel = f"_dv/d${base + 1}%06d-$token"
+    // the count and the victim-file census (bounded by the snapshot's
+    // file count, for the publish-time staleness check) ride the write
+    val written = Observation()
     victims(live)
       .select(col("__file"), col("__pos"))
+      .observe(written, count(lit(1)).as("n"),
+        collect_set(col("__file")).as("files"))
       .write.mode("overwrite").parquet(s"$dir/$rel")
-    val written = spark.read.parquet(s"$dir/$rel")
-    val nNew = written.count()
+    val nNew = written.get("n").asInstanceOf[Long]
     if (nNew == 0L) {
       fs(dir, conf).delete(new Path(s"$dir/$rel"), true)
       return PreparedDelete(base, null, Set.empty, 0L)
     }
-    // file census (bounded by the snapshot's file count) for the
-    // publish-time staleness check
-    val victimFiles = written.select("__file").distinct()
-      .collect().map(_.getString(0)).toSet
-    PreparedDelete(base, rel, victimFiles, nNew)
+    PreparedDelete(base, rel,
+      written.get("files").asInstanceOf[collection.Seq[String]].toSet, nNew)
   }
 
   /** Publish a prepared delete under the same snapshot-isolation OCC as

@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reports a broken invariant through `GateOps.refereed`; a one-row
   * relation filtered on a driver flag, or a probe's first row selected
   * as literals, is how about seventy hand-typed copies of that row grew
-  * across the battery.
+  * across the battery. And DV deltas are read only through
+  * `Manifest.readDeltas`, which passes their fixed schema; a bare
+  * parquet read of a delta infers it in a footer job every time.
   */
 class CensusGuardSpec extends AnyFunSuite {
 
@@ -45,6 +47,23 @@ class CensusGuardSpec extends AnyFunSuite {
   private val refereeRow =
     raw"range\(1\)\s*\.filter\(lit\(|\.limit\(1\)\s*\.select\(lit\(".r
 
+  /** A `….read….parquet(` call: its argument list is scanned for a DV
+    * path (`dvFilePath`, `_dv/`).
+    */
+  private val parquetRead = raw"\.read\b[\w.()\s\",]*?\.parquet\(".r
+
+  /** Offsets in `text` of parquet reads whose argument names a DV path. */
+  private def dvReads(text: String): Seq[Int] =
+    parquetRead.findAllMatchIn(text).toSeq.filter { m =>
+      var (depth, i) = (1, m.end)
+      while (i < text.length && depth > 0) {
+        if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+        i += 1
+      }
+      val args = text.substring(m.end, i)
+      args.contains("dvFilePath") || args.contains("_dv/")
+    }.map(_.start)
+
   private val sources = Files.walk(Paths.get("src/main/scala")).iterator()
     .asScala.filter(_.toString.endsWith(".scala")).toSeq
 
@@ -57,6 +76,11 @@ class CensusGuardSpec extends AnyFunSuite {
       if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
       else line.replaceAll("//.*$", "")
     }
+
+  /** The enclosing member of each line of `path`. */
+  private def owners(path: Path): Seq[String] =
+    Files.readAllLines(path).asScala.toSeq.scanLeft("")((o, line) =>
+      memberRe.findFirstMatchIn(line).fold(o)(_.group(1))).tail
 
   /** `pattern`'s hits in the code of `path` as (enclosing member,
     * location).
@@ -113,5 +137,28 @@ class CensusGuardSpec extends AnyFunSuite {
         "as `GateOps.refereed(out, label)(flag(name, cond | probe))`, " +
         "which types the row from the gate's own schema:\n" +
         offences.mkString("\n"))
+  }
+
+  test("src/main reads DV deltas only in Manifest.readDeltas") {
+    assert(dvReads("spark.read.parquet(h.dv.map(p => dvFilePath(dir, p)): _*)")
+      .nonEmpty && dvReads("spark.read.option(\"a\", \"b\")\n" +
+      "  .parquet(s\"$dir/_dv/d1\")").nonEmpty &&
+      dvReads("spark.read.parquet(files.map(filePath(dir, _)): _*)").isEmpty,
+      "the DV-read pattern no longer matches its idioms")
+    val found = sources.flatMap { p =>
+      val (text, own) = (code(p).mkString("\n"), owners(p))
+      dvReads(text).map { i =>
+        val line = text.take(i).count(_ == '\n')
+        (p == manifest && own(line) == "readDeltas",
+          s"$p:${line + 1} (in ${own(line)})")
+      }
+    }
+    assert(found.exists(_._1), "Manifest.readDeltas no longer reads DV " +
+      "deltas - this guard would watch nothing; update its pattern")
+    val offences = found.collect { case (false, at) => at }
+    assert(offences.isEmpty,
+      "a DV delta read outside Manifest.readDeltas — read deltas through " +
+        "it, which passes their fixed schema instead of inferring one " +
+        "(a footer job per read):\n" + offences.mkString("\n"))
   }
 }

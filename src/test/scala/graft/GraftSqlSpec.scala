@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
 class GraftSqlSpec extends SparkSpec {
   import spark.implicits._
 
-  private def mkdir() =
-    java.nio.file.Files.createTempDirectory("graft_sql_spec").toString
+  private def mkdir() = tempDir("graft_sql_spec")
 
   private def fixture = Seq(
     (1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0),

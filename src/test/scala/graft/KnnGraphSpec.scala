@@ -71,7 +71,7 @@ class KnnGraphSpec extends SparkSpec {
   }
 
   test("layout round-trip: lookup equals in-flight build and runtime-prunes graph partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_rt").toString
+    val dir = tempDir("graft_knn_rt")
     val e = emb
     KnnGraph.writeKnnGraphLayout(e, "vec_id", "embedding", dir, k = 3,
       nlist = 8, nassign = 2, rounds = 0, nparts = 8)
@@ -111,8 +111,7 @@ class KnnGraphSpec extends SparkSpec {
 
   test("knnNeighborsFromLayout: broadcast and shuffle id paths return " +
       "identical neighbor sets") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_knn_paths").toString
+    val dir = tempDir("graft_knn_paths")
     val e = emb
     KnnGraph.writeKnnGraphLayout(e, "vec_id", "embedding", dir, k = 3,
       nlist = 8, nassign = 2, rounds = 0, nparts = 8)
@@ -131,8 +130,7 @@ class KnnGraphSpec extends SparkSpec {
   test("purgeKnnGraphLayout: victims vanish from vectors and BOTH edge " +
       "ends; surviving lookups equal the victim-filtered graph; " +
       "untouched partitions bit-identical") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_knn_purge").toString
+    val dir = tempDir("graft_knn_purge")
     val e = emb
     val nparts = 8
     KnnGraph.writeKnnGraphLayout(e, "vec_id", "embedding", dir, k = 3,
@@ -193,8 +191,7 @@ class KnnGraphSpec extends SparkSpec {
       "id-list path on both substores") {
     val e = emb
     def build() = {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_knn_purge_eq").toString
+      val d = tempDir("graft_knn_purge_eq")
       KnnGraph.writeKnnGraphLayout(e, "vec_id", "embedding", d, k = 3,
         nlist = 8, nassign = 2, rounds = 0, nparts = 4)
       d
@@ -212,7 +209,7 @@ class KnnGraphSpec extends SparkSpec {
   }
 
   test("appendKnnGraphLayout equals a from-scratch union build under the frozen model") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_app").toString
+    val dir = tempDir("graft_knn_app")
     val e = emb
     val base = e.filter(col("vec_id") % 4 =!= 0)
     val extra = e.filter(col("vec_id") % 4 === 0)
@@ -235,7 +232,7 @@ class KnnGraphSpec extends SparkSpec {
     // one centroid owns ~all vectors: near-identical embeddings force a
     // fat bucket, so the append join MUST salt (maxBucketRows tiny) —
     // and salting is pure re-partitioning, so the result is bit-equal
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_hot").toString
+    val dir = tempDir("graft_knn_hot")
     val e = Tables.load(spark, sfDir, "embeddings").limit(60)
       .select(col("vec_id"),
         // collapse toward one direction: a dominant shared first
@@ -268,7 +265,7 @@ class KnnGraphSpec extends SparkSpec {
 
   test("searchFromLayout broadcast and shuffle query paths return " +
       "identical rankings") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_bc").toString
+    val dir = tempDir("graft_knn_bc")
     val e = emb
     KnnGraph.writeKnnGraphLayout(e, "vec_id", "embedding", dir, k = 3,
       nlist = 8, nassign = 2, rounds = 0, nparts = 4)
@@ -283,7 +280,7 @@ class KnnGraphSpec extends SparkSpec {
   }
 
   test("searchFromLayout with full probe and ef >= N degenerates to exact brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_sr").toString
+    val dir = tempDir("graft_knn_sr")
     val e = emb
     val n = e.count().toInt
     KnnGraph.writeKnnGraphLayout(e, "vec_id", "embedding", dir, k = 3,
@@ -302,7 +299,7 @@ class KnnGraphSpec extends SparkSpec {
     // neighbors; walking the stored lists must win some back and can
     // never lose one (superset-top-ef law — the q318 gate's theorem,
     // proven non-vacuous here)
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_sh").toString
+    val dir = tempDir("graft_knn_sh")
     val e = emb
     KnnGraph.writeKnnGraphLayout(e, "vec_id", "embedding", dir, k = 5,
       nlist = 16, nassign = 2, rounds = 0, nparts = 4)
@@ -331,7 +328,7 @@ class KnnGraphSpec extends SparkSpec {
   }
 
   test("readMeta fails loudly on a directory that is not a knn layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_bad").toString
+    val dir = tempDir("graft_knn_bad")
     val err = intercept[IllegalArgumentException] {
       KnnGraph.knnNeighborsFromLayout(dir, emb.select("vec_id"), "vec_id")
     }

@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
 class ManifestConcurrencySpec extends SparkSpec {
   import spark.implicits._
 
-  private def mkdir() =
-    java.nio.file.Files.createTempDirectory("graft_manifest_conc").toString
+  private def mkdir() = tempDir("graft_manifest_conc")
 
   private def race(work: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()

@@ -29,8 +29,7 @@ class ManifestLifecycleSpec extends SparkSpec {
       .select($"id", $"grp", $"value").as[Row3].collect().toSet
 
   private def runLifecycle(seed: Long, steps: Int): Unit = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_manifest_model_$seed").toString
+    val dir = tempDir(s"graft_manifest_model_$seed")
     val rng = new scala.util.Random(seed)
     var nextId = 0L
     def freshRows(n: Int, grp: Option[String] = None): Seq[Row3] =

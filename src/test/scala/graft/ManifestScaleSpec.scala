@@ -18,7 +18,7 @@ class ManifestScaleSpec extends SparkSpec {
   private def cfsDir(): (String, java.nio.file.Path) = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.cfs.impl", classOf[CountingFileSystem].getName)
-    val local = java.nio.file.Files.createTempDirectory("graft_scale_spec")
+    val local = java.nio.file.Paths.get(tempDir("graft_scale_spec"))
     (s"cfs:$local", local)
   }
 
@@ -102,8 +102,7 @@ class ManifestScaleSpec extends SparkSpec {
 
   test("index builds above the census threshold batch their todo list " +
       "per pass; partial states stay safe; repeated passes converge") {
-    val dir =
-      java.nio.file.Files.createTempDirectory("graft_scale_idx").toString
+    val dir = tempDir("graft_scale_idx")
     // 3 partitions × up to 3 tasks each: enough files that a batch cap
     // of 2 forces several passes
     Manifest.create(fixture.repartition(3), dir, "grp")
@@ -269,10 +268,8 @@ class ManifestScaleSpec extends SparkSpec {
       Manifest.entriesRelation(spark, dir)
         .groupBy("p").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val noneDir = java.nio.file.Files
-      .createTempDirectory("graft_dist_none").toString
-    val hashDir = java.nio.file.Files
-      .createTempDirectory("graft_dist_hash").toString
+    val noneDir = tempDir("graft_dist_none")
+    val hashDir = tempDir("graft_dist_hash")
     val key = "graft.manifest.distributionMode"
     val prev = spark.conf.get(key, "none")
     try {

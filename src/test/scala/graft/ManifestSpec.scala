@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
 class ManifestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def mkdir() =
-    java.nio.file.Files.createTempDirectory("graft_manifest_spec").toString
+  private def mkdir() = tempDir("graft_manifest_spec")
 
   private def fixture = Seq(
     (1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0),
@@ -1651,5 +1650,110 @@ class ManifestSpec extends SparkSpec {
     assert(b.op === "branch-create" && b.batch === -1L && b.bloomK === 3 &&
       b.kmvK === 16 && b.dv === src.dv.map(p => s"$dir/$p"),
       s"branch-create: header $b over source $src")
+  }
+
+  // ---- Commit costs: one-write deletes, one-census merges -------------
+
+  /** 60 rows over grp 0/1/2, written by 4 tasks: every partition starts
+    * with 4 files, and ids 0 and 1 live in grp 0 and grp 1.
+    */
+  private def spread = spark.range(60).repartition(4)
+    .select($"id", ($"id" % 3).cast("string").as("grp"),
+      ($"id" * 10).cast("double").as("value"))
+
+  private def rowsAt(dir: String, v: Int) =
+    Manifest.readWithDeletes(spark, dir, v)
+      .select("id", "grp", "value").as[(Long, String, Double)].collect().toSeq
+
+  test("deleteRows on a layout with a live DV stages its delta in one " +
+      "write; a delete that matches nothing stages nothing") {
+    val dir = mkdir()
+    Manifest.create(spread, dir, "grp")
+    assert(Manifest.deleteRows(spark, dir, $"id" === 3L) === 1L)
+    var n = -1L
+    val jobs = jobsDuring { n = Manifest.deleteRows(spark, dir, $"id" === 6L) }
+    assert(n === 1L)
+    // the live DV's broadcast and the write that observes the census
+    assert(jobs === 2L, s"deleteRows launched $jobs Spark jobs")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dvs = new java.io.File(s"$dir/_dv").list().toSet
+    val v = Manifest.latestVersion(dir, conf)
+    assert(Manifest.deleteRows(spark, dir, $"id" === 999L) === 0L)
+    assert(Manifest.latestVersion(dir, conf) === v &&
+      new java.io.File(s"$dir/_dv").list().toSet === dvs,
+      "a no-match delete published or left a staged delta")
+    val prep = Manifest.prepareDelete(spark, dir, $"grp" === "0")
+    assert(prep.nNew === 18L && prep.victimFiles.size === 4 &&
+      prep.victimFiles.forall(_.startsWith("__p=0/")),
+      s"observed victim census $prep")
+  }
+
+  test("merge runs one census action and writes one file per affected " +
+      "partition over a base written by several tasks") {
+    val dir = mkdir()
+    Manifest.create(spread, dir, "grp")
+    assert(Manifest.deleteRows(spark, dir, $"id" === 30L) === 1L)
+    val source = Seq((0L, "0", 1.0), (1L, "1", 2.0), (100L, "1", 3.0))
+      .toDF("id", "grp", "value")
+    var v = 0
+    val jobs = jobsDuring {
+      v = Manifest.merge(spark, dir, "grp", source, Seq("id"))
+    }
+    // the source cut, the census action's stages and the clustered write
+    assert(jobs === 12L, s"merge launched $jobs Spark jobs")
+    def files(p: String) =
+      manifestFiles(dir, v).count(_.contains(s"/__p=$p/"))
+    assert(files("0") === 1 && files("1") === 1,
+      s"merge wrote ${files("0")} / ${files("1")} files into grp 0 / 1")
+    assert(files("2") === 4, "fixture bug: grp 2 should keep its 4 files")
+    val expected = spread.as[(Long, String, Double)].collect().toSeq
+      .filterNot(r => Set(0L, 1L, 30L)(r._1)) ++
+      Seq((0L, "0", 1.0), (1L, "1", 2.0), (100L, "1", 3.0))
+    assert(rowsAt(dir, v).sortBy(_._1) === expected.sortBy(_._1))
+  }
+
+  test("a merge retires exactly the base DV deltas whose partitions it " +
+      "rewrote; reads and the change feed match a replayed model") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    for ((victim, retired) <- Seq((1L, true), (3L, false))) {
+      val dir = mkdir()
+      Manifest.create(fixture, dir, "grp") // a: 1, 2  b: 3, 4  c: 5, 6
+      assert(Manifest.deleteRows(spark, dir, $"id" === victim) === 1L)
+      val vd = Manifest.latestVersion(dir, conf)
+      val dv = Manifest.readHeader(dir, vd, conf).dv
+      // rewrites grp a only
+      val vm = Manifest.merge(spark, dir, "grp",
+        Seq((2L, "a", 22.0)).toDF("id", "grp", "value"), Seq("id"))
+      assert(Manifest.readHeader(dir, vm, conf).dv ===
+        (if (retired) Nil else dv), s"delete of id $victim")
+      val model = fixture.as[(Long, String, Double)].collect().toSeq
+        .filterNot(r => r._1 == victim || r._1 == 2L) :+ ((2L, "a", 22.0))
+      assert(rowsAt(dir, vm).sortBy(_._1) === model.sortBy(_._1))
+      val feed = Manifest.changesBetween(spark, dir, vd, vm)
+        .select("_change", "id", "grp", "value")
+        .as[(String, Long, String, Double)].collect().toSeq
+      def side(kind: String) = feed.filter(_._1 == kind)
+        .map(r => (r._2, r._3, r._4))
+      val replayed = (rowsAt(dir, vd) diff side("delete")) ++ side("insert")
+      assert(replayed.sortBy(_._1) === model.sortBy(_._1),
+        s"delete of id $victim: feed $feed")
+    }
+  }
+
+  test("a duplicate-key merge fails before staging a file") {
+    val dir = mkdir()
+    Manifest.create(fixture, dir, "grp")
+    def staged = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "data"))
+        .iterator().asScala.map(_.toString).toSet
+    }
+    val before = staged
+    val dup = Seq((1L, "a", 1.0), (1L, "b", 2.0)).toDF("id", "grp", "value")
+    val e = intercept[IllegalArgumentException] {
+      Manifest.merge(spark, dir, "grp", dup, Seq("id"))
+    }
+    assert(e.getMessage.contains("duplicate keys"))
+    assert(staged === before, "the failed merge left files under data/")
   }
 }

@@ -16,6 +16,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp dir named `prefix…`; its tree is deleted after the
+    * suite, so suite runs leave nothing behind.
+    */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
+
   /** sf0.001 testdata — tiny, used for end-to-end operator checks. */
   val sfDir = "/root/testdata/sf0.001"
 
