@@ -687,7 +687,12 @@ object Manifest {
     // output (the shuffle is the price; AQE sizes it). Parameterized,
     // not local-tuned: the default keeps commits byte-identical to the
     // pre-round layout, ManifestScaleSpec pins the hash mode's file
-    // bound on a many-task fixture.
+    // bound on a many-task fixture. Under `none` the rewrites that lay
+    // out their own files keep that layout: `merge` rebalances by
+    // partition, `autoCompact` runs one task per hot partition, and
+    // `compact` / `clusterZOrder` write their requested files per
+    // partition; `hash` re-clusters every frame written here, theirs
+    // included.
     val clustered =
       spark.conf.get("graft.manifest.distributionMode", "none") match {
         case "none" => df
@@ -730,7 +735,6 @@ object Manifest {
           .toMap
       }
     val f = fs(dir, conf)
-    val PartSeg = s"$PartDir=(.+)".r
     f.listStatus(new Path(s"$dir/$commitRel")).toSeq
       .filter(_.isDirectory).flatMap { d =>
         val p = d.getPath.getName match {
@@ -763,6 +767,15 @@ object Manifest {
     val j = uri.lastIndexOf('/', i - 1)
     uri.substring(j + 1)
   }
+
+  /** `__p=<v>`, the commit subdir of partition value v (group 1). */
+  private val PartSeg = s"$PartDir=([^/]+)".r
+
+  /** The partition value of a file-tail column (`__p=<v>/<file>`, as
+    * `tailKey` and `metaTail` give it).
+    */
+  private def tailPartition(tail: Column): Column =
+    regexp_extract(tail, s"^${PartSeg.regex}/", 1)
 
   /** Create a new manifested layout (v1). Loud if one already exists.
     * `statsCol` (optional, a long-castable column) turns on per-file
@@ -1230,8 +1243,9 @@ object Manifest {
     * Scale shape: ONE census action (the largest per-key source count,
     * the affected partitions via one keyed join, and each base DV
     * delta's partitions), whose driver result is partition-domain-
-    * sized; then the rewrite, clustered by the partition column so
-    * each affected partition gets one file. It reads |affected
+    * sized; then the rewrite, rebalanced by the partition column so an
+    * affected partition below AQE's advisory partition size gets one
+    * file and a larger one keeps parallel writers. It reads |affected
     * partitions| of stored bytes, never the table.
     */
   def merge(spark: SparkSession, dir: String, partCol: String,
@@ -1281,8 +1295,8 @@ object Manifest {
         .select(nullLong.as("__c"), nullStr.as("__d"), col("__sp").as("__p"))) ++
       Option.when(baseDv.nonEmpty)(readDeltas(spark, dir, baseDv).select(
         nullLong.as("__c"),
-        element_at(split(col("_metadata.file_path"), "/"), -2).as("__d"),
-        regexp_extract(col("__file"), s"^$PartDir=([^/]*)/", 1).as("__p")))
+        substring_index(metaTail, "/", 1).as("__d"),
+        tailPartition(col("__file")).as("__p")))
     val row = census.reduce(_ unionAll _).agg(max("__c"),
       collect_set(when(col("__c").isNull, struct(col("__d"), col("__p")))))
       .head()
@@ -1319,11 +1333,15 @@ object Manifest {
     // commit below replaces ALL affected partitions' entries, and an
     // emptied one simply contributes no new files)
     // stage + OCC publish (the commitPrepared protocol, plus the
-    // emptied-partition drop a plain overwrite cannot express); the
-    // rewrite is clustered by partition, one file per affected one
+    // emptied-partition drop a plain overwrite cannot express). The
+    // rewrite is rebalanced by partition: AQE sizes its writers from the
+    // shuffle's own byte counts, so a partition below the advisory size
+    // (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) is one task
+    // and one file, a larger one splits across parallel writers, and
+    // small ones share tasks. Without AQE it is one task per partition.
     val entries = writeCommitFiles(
       next.filter(col(partCol).cast("string").isInCollection(affected))
-        .repartition(affected.size, col(partCol)),
+        .hint("rebalance", col(partCol)),
       dir, partCol, base + 1, suffix = writerToken())
     // deltas committed after base survive: publish refuses any that
     // touch the affected partitions

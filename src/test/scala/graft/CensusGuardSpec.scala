@@ -85,15 +85,13 @@ class CensusGuardSpec extends AnyFunSuite {
   /** `pattern`'s hits in the code of `path` as (enclosing member,
     * location).
     */
-  private def hits(path: Path, pattern: Regex): Seq[(String, String)] = {
-    var owner = ""
-    Files.readAllLines(path).asScala.toSeq.zip(code(path)).zipWithIndex
-      .flatMap { case ((line, c), i) =>
-        memberRe.findFirstMatchIn(line).foreach(m => owner = m.group(1))
+  private def hits(path: Path, pattern: Regex): Seq[(String, String)] =
+    Files.readAllLines(path).asScala.toSeq.zip(code(path))
+      .zip(owners(path)).zipWithIndex
+      .flatMap { case (((line, c), owner), i) =>
         pattern.findFirstIn(c)
           .map(_ => owner -> s"$path:${i + 1} (in $owner): ${line.trim}")
       }
-  }
 
   test("Manifest reads entries only in census, vacuum and indexPass") {
     val offences = hits(manifest, call).collect {

@@ -1699,7 +1699,7 @@ class ManifestSpec extends SparkSpec {
     val jobs = jobsDuring {
       v = Manifest.merge(spark, dir, "grp", source, Seq("id"))
     }
-    // the source cut, the census action's stages and the clustered write
+    // the source cut, the census action's stages and the rebalanced write
     assert(jobs === 12L, s"merge launched $jobs Spark jobs")
     def files(p: String) =
       manifestFiles(dir, v).count(_.contains(s"/__p=$p/"))
@@ -1710,6 +1710,29 @@ class ManifestSpec extends SparkSpec {
       .filterNot(r => Set(0L, 1L, 30L)(r._1)) ++
       Seq((0L, "0", 1.0), (1L, "1", 2.0), (100L, "1", 3.0))
     assert(rowsAt(dir, v).sortBy(_._1) === expected.sortBy(_._1))
+  }
+
+  test("a merge writes a partition above AQE's advisory size with " +
+      "parallel writers and a partition below it as one file") {
+    val dir = mkdir()
+    // grp big: 20,000 rows in 4 files; grp small: 20 rows
+    Manifest.create(spark.range(20020).repartition(4).select($"id",
+      when($"id" < 20000L, "big").otherwise("small").as("grp"),
+      ($"id" * 10).cast("double").as("value")), dir, "grp")
+    val row = Seq((0L, "big", 1.0), (20000L, "small", 2.0))
+    // at a 16 KB advisory size grp big is a large partition, as a
+    // multi-GB one is at the 64 MB default
+    val v = Scoped.withConf(spark,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB") { s =>
+      Manifest.merge(s, dir, "grp",
+        s.createDataFrame(row).toDF("id", "grp", "value"), Seq("id"))
+    }
+    def files(p: String) =
+      manifestFiles(dir, v).count(_.contains(s"/__p=$p/"))
+    assert(files("big") > 1 && files("small") === 1,
+      s"merge wrote ${files("big")} / ${files("small")} files into big / small")
+    val rows = rowsAt(dir, v)
+    assert(rows.size === 20020 && row.forall(rows.contains))
   }
 
   test("a merge retires exactly the base DV deltas whose partitions it " +
